@@ -10,10 +10,12 @@ here goes through Hadoop FS.
 Stage semantics preserved:
 - E1 provider->raw: watermark window -> partition-parallel fetch ->
   raw JSON zone -> watermark upsert.
-- E2 raw->table: incremental file scan (modifiedAfter) -> transform ->
-  idempotent merge -> watermark = max(file mtime); merge + watermark
-  are crash-safe/replayable instead of transactional (D1 makes
-  replays no-ops).
+- E2 raw->table: incremental file scan (modifiedAfter, exact to the
+  microsecond) -> transform -> idempotent merge -> watermark = max
+  mtime of the files older than the millisecond the scan listed in
+  (the boundary rule in sources/files.py); merge + watermark are
+  crash-safe/replayable instead of transactional (D1 makes replays
+  no-ops). A caught-up stage runs no Spark job.
 - E3 windowed orchestration with the J4 dependency gates.
 """
 
@@ -30,7 +32,7 @@ from pyspark.sql import types as T
 from cardano_spark import schemas
 from cardano_spark.pipelines import transforms
 from cardano_spark.sinks.merge import ParquetMergeSink
-from cardano_spark.sources.files import max_modified, read_json_zone
+from cardano_spark.sources.files import max_modified, read_json_zone, scan_cutoff
 from cardano_spark.sources.http_fetch import fetch_json_map, heights_range
 from cardano_spark.watermark import (
     dependency_gate,
@@ -248,18 +250,26 @@ def _load_zone(
     target tables -> advance the file watermark. A replayed batch
     merges to zero new rows, so a crash between merge and watermark
     upsert costs one harmless re-merge (the reference needed a DB
-    transaction for the same guarantee)."""
+    transaction for the same guarantee).
+
+    The scan's listing decides the batch and runs on the driver, so an
+    empty batch is seen without a Spark job. The watermark advances
+    only to files older than the millisecond the scan listed in; files
+    from that millisecond are read again next time (the boundary rule
+    in sources/files.py). Returns the new watermark, the unchanged one
+    when no file was old enough, or None when nothing was read."""
     from pyspark.sql import Observation
 
     wm = lake.s3_db_wm.read_latest(wm_name)
     path = os.path.join(lake.raw_zone(zone), "*")
+    cutoff = scan_cutoff()
     raw = read_json_zone(lake.spark, path, raw_schema, modified_after=wm)
-    if raw.isEmpty():
+    if not raw.inputFiles():
         return None
     raw = raw.cache()
     counts: dict[str, int] = {}
     try:
-        new_wm = max_modified(raw)
+        new_wm = max_modified(raw.where(F.col("_modified") < F.lit(cutoff)))
         for table, df in build_tables(raw.drop("_modified")).items():
             # A5 (transform_cardano_tx_utxo_dto_to_df.py:93-96 logs
             # per-table row counts): df.observe rides the merge's own
@@ -272,8 +282,9 @@ def _load_zone(
     finally:
         raw.unpersist()
     lake.last_load_counts = counts
-    if new_wm is not None:
-        lake.s3_db_wm.upsert(wm_name, new_wm)
+    if new_wm is None:
+        return wm
+    lake.s3_db_wm.upsert(wm_name, new_wm)
     return new_wm
 
 

@@ -7,11 +7,23 @@ the incremental scan is one reader option — the listing, the filter,
 and the download all stay inside the data source. ``_metadata`` gives
 the per-file modification time back for the new-watermark aggregate
 (A3) without a second listing.
+
+Boundary rule. ``modifiedAfter`` is passed with microseconds and keeps
+files strictly newer than the watermark, so a file whose mtime equals
+the watermark is never read again. That is safe only if every file
+with that mtime was in the scan that set the watermark. A file can
+still land in the very millisecond the scan lists (mtimes have
+millisecond resolution) and be missed, so the new watermark only
+advances to files strictly older than that millisecond
+(:func:`scan_cutoff`). A file from the listing millisecond is read
+again by the next scan, which the idempotent merge makes harmless.
+Writers that overlap the scan (a committer renaming files written
+earlier) are not covered: the zone has one writer at a time.
 """
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,8 +31,17 @@ from pyspark.sql import types as T
 
 
 def _fmt(ts: datetime) -> str:
-    # Spark's modifiedAfter wants `YYYY-MM-DDTHH:mm:ss` (UTC session tz)
-    return ts.strftime("%Y-%m-%dT%H:%M:%S")
+    # Spark's modifiedAfter, in the UTC session tz; without the fraction
+    # the cut falls back to the whole second and re-reads its files
+    return ts.strftime("%Y-%m-%dT%H:%M:%S.%f")
+
+
+def scan_cutoff() -> datetime:
+    """Start of the current millisecond, naive UTC. Take it just
+    before a zone scan lists; only files older than it may advance the
+    watermark (the boundary rule above)."""
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    return now - timedelta(microseconds=now.microsecond % 1000)
 
 
 def read_json_zone(
@@ -36,22 +57,6 @@ def read_json_zone(
     if modified_after is not None:
         reader = reader.option("modifiedAfter", _fmt(modified_after))
     df = reader.json(path)
-    return df.select("*", F.col("_metadata.file_modification_time").alias("_modified"))
-
-
-def read_csv_zone(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    modified_after: datetime | None = None,
-) -> DataFrame:
-    """Transformed-zone CSV scan (S11). Header + declared schema; the
-    reference's BOM/ctrl-char header sanitization (C6) is unnecessary
-    because we write the zone ourselves with clean headers."""
-    reader = spark.read.schema(schema).option("header", "true")
-    if modified_after is not None:
-        reader = reader.option("modifiedAfter", _fmt(modified_after))
-    df = reader.csv(path)
     return df.select("*", F.col("_metadata.file_modification_time").alias("_modified"))
 
 
@@ -96,6 +101,7 @@ def cast_to_schema(
 
 def max_modified(df: DataFrame) -> datetime | None:
     """New watermark = max file mtime in the batch (A3,
-    s3_to_db_cardano_blocks_pipeline.py:84-87)."""
+    s3_to_db_cardano_blocks_pipeline.py:84-87). Filter ``df`` to
+    ``_modified < scan_cutoff()`` first (the boundary rule above)."""
     row = df.agg(F.max("_modified").alias("m")).collect()[0]
     return row["m"]

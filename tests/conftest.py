@@ -36,3 +36,34 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMALL}/{t}.parquet')"
         )
     yield con
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), Spark jobs fn ran)``, counted by job
+    group. The status store is fed asynchronously, in event order, so
+    a sentinel job in a second group is awaited first: once it shows,
+    every job ``fn`` ran has been recorded."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"counted-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            result = fn()
+        finally:
+            sc.setJobGroup(f"{group}-sentinel", "sentinel")
+            sc.parallelize([0], 1).count()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tracker = sc.statusTracker()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(f"{group}-sentinel"):
+            assert time.time() < deadline, "sentinel job never recorded"
+            time.sleep(0.05)
+        return result, len(tracker.getJobIdsForGroup(group))
+
+    return run

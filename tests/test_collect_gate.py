@@ -31,7 +31,6 @@ ALLOWED: dict[tuple[str, str], str] = {
         "or the 16Ki-word Bloom filter"
     ),
     ("sources/files.py", ".collect()[0]"): "1-row max(_modified) watermark",
-    ("watermark.py", ".collect()[0]"): "1-row watermark read",
     ("streaming/jobs.py", ".collect()"): (
         "_arrival_cuts: <= n_arrival_files order-statistic scalars via "
         "global_rank + 1-row max"

@@ -3,6 +3,10 @@ E3 windowed full pipeline — against the deterministic fake transport."""
 
 from __future__ import annotations
 
+import os
+import time
+from datetime import datetime, timedelta
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -47,6 +51,56 @@ def test_blocks_end_to_end(lake):
     cardano.raw_blocks_to_table(lake)
     total = lake.sink("cardano_blocks").read().count()
     assert total == 2 * BATCH
+
+
+def _set_mtime(directory: str, ms: int) -> None:
+    for name in os.listdir(directory):
+        os.utime(os.path.join(directory, name), ns=(ms * 1_000_000, ms * 1_000_000))
+
+
+def test_e2_boundary_listing_millisecond(lake, monkeypatch):
+    """A file landing in the millisecond the E2 scan lists in, after
+    the listing, has the mtime that a max-mtime watermark would take.
+    The watermark stops short of that millisecond, so the next cycle
+    reads the file."""
+    from cardano_spark.sources.files import read_json_zone
+
+    def land_batch(ms: int) -> None:
+        _, end = cardano.blocks_to_raw(
+            lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2
+        )
+        _set_mtime(os.path.join(lake.raw_zone("blocks"), str(end)), ms)
+
+    listed_ms = (int(time.time()) - 60) * 1000 + 620
+    listed_at = datetime(1970, 1, 1) + timedelta(milliseconds=listed_ms)
+    land_batch(listed_ms - 5000)
+    land_batch(listed_ms)  # in the listing millisecond
+    monkeypatch.setattr(cardano, "scan_cutoff", lambda: listed_at)
+    wm = cardano.raw_blocks_to_table(lake)
+    assert wm == listed_at - timedelta(seconds=5)
+    assert lake.sink("cardano_blocks").read().count() == 2 * BATCH
+    monkeypatch.undo()
+
+    land_batch(listed_ms)  # same millisecond, after the listing
+    zone = os.path.join(lake.raw_zone("blocks"), "*")
+    # a watermark at the listing millisecond would skip it for good
+    assert not read_json_zone(
+        lake.spark, zone, cardano.schemas.RAW_BLOCK, modified_after=listed_at
+    ).inputFiles()
+    assert cardano.raw_blocks_to_table(lake) == listed_at
+    assert lake.last_load_counts == {"cardano_blocks": 2 * BATCH}
+    assert lake.sink("cardano_blocks").read().count() == 3 * BATCH
+
+
+def test_e2_caught_up_runs_no_spark_job(lake, monkeypatch, count_jobs):
+    cardano.blocks_to_raw(lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2)
+    assert cardano.raw_blocks_to_table(lake) is not None
+
+    def no_merge(self, *args, **kwargs):
+        raise AssertionError("a caught-up E2 stage merged")
+
+    monkeypatch.setattr(cardano.ParquetMergeSink, "merge", no_merge)
+    assert count_jobs(lambda: cardano.raw_blocks_to_table(lake)) == (None, 0)
 
 
 def test_block_transactions_gate_and_array_column(lake):

@@ -3,10 +3,13 @@ sink (against duckdb as the ON CONFLICT database)."""
 
 from __future__ import annotations
 
-from datetime import datetime
+import os
+import time
+from datetime import datetime, timedelta, timezone
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cardano_spark.sinks.merge import DBUpsertSink, ParquetMergeSink
@@ -35,6 +38,85 @@ def test_watermark_roundtrip(spark, tmp_path):
     # replayed upsert (PK dup) is harmless
     store.upsert("cardano_blocks", 200)
     assert store.read_latest("cardano_blocks") == 200
+
+
+def _ts_store(spark, path):
+    return ParquetWatermarkStore(
+        spark, path, "file_modified_date", T.TimestampType()
+    )
+
+
+def test_watermark_ledger_runs_no_spark_job(spark, tmp_path, count_jobs):
+    """Control state stays on the driver: an upsert is one object put,
+    a read one listing."""
+    # the counter sees a real job
+    assert count_jobs(lambda: spark.sparkContext.parallelize([1, 2], 2).count()) == (2, 1)
+    store = _ts_store(spark, str(tmp_path / "wm"))
+    ts = datetime(2024, 5, 1, 6, 34, 9, 620123)
+    assert count_jobs(lambda: store.upsert("cardano_blocks", ts)) == (None, 0)
+    assert count_jobs(lambda: store.read_latest("cardano_blocks")) == (ts, 0)
+    assert count_jobs(lambda: store.read_latest("other")) == (None, 0)
+
+
+def test_watermark_ledger_is_a_parquet_dataset(spark, tmp_path):
+    """New ledger objects keep the one-row parquet layout: Spark reads
+    every column, timestamps included (written UTC-adjusted)."""
+    store = _ts_store(spark, str(tmp_path / "wm"))
+    t1 = datetime(2024, 5, 1, 6, 34, 9, 620123)
+    t2 = datetime(2024, 5, 1, 7, 0, 0, 1)
+    store.upsert("a", t1)
+    store.upsert("b", t2)
+    rows = spark.read.schema(store.schema).parquet(store.path).collect()
+    assert sorted((r["table"], r["file_modified_date"]) for r in rows) == [
+        ("a", t1),
+        ("b", t2),
+    ]
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    assert all(abs(r["created_at"] - now) < timedelta(minutes=5) for r in rows)
+
+
+def test_watermark_duplicate_upserts_are_separate_objects(spark, tmp_path):
+    store = ParquetWatermarkStore(spark, str(tmp_path / "wm"), "block_height", T.LongType())
+    store.upsert("cardano_blocks", 7)
+    store.upsert("cardano_blocks", 7)
+    objects = [f for f in os.listdir(store.path) if f.endswith(".parquet")]
+    assert len(objects) == 2
+    assert store.read_latest("cardano_blocks") == 7
+
+
+def test_watermark_reads_legacy_spark_ledger(spark, tmp_path, monkeypatch):
+    """Ledgers written by the earlier Spark writer (``part-*.parquet``,
+    no value in the name) read back, each body once per store."""
+
+    def legacy_append(path, col, dtype, table, value):
+        spark.range(1).select(
+            F.lit(table).alias("table"),
+            F.lit(value).cast(dtype).alias(col),
+            F.current_timestamp().alias("created_at"),
+        ).coalesce(1).write.mode("append").parquet(path)
+
+    blocks = str(tmp_path / "blocks")
+    for table, value in (("cardano_blocks", 300), ("cardano_blocks", 200), ("other", 999)):
+        legacy_append(blocks, "block_height", T.LongType(), table, value)
+    store = ParquetWatermarkStore(spark, blocks, "block_height", T.LongType())
+    gets: list[str] = []
+    real_get = store._store.get
+    monkeypatch.setattr(store._store, "get", lambda rel: gets.append(rel) or real_get(rel))
+    assert store.read_latest("cardano_blocks") == 300
+    store.upsert("cardano_blocks", 250)
+    assert store.read_latest("cardano_blocks") == 300
+    store.upsert("cardano_blocks", 301)
+    assert store.read_latest("cardano_blocks") == 301
+    assert store.read_latest("other") == 999
+    assert len(gets) == len(set(gets)) == 3
+
+    files = str(tmp_path / "files")
+    ts = datetime(2024, 5, 1, 6, 34, 9, 620123)
+    legacy_append(files, "file_modified_date", T.TimestampType(), "cardano_blocks", ts)
+    store = _ts_store(spark, files)
+    assert store.read_latest("cardano_blocks") == ts
+    store.upsert("cardano_blocks", ts + timedelta(microseconds=1))
+    assert store.read_latest("cardano_blocks") == ts + timedelta(microseconds=1)
 
 
 def test_window_and_gate_logic():
@@ -440,6 +522,26 @@ def test_incremental_file_listing(spark, tmp_path):
     fresh = read_json_zone(spark, str(zone / "*"), schema, modified_after=wm)
     assert [r.x for r in fresh.collect()] == [2]
     assert max_modified(fresh) is not None
+
+
+def test_incremental_file_listing_exact_cut(spark, tmp_path):
+    """The watermark cut keeps microseconds: a file whose mtime equals
+    the watermark is excluded, one written 50 ms later is read (a
+    whole-second cut read both)."""
+    import json
+
+    from cardano_spark.sources.files import read_json_zone
+
+    zone = tmp_path / "zone"
+    zone.mkdir()
+    t_ms = (int(time.time()) - 600) * 1000 + 620
+    for name, ms in (("at.json", t_ms), ("after.json", t_ms + 50)):
+        (zone / name).write_text(json.dumps({"x": ms}))
+        os.utime(zone / name, ns=(ms * 1_000_000, ms * 1_000_000))
+    wm = datetime(1970, 1, 1) + timedelta(milliseconds=t_ms)
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    fresh = read_json_zone(spark, str(zone), schema, modified_after=wm)
+    assert [r.x for r in fresh.collect()] == [t_ms + 50]
 
 
 # --------------------------------------------------------------------------
