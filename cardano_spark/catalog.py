@@ -83,45 +83,55 @@ def spread_narrow_input(df: DataFrame, min_parts: int | None = None) -> DataFram
 #: enough" and no-ops, which is the safe direction at scale.
 _MAX_SPLIT_BYTES = 128 * 1024 * 1024
 
-_LAYOUT_CACHE: dict[tuple[str, float], tuple[int, int]] = {}
+#: One stat entry per table path: ``(mtime, bytes, n_files)``. A new
+#: mtime replaces the entry, so a regenerated fixture re-stats and the
+#: cache never holds more than one entry per path.
+_STAT_CACHE: dict[str, tuple[float, int, int]] = {}
+
+
+def _file_stats(sf_dir: str, name: str) -> tuple[int, int] | None:
+    """``(bytes, n_files)`` of one table from memoized ``os.stat`` and
+    ``os.scandir`` — no Spark call. None when the path is not a local
+    file or directory (for directories the mtime tracks file adds and
+    renames, the common rewrite shape)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        mtime = os.stat(path).st_mtime
+    except OSError:
+        return None
+    hit = _STAT_CACHE.get(path)
+    if hit is None or hit[0] != mtime:
+        try:
+            if os.path.isdir(path):
+                sizes = [
+                    e.stat().st_size for e in os.scandir(path) if e.is_file()
+                ]
+                hit = (mtime, sum(sizes), len(sizes))
+            else:
+                hit = (mtime, os.path.getsize(path), 1)
+        except OSError:
+            return None
+        _STAT_CACHE[path] = hit
+    return hit[1], hit[2]
 
 
 def scan_partitions_estimate(sf_dir: str, name: str) -> int | None:
     """Estimated scan partitions for one catalog table from file
     stats alone — no Spark call, so the narrow-input gate costs
     microseconds instead of the ~0.15-0.25 s driver-side physical
-    planning that ``df.rdd.getNumPartitions()`` spends per probe
-    (measured, r11 — the bench pays that on every query build).
+    planning that ``df.rdd.getNumPartitions()`` spends per probe.
     ``max(n_files, bytes // maxSplit)`` bounds Spark's split packing
     from below on BOTH axes: many small files each yield at least one
     task, and big splittable files yield at least bytes/maxSplit.
     Underestimating can only add a spread on a layout that was
     already wide-ish; overestimating (the conservative direction, see
     ``_MAX_SPLIT_BYTES``) no-ops the gate. None for non-local paths —
-    callers fall back to the exact probe. Keyed on (path, mtime) like
-    ``_SCHEMA_CACHE`` so a regenerated fixture re-stats (r11 verdict
-    #4; for directories the mtime tracks file adds/renames, the common
-    rewrite shape)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        key = (path, os.stat(path).st_mtime)
-    except OSError:
+    callers fall back to the exact probe."""
+    stats = _file_stats(sf_dir, name)
+    if stats is None:
         return None
-    hit = _LAYOUT_CACHE.get(key)
-    if hit is None:
-        try:
-            if os.path.isdir(path):
-                sizes = [
-                    e.stat().st_size for e in os.scandir(path) if e.is_file()
-                ]
-                hit = (sum(sizes), max(1, len(sizes)))
-            else:
-                hit = (os.path.getsize(path), 1)
-        except OSError:
-            return None
-        _LAYOUT_CACHE[key] = hit
-    total, n_files = hit
-    return max(n_files, total // _MAX_SPLIT_BYTES)
+    total, n_files = stats
+    return max(1, n_files, total // _MAX_SPLIT_BYTES)
 
 
 def narrow_table(
@@ -142,37 +152,14 @@ def narrow_table(
     )
 
 
-_SIZE_CACHE: dict[tuple[str, float], int] = {}
-
-
 def table_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk bytes of one table — the size statistic the broadcast
-    gate (operators/relational.broadcast_if_small) consumes. Memoized
-    os.stat, no Spark job, no file-listing round trip; None when the
-    path is not a local file/dir (object stores report size through
-    their own catalog — callers then fall back to scan_bytes or, at
-    worst, to AQE's runtime statistics). (path, mtime)-keyed like
-    ``_SCHEMA_CACHE``/``_LAYOUT_CACHE`` so a regenerated fixture
-    re-stats."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        key = (path, os.stat(path).st_mtime)
-    except OSError:
-        return None
-    hit = _SIZE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    try:
-        if os.path.isdir(path):
-            total = sum(
-                e.stat().st_size for e in os.scandir(path) if e.is_file()
-            )
-        else:
-            total = os.path.getsize(path)
-    except OSError:
-        return None
-    _SIZE_CACHE[key] = total
-    return total
+    gate (operators/relational.broadcast_if_small) consumes. No Spark
+    job; None when the path is not a local file/dir (object stores
+    report size through their own catalog — callers then fall back to
+    scan_bytes or, at worst, to AQE's runtime statistics)."""
+    stats = _file_stats(sf_dir, name)
+    return None if stats is None else stats[0]
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
@@ -237,12 +224,3 @@ def normalize_events(
     df.write.mode("overwrite").parquet(dest)
     return int(obs.get["n"])
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL surface."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -44,12 +44,6 @@ def sql_ident(name: str) -> str:
         return name
     return "`" + name.replace("`", "``") + "`"
 
-#: modulus / multiplier for the portable polynomial rolling hash
-#: (re-expressible in any SQL dialect with 64-bit ints: products stay
-#: < 2^62 so DuckDB's checked BIGINT arithmetic never overflows).
-POLY_MOD = 1_000_000_007
-POLY_MUL = 31
-
 
 def dec(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
     """Exact money cast (C8). Mirrors ``Numeric(38,0)``-style columns in
@@ -102,22 +96,3 @@ def company_from_url(url: Column | str) -> Column:
     suffix strip tables; a single regexp does the same)."""
     c = F.col(url) if isinstance(url, str) else url
     return F.regexp_extract(c, r"^(?:https?://)?(?:www\.)?([^/.]+)", 1)
-
-
-def poly_hash(col: Column | str, mod: int = POLY_MOD, mul: int = POLY_MUL) -> Column:
-    """Portable polynomial rolling hash of a string (document
-    fingerprinting / shingle hashing). Chosen over ``xxhash64``
-    because the oracle (DuckDB) must reproduce it exactly; on a real
-    cluster swap in ``F.xxhash64`` for ~5x cheaper hashing — the
-    dedup operators take the hash expression as a parameter.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length(c)),
-        lambda i: F.ascii(F.substring(c, i, F.lit(1))),
-    )
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * mul + x) % mod,
-    )

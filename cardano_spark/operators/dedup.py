@@ -32,7 +32,6 @@ from cardano_spark.functions.hashing import (
     SIMHASH_BITS,
     md5_long,
     md5_long_sexpr,
-    minhash_sig,
     minhash_sig_sexpr,
 )
 from cardano_spark.functions.scalars import sql_ident
@@ -142,27 +141,6 @@ def jaccard(a: Column | str, b: Column | str) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return inter.cast("double") / union.cast("double")
-
-
-def minhash_signature_cols(hashes: Column) -> list[Column]:
-    """The 16 MinHash signature values as columns sig0..sig15."""
-    return [
-        minhash_sig(hashes, a, b).alias(f"sig{j}")
-        for j, (a, b) in enumerate(MINHASH_PERMS)
-    ]
-
-
-def lsh_band_cols() -> list[Column]:
-    """Band bucket ids: md5 over the '|'-joined signature slice of
-    each band (LSH_BANDS bands x LSH_ROWS rows)."""
-    out = []
-    for band in range(LSH_BANDS):
-        sigs = [
-            F.col(f"sig{j}").cast("string")
-            for j in range(band * LSH_ROWS, (band + 1) * LSH_ROWS)
-        ]
-        out.append(F.md5(F.concat_ws("|", *sigs)).alias(f"band{band}"))
-    return out
 
 
 def _sig_frame(t: DataFrame) -> DataFrame:

@@ -1,45 +1,11 @@
 """Aggregates every query family into the driver-facing registry.
 
-The driver's correctness harness checks only the FIRST 50 registry
-entries (insertion order), so window membership IS the driver-row
-coverage policy. Round 4's verdict flagged the old static `_DEFERRED`
-list as permanently stacked: 55 queries never rotated back in, and 9
-had never received a driver row at all. The window now ROTATES on a
-least-recently-driver-checked schedule persisted in
-``window_history.json``:
-
-- ``last_round``: per query, the last round with a driver correctness
-  row (folded in per round by ``tools/update_window_history.py``).
-- ``touched``: queries whose plan/semantics changed THIS round — they
-  jump the queue regardless of when they were last checked.
-
-Ordering: never-driver-checked first (the r4 verdict's explicit
-priority — a query with no driver row in ANY round outranks
-everything), then touched-this-round (least-recently-checked first,
-so an overflowing touched set defers only its most recently verified
-members), then everyone else ascending by last-checked round (ties
-by registry insertion order). The first 50 of that ordering are the
-driver window; the remainder — always the MOST recently verified
-queries — defer to the tail and rotate back within at most
-ceil(N/50) rounds. Every query is additionally oracle-checked at
-sf0.001 in CI (test_oracle_parity) regardless of window position.
-
-When MORE than 50 queries are never-checked (the r5 failure: 51
-never-checked, insertion order silently pushed q136 out every
-round), the never-checked class orders by the persisted
-``pending_first_check`` queue FIRST: queries displaced from the
-window in a prior round while still never-checked. The update tool
-(tools/update_window_history.py) refreshes the queue each round
-fold, so displaced never-checked queries re-enter FIFO — any
-never-checked query waits at most ceil(|never|/50) rounds for its
-first driver row, regardless of how many new queries register ahead
-of it in insertion order.
+Queries and their DuckDB oracle twins come in insertion order:
+relational, then training-data, then streaming. Every query is
+oracle-checked at sf0.001 in CI (test_oracle_parity).
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from cardano_spark.plans.oracles import RELATIONAL_ORACLES
 from cardano_spark.plans.queries import RELATIONAL_QUERIES, QueryFn
@@ -52,69 +18,13 @@ from cardano_spark.plans.trainingdata import (
     TRAININGDATA_QUERIES,
 )
 
-DRIVER_WINDOW = 50
-
-_HISTORY_PATH = os.path.join(os.path.dirname(__file__), "window_history.json")
-
-
-def _load_history() -> dict:
-    with open(_HISTORY_PATH, encoding="utf-8") as f:
-        return json.load(f)
-
-
-def _ordered_names(names: list[str]) -> list[str]:
-    hist = _load_history()
-    last: dict[str, int] = hist.get("last_round", {})
-    touched = set(hist.get("touched", []))
-    pending: dict[str, int] = {
-        q: i for i, q in enumerate(hist.get("pending_first_check", []))
-    }
-    idx = {q: i for i, q in enumerate(names)}
-
-    # class -2: never driver-checked (no row in ANY round — the r4
-    # verdict's first priority); within it, queries displaced from a
-    # PRIOR round's window while never-checked (pending_first_check)
-    # come first, FIFO, so a never-checked query cannot be displaced
-    # indefinitely by newer registrations (the r5 q136 hole).
-    # class -1: touched this round, least-recently-checked first so
-    # that when touched + never overflow the window, only the MOST
-    # recently verified touched queries defer (they rotate back next
-    # round via plain LRU); class 0: everyone else, ascending by
-    # last driver row. Insertion order breaks remaining ties
-    # deterministically.
-    def key(q: str) -> tuple[int, int, int]:
-        if q not in last:
-            return (-2, pending.get(q, len(pending)), idx[q])
-        if q in touched:
-            return (-1, last[q], idx[q])
-        return (0, last[q], idx[q])
-
-    return sorted(names, key=key)
-
-
-def _raw_queries() -> dict[str, QueryFn]:
-    out: dict[str, QueryFn] = {}
-    out.update(RELATIONAL_QUERIES)
-    out.update(TRAININGDATA_QUERIES)
-    out.update(STREAMING_QUERIES)
-    return out
-
-
-def deferred_names() -> list[str]:
-    """The queries OUTSIDE this round's driver window — always the
-    most recently driver-verified ones."""
-    return _ordered_names(list(_raw_queries()))[DRIVER_WINDOW:]
-
 
 def all_queries() -> dict[str, QueryFn]:
-    raw = _raw_queries()
-    return {q: raw[q] for q in _ordered_names(list(raw))}
+    return {**RELATIONAL_QUERIES, **TRAININGDATA_QUERIES, **STREAMING_QUERIES}
 
 
 def all_oracles() -> dict[str, str]:
-    raw: dict[str, str] = {}
-    raw.update(RELATIONAL_ORACLES)
-    raw.update(TRAININGDATA_ORACLES)
-    raw.update(STREAMING_ORACLES)
-    names = _ordered_names(list(_raw_queries()))
-    return {q: raw[q] for q in names if q in raw}
+    """Oracles in query order (each family's oracle table lists its
+    entries in its own order)."""
+    raw = {**RELATIONAL_ORACLES, **TRAININGDATA_ORACLES, **STREAMING_ORACLES}
+    return {q: raw[q] for q in all_queries() if q in raw}

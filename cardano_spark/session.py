@@ -48,12 +48,9 @@ def get_spark(
         # see compute skew). A lower floor keeps `parallelismFirst`
         # coalescing proportional to bytes/parallelism while letting
         # slim-row heavy-compute stages keep their cores at ANY
-        # cluster size; env-overridable for deployments whose shuffles
-        # are all genuinely byte-heavy.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # cluster size. A deployment whose shuffles are all genuinely
+        # byte-heavy overrides it through ``extra_conf``.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Shuffled-hash joins, bounded at RUNTIME (r11 verdict #3):
         # the r11 global ``preferSortMergeJoin=false`` made the
@@ -66,11 +63,11 @@ def get_spark(
         # hash map bound below — the build side is then provably
         # bounded per task, and oversized/skewed joins stay SMJ.
         # Same fixture-scale plans (partitions are KB there), no
-        # estimate-driven hash builds at scale.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_MAX", "64m"),
-        )
+        # estimate-driven hash builds at scale. The bound must stay at
+        # or above spark.sql.adaptive.advisoryPartitionSizeInBytes
+        # (64m default): AQE coalesces partitions up to the advisory
+        # size, so a lower bound silently disables the rewrite.
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

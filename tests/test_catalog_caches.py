@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+from cardano_spark import catalog
 from cardano_spark.catalog import (
     _MAX_SPLIT_BYTES,
     scan_partitions_estimate,
@@ -42,3 +43,20 @@ def test_table_bytes_refreshes_on_mtime(tmp_path):
 def test_missing_path_returns_none(tmp_path):
     assert scan_partitions_estimate(str(tmp_path), "nation") is None
     assert table_bytes(str(tmp_path), "nation") is None
+
+
+def test_regenerations_keep_one_entry_per_path(tmp_path):
+    sf = str(tmp_path)
+    p = os.path.join(sf, "part.parquet")
+    for i in range(1, 6):
+        _write(p, 100 * i, 1000.0 * i)
+        assert table_bytes(sf, "part") == 100 * i
+        assert scan_partitions_estimate(sf, "part") == 1
+    assert [k for k in catalog._STAT_CACHE if k.startswith(sf)] == [p]
+    # both functions share the entry, so the fresh stats reach either
+    with open(p, "wb") as f:
+        f.truncate(2 * _MAX_SPLIT_BYTES)  # sparse: no 256 MiB write
+    os.utime(p, (9000.0, 9000.0))
+    assert scan_partitions_estimate(sf, "part") == 2
+    assert table_bytes(sf, "part") == 2 * _MAX_SPLIT_BYTES
+    assert [k for k in catalog._STAT_CACHE if k.startswith(sf)] == [p]

@@ -40,6 +40,12 @@ def test_no_orphan_oracles():
     assert not orphans, f"oracles without query: {orphans}"
 
 
+def test_registry_contract():
+    # every oracle belongs to a registered query, same order
+    assert set(ORACLES) <= set(QUERIES)
+    assert [q for q in QUERIES if q in ORACLES] == list(ORACLES)
+
+
 @pytest.fixture(scope="session")
 def spark_results(spark):
     """name -> pandas DataFrame (or the exception the query raised,

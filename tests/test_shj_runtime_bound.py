@@ -19,11 +19,23 @@ def test_prefer_sort_merge_join_is_default(spark):
     assert thr not in ("0", "0b")
 
 
+def test_shj_bound_covers_advisory_partition_size(spark):
+    # AQE coalesces up to the advisory size; a lower hash-map bound
+    # would never admit a coalesced partition, disabling the rewrite
+    parse = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    thr = spark.conf.get(
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    )
+    advisory = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    assert parse(thr) >= parse(advisory), (thr, advisory)
+
+
 def test_small_partitions_convert_to_shj_at_runtime(spark):
     a = spark.range(20000).selectExpr("id AS k", "id * 2 AS v")
     b = spark.range(10000).selectExpr("id AS k", "id * 3 AS w")
     # disable broadcast so the join is a real shuffle join; no join
     # hint — a hint would bypass the dynamic selection this test pins
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         j = a.join(b, "k", "left")
@@ -36,6 +48,4 @@ def test_small_partitions_convert_to_shj_at_runtime(spark):
         assert "ShuffledHashJoin" in final, plan
         assert "SortMergeJoin" not in final, plan
     finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)

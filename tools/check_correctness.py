@@ -3,8 +3,7 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet tables, then
 compares row count, sorted column names, and an order-insensitive
-canonical value hash. Use while iterating so CORRECTNESS_r{N}.json
-holds no surprises.
+canonical value hash.
 
 Usage:
     python tools/check_correctness.py [sf_dir] [query ...]

@@ -1,12 +1,12 @@
 """Per-query phase profiler (optimization round tooling, guide §1).
 
-For each named query (default: bench.HEADLINE) measure, separately:
+For each named query measure, separately:
   build_s    Python-side DataFrame construction (py4j + catalog reads)
   plan_s     analysis + optimization + physical planning (explain)
   exec_s     noop-sink execution, best of N (guide §1.4)
   jobs/stages/tasks  counts from the status tracker for the best run
 
-Usage: python tools/profile_queries.py [query ...] [--repeat N]
+Usage: python tools/profile_queries.py query [query ...] [--repeat=N]
 Writes one JSON line per query to stdout; labels jobs (guide §1.5).
 """
 
@@ -22,21 +22,21 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    names = [a for a in sys.argv[1:] if not a.startswith("--")]
+    if not names:
+        sys.exit(__doc__)
     repeat = 3
     for a in sys.argv[1:]:
         if a.startswith("--repeat"):
             repeat = int(a.split("=", 1)[1])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    import bench
     import __spark_entry__ as entrymod
     from cardano_spark.session import get_spark
 
     spark = get_spark("profile")
     sc = spark.sparkContext
     qs = entrymod.queries()
-    names = args or [n for n in bench.HEADLINE if n in qs]
 
     # warm JVM/codegen path once
     qs[names[0]](spark, sf_dir).write.mode("overwrite").format("noop").save()
