@@ -26,6 +26,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory() -> str:
+    """Default driver heap: half of physical memory, within 1-16 GiB.
+    In local mode the driver JVM shares the host with the Python
+    workers and its own off-heap use, so it must not claim all of it
+    (a 16g heap on a 16 GB host got the JVM OOM-killed)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2 >> 30))}g"
+
+
 def get_spark(
     app_name: str = "cardano-spark",
     shuffle_partitions: int | None = None,
@@ -76,7 +85,7 @@ def get_spark(
         # sessions read nanos as long and catalog._read_events converts
         # losslessly. Harmless for micros-shaped data.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -4,10 +4,12 @@ path (SURVEY.md §2.2 K3/K4, §2.7 D1) re-expressed for Spark.
 Two implementations of the same contract (``merge(df)``):
 
 - ``ParquetMergeSink``: a parquet-backed managed table for local /
-  lakehouse use. Insert-if-absent is a left-anti join against the
-  current snapshot, then an atomic directory swap. At 100 TB you'd
-  use an Iceberg/Delta table and its MERGE INTO; the anti-join plan
-  is identical — this sink is the dependency-free stand-in.
+  lakehouse use. Insert-if-absent is a left-anti join against the key
+  columns of the touched buckets; the new rows land as new files, and
+  one manifest version commits each change. At 100 TB you'd use an
+  Iceberg/Delta table and its MERGE INTO; the anti-join plan and the
+  add/remove commit are the same ideas at their smallest — this sink
+  is the dependency-free stand-in.
 - ``DBUpsertSink``: staging + single merge statement against a
   DB-API database (the reference's temp table + asyncpg COPY +
   ``INSERT ... SELECT ... ON CONFLICT DO NOTHING``,
@@ -19,16 +21,15 @@ Two implementations of the same contract (``merge(df)``):
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-from collections.abc import Callable, Sequence
+import json
+from collections.abc import Callable, Collection, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cardano_spark.sinks.ddl import create_table_sql, quote_ident
+from cardano_spark.sources.objectstore import ObjectStore
 
 
 def dedup_by_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -50,41 +51,62 @@ def dedup_by_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
+_LOG = "_log"  # committed versions, one JSON object each
+_STAGE = "_stage"  # a mutation's new files, until its version commits
+_LEGACY_META = "_table_meta.json"  # bucket count of a pre-manifest table
+
+
 class ParquetMergeSink:
     """Managed parquet table with INSERT-if-absent merge semantics,
-    hash-bucketed on the merge key so a merge touches only the
-    buckets containing incoming keys.
+    hash-bucketed on the merge key.
 
     Layout: ``path/_bucket=K/*.parquet`` with
     ``K = pmod(xxhash64(*keys), n_buckets)`` — a pure function of the
     key, so an existing row and any incoming duplicate of it land in
     the same bucket and the anti-join stays correct bucket-locally.
+    Readers scan the root or bucket directories, never a file list:
+    Spark lists up to 32 paths on the driver but starts a listing job
+    for more, and appended files pass 32 within a few merges.
 
-    Merge I/O is O(touched buckets), not O(table): round 1 re-read
-    and rewrote the WHOLE snapshot per merge, which is a scale-killer
-    for an incremental load path (a 100 TB table absorbing a 100 GB
-    batch rewrote 100 TB). Untouched bucket directories are never
-    opened or rewritten (their files stay byte-identical — pinned by
-    tests/test_watermark_and_sinks.py).
+    Merge I/O is O(new rows) for an insert: it reads only the key
+    columns of the buckets the batch touches and writes only the rows
+    whose key is absent, as one new file per touched bucket. No
+    existing file is rewritten (pinned by
+    tests/test_watermark_and_sinks.py). Upsert, delete, compact and
+    rebucket rewrite what they touch, so they are O(touched buckets)
+    (rebucket: every bucket). Inserts add files until :meth:`compact`
+    (the ``maintain --compact`` CLI step) folds them.
 
-    Crash safety: each touched bucket is rewritten to a tmp dir and
-    atomically swapped. Cross-bucket atomicity is NOT needed because
-    the merge is insert-if-absent idempotent — a crash between bucket
-    swaps re-runs to the same converged state (already-swapped
-    buckets anti-join incoming to nothing). At 100 TB you'd use an
-    Iceberg/Delta table and its transactional MERGE INTO; the plan
-    per bucket is identical.
+    Commit protocol: one manifest. Every mutation
+    1. writes its new files under ``path/_stage/``, which Spark scans
+       skip (leading ``_``);
+    2. commits one version, ``path/_log/{N:020d}.json``, with a
+       create-if-absent put through ``sources/objectstore.py``. The
+       version holds the live files (relative path -> bytes) and
+       ``n_buckets``;
+    3. rolls forward to it.
 
-    The displaced live bucket is parked OUTSIDE the table root
-    (``{path}.old-b{K}-*``, a sibling dir) — never under ``path`` —
-    so a crash mid-swap can't leave stale rows readable: Spark's
-    hidden-path filter skips only ``_``/``.``-prefixed names, and
-    ``_bucket=K.old-...`` contains ``=`` so it would be picked up as
-    a partition dir. ``_recover_partial_swaps`` (run before every
-    read and merge) finishes the job deterministically: an ``.old``
-    whose bucket dir is missing is restored (the swap never
-    completed); one whose bucket dir exists is garbage from after a
-    completed swap and is dropped.
+    The roll-forward also runs before every read and every mutation,
+    and it has one rule: the newest version that parses is the table.
+    It moves the staged files that version lists into ``_bucket=K/``,
+    deletes the files an older version lists and it does not (a bucket
+    directory left with no live file goes whole), and deletes
+    ``_stage`` and the older versions. A crash before the commit thus
+    leaves the previous version, and a crash after it the new one.
+    When any mutation returns, the bucket directories hold exactly the
+    committed files. At rest ``_log`` holds one version and ``_stage``
+    is absent, so a read lists no data directory.
+
+    The sink assumes a single writer. Two writers would race for the
+    same version number; the put decides the race only where the
+    filesystem's exclusive create is atomic, and nothing retries the
+    loser (ROADMAP item 6). Every call goes through the Hadoop
+    FileSystem seam, so the protocol runs on ``s3a://`` too, where the
+    staged moves are copies of the new bytes only.
+
+    A table written before the manifest existed (bucket directories
+    and ``_table_meta.json``, no ``_log``) reads as its directories,
+    and its first mutation adopts the files it finds into its version.
     """
 
     def __init__(
@@ -96,7 +118,7 @@ class ParquetMergeSink:
         n_buckets: int = 16,
     ):
         self.spark = spark
-        self.path = path
+        self.path = path.rstrip("/")
         # `_bucket` is the sink's internal partition-directory key, not
         # table data. A schema discovered via spark.read.parquet(path)
         # on a live sink partition-discovers it as an int column;
@@ -110,99 +132,113 @@ class ParquetMergeSink:
             )
         self.schema = schema
         self.keys = list(keys)
+        self._store = ObjectStore(spark, self.path)
         # a live table's bucket count is TABLE state, not caller
-        # opinion: honor the persisted meta when present (written at
-        # first merge / updated by rebucket), else the argument is the
-        # creation default. A stale constructor arg after a rebucket
-        # would otherwise mis-route every future merge.
-        self.n_buckets = self._read_meta() or n_buckets
+        # opinion: the committed version's count wins, and the argument
+        # only seeds a new table. A stale constructor arg after a
+        # rebucket would otherwise mis-route every future merge.
+        self.n_buckets = n_buckets
+        self._roll_forward()
 
-    _META = "_table_meta.json"  # leading "_": invisible to Spark scans
+    def _roll_forward(self) -> dict[str, int]:
+        """Make the table match its newest committed version and
+        return that version's live files (relative path -> bytes).
+        Idempotent; driver-side object-store calls only."""
+        names = self._store.list_names(_LOG)
+        self._version, state = -1, None
+        for name in reversed(names):
+            try:
+                state = json.loads(self._store.get(f"{_LOG}/{name}"))
+            except ValueError:
+                continue  # a torn put: never committed
+            self._version = int(name.split(".")[0])
+            break
+        if state is None:
+            state = self._unversioned()
+        self.n_buckets = state.get("n_buckets") or self.n_buckets
+        live = state["files"]
+        if self._store.exists(_STAGE):
+            for rel in self._staged():
+                if rel in live:
+                    self._store.rename(f"{_STAGE}/{rel}", rel)
+            self._store.delete(_STAGE)
+        kept = {f.split("/")[0] for f in live}
+        for name in names:
+            if name == f"{self._version:020d}.json":
+                continue
+            try:
+                old = json.loads(self._store.get(f"{_LOG}/{name}"))["files"]
+            except ValueError:
+                old = {}
+            gone = {f.split("/")[0] for f in old} - kept
+            dead = [f for f in old if f not in live and f.split("/")[0] in kept]
+            for rel in sorted(gone) + dead:
+                self._store.delete(rel)
+            self._store.delete(f"{_LOG}/{name}")
+        return live
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, self._META)
+    def _unversioned(self) -> dict:
+        """State of a table with no committed version: none, or one
+        written before the manifest existed, which is its bucket
+        directories plus the bucket count in its meta file."""
+        files = {o.path: o.size for o in self._store.glob("_bucket=*/*.parquet")}
+        if not files or not self._store.exists(_LEGACY_META):
+            return {"files": files}
+        meta = json.loads(self._store.get(_LEGACY_META))
+        return {"n_buckets": int(meta["n_buckets"]), "files": files}
 
-    def _read_meta(self) -> int | None:
-        try:
-            import json
+    def _staged(self) -> dict[str, int]:
+        """Files under ``_stage``, by the path they take when live."""
+        return {
+            o.path[len(_STAGE) + 1:]: o.size
+            for o in self._store.glob(f"{_STAGE}/_bucket=*/*.parquet")
+        }
 
-            with open(self._meta_path()) as f:
-                return int(json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            return None
+    def _commit(
+        self,
+        live: dict[str, int],
+        new: DataFrame,
+        drop: Collection[str],
+    ) -> None:
+        """Steps 1-3 of every mutation: stage ``new`` (rows carrying
+        ``_bucket``) as files, commit the version that drops ``drop``
+        from ``live`` and adds them, and roll forward to it."""
+        new.write.mode("overwrite").partitionBy("_bucket").parquet(
+            f"{self.path}/{_STAGE}"
+        )
+        files = {f: n for f, n in live.items() if f not in drop}
+        files.update(self._staged())
+        if files != live:
+            self._store.put_if_absent(
+                f"{_LOG}/{self._version + 1:020d}.json",
+                json.dumps(
+                    {"n_buckets": self.n_buckets, "files": files},
+                    sort_keys=True,
+                ).encode(),
+            )
+        self._roll_forward()
 
-    def _write_meta(self, n_buckets: int) -> None:
-        import json
-
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"n_buckets": n_buckets}, f)
-        os.replace(tmp, self._meta_path())  # atomic on POSIX
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path)
+    @staticmethod
+    def _by_bucket(live: Collection[str]) -> dict[int, list[str]]:
+        out: dict[int, list[str]] = {}
+        for f in sorted(live):
+            out.setdefault(int(f.split("/")[0].split("=")[1]), []).append(f)
+        return out
 
     def _bucket_col(self) -> Column:
         return F.pmod(
             F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(self.n_buckets)
         ).cast("int")
 
-    def _bucket_dir(self, b: int) -> str:
-        return os.path.join(self.path, f"_bucket={b}")
-
-    def _old_dir(self, b: int) -> str:
-        return f"{self.path}.old-b{b}-{uuid.uuid4().hex[:8]}"
-
-    def _recover_partial_swaps(self) -> None:
-        """Re-converge any swap interrupted between renames — per-bucket
-        merge swaps AND whole-table rebucket swaps. Idempotent; scalar
-        driver-side I/O.
-
-        Rebucket invariant: the table root is renamed away only AFTER
-        the new layout is fully written, so `path` missing + a
-        ``.rebucket-new`` sibling present always means the new layout
-        is complete — promote it. `path` present means any rebucket
-        siblings are garbage (completed swap's parked copy, or an
-        aborted write)."""
-        parent, base = os.path.split(self.path.rstrip("/"))
-        if not os.path.isdir(parent or "."):
-            return
-        names = os.listdir(parent or ".")
-        # --- whole-table rebucket swaps -----------------------------
-        news = sorted(n for n in names if n.startswith(f"{base}.rebucket-new-"))
-        olds = sorted(n for n in names if n.startswith(f"{base}.rebucket-old-"))
-        if os.path.isdir(self.path):
-            for n in news + olds:
-                shutil.rmtree(os.path.join(parent, n))
-        elif news or olds:
-            promote = news[0] if news else olds[0]
-            os.rename(os.path.join(parent, promote), self.path)
-            for n in news + olds:
-                p = os.path.join(parent, n)
-                if os.path.isdir(p):
-                    shutil.rmtree(p)
-            self.n_buckets = self._read_meta() or self.n_buckets
-        # --- per-bucket merge swaps ---------------------------------
-        prefix = f"{base}.old-b"
-        for name in names:
-            if not name.startswith(prefix):
-                continue
-            bucket = name[len(prefix):].split("-", 1)[0]
-            old = os.path.join(parent, name)
-            if not os.path.isdir(old):
-                continue  # already consumed by the rebucket pass
-            dst = self._bucket_dir(int(bucket))
-            if os.path.isdir(dst):
-                shutil.rmtree(old)  # swap completed; parked copy is garbage
-            else:
-                os.rename(old, dst)  # swap never completed; restore
+    def _touched(self, fresh: DataFrame) -> list[int]:
+        # touched-bucket ids: <= n_buckets scalars, driver-side by design
+        return sorted(r._bucket for r in fresh.select("_bucket").distinct().collect())
 
     def read(self) -> DataFrame:
         """The table under exactly the declared schema (the `_bucket`
         partition directory key is an internal layout detail, not a
         column — partition discovery would otherwise append it)."""
-        self._recover_partial_swaps()  # may restore a missing root
-        if not self.exists():
+        if not self._roll_forward():
             return self.spark.createDataFrame([], self.schema)
         return (
             self.spark.read.schema(self.schema)
@@ -210,21 +246,23 @@ class ParquetMergeSink:
             .select(*[f.name for f in self.schema.fields])
         )
 
-    def _read_buckets(self, buckets: Sequence[int]) -> DataFrame:
-        dirs = [self._bucket_dir(b) for b in buckets if os.path.isdir(self._bucket_dir(b))]
+    def _read_buckets(self, buckets: Sequence[int], live: dict[str, int]) -> DataFrame:
+        have = self._by_bucket(live)
+        dirs = [f"{self.path}/_bucket={b}" for b in buckets if b in have]
         if not dirs:
             return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(*dirs)
 
     def merge(self, incoming: DataFrame, mode: str = "insert") -> None:
         """Key-merge a batch into the table, touching only the buckets
-        containing incoming keys (read, anti-join, rewrite, swap).
+        containing incoming keys.
 
-        - ``mode="insert"``: rows whose key is absent are appended;
-          existing rows win (ON CONFLICT DO NOTHING — the reference's
-          idempotency primitive, D1).
+        - ``mode="insert"``: rows whose key is absent are appended as
+          new files; existing rows win and stay untouched (ON CONFLICT
+          DO NOTHING — the reference's idempotency primitive, D1).
         - ``mode="upsert"``: incoming rows REPLACE existing rows with
-          the same key (ON CONFLICT DO UPDATE). This is the
+          the same key (ON CONFLICT DO UPDATE), by rewriting the
+          touched buckets. This is the
           incremental-materialized-view path: a streaming update-mode
           aggregation emits re-computed aggregate rows per key each
           microbatch, and upserting them keeps the stored rollup equal
@@ -238,130 +276,79 @@ class ParquetMergeSink:
         well-defined row."""
         if mode not in ("insert", "upsert"):
             raise ValueError(f"mode must be insert|upsert, got {mode!r}")
-        # recovery BEFORE the bucket expression: a pending rebucket
-        # promote may change n_buckets
-        self._recover_partial_swaps()
-        os.makedirs(self.path, exist_ok=True)
-        if self._read_meta() is None:
-            self._write_meta(self.n_buckets)
-        fresh = dedup_by_key(incoming, self.keys).withColumn(
-            "_bucket", self._bucket_col()
-        )
-        # touched-bucket ids: <= n_buckets scalars, driver-side by design
-        touched = sorted(
-            r._bucket for r in fresh.select("_bucket").distinct().collect()
-        )
-        if not touched:
-            return
-        existing = self._read_buckets(touched).withColumn(
-            "_bucket", self._bucket_col()
-        )
-        if mode == "insert":
-            merged = existing.unionByName(
-                fresh.join(existing.select(*self.keys), self.keys, "left_anti")
-            )
-        else:
-            merged = fresh.unionByName(
-                existing.join(fresh.select(*self.keys), self.keys, "left_anti")
-            )
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-        self._swap_buckets(tmp, touched)
+        live = self._roll_forward()
+        # clustered by bucket before the dedup (the bucket is a function
+        # of the key, so the window needs no second shuffle), and cached:
+        # the touched-bucket collect and the write share one pass over
+        # the batch, and a broadcast anti-join keeps each bucket in one
+        # partition, so an insert adds one file per touched bucket
+        fresh = dedup_by_key(
+            incoming.withColumn("_bucket", self._bucket_col()).repartition("_bucket"),
+            ["_bucket", *self.keys],
+        ).persist()
+        try:
+            touched = self._touched(fresh)
+            if not touched:
+                return
+            existing = self._read_buckets(touched, live)
+            if mode == "insert":
+                new = fresh.join(existing.select(*self.keys), self.keys, "left_anti")
+                drop: list[str] = []
+            else:
+                new = fresh.unionByName(
+                    existing.join(fresh.select(*self.keys), self.keys, "left_anti")
+                    .withColumn("_bucket", self._bucket_col())
+                ).repartition("_bucket")
+                have = self._by_bucket(live)
+                drop = [f for b in touched for f in have.get(b, [])]
+            self._commit(live, new, drop)
+        finally:
+            fresh.unpersist()
 
     def delete(self, keys: DataFrame) -> None:
-        """Key-delete a batch from the table, touching only the
-        buckets containing the keys (read, anti-join, rewrite, swap —
-        the removal twin of :meth:`merge`, |keys|-bounded the same
-        way). Keys absent from the table are a no-op; the operation
-        is idempotent under replay. Added for the corpus build's
-        late-decontamination retraction flow (r8 verdict task 4)."""
-        self._recover_partial_swaps()
-        if self._read_meta() is None:
-            return  # table never created — nothing to delete
+        """Key-delete a batch from the table, rewriting only the
+        buckets containing the keys (the removal twin of :meth:`merge`,
+        |keys|-bounded the same way). Keys absent from the table are a
+        no-op; the operation is idempotent under replay. A bucket the
+        delete empties loses its directory. Added for the corpus
+        build's late-decontamination retraction flow (r8 verdict task
+        4)."""
+        live = self._roll_forward()
+        if not live:
+            return  # table empty or never created — nothing to delete
         fresh = keys.select(*self.keys).distinct().withColumn(
             "_bucket", self._bucket_col()
         )
-        touched = sorted(
-            r._bucket for r in fresh.select("_bucket").distinct().collect()
-        )
+        have = self._by_bucket(live)
+        touched = [b for b in self._touched(fresh) if b in have]
         if not touched:
             return
-        existing = self._read_buckets(touched).withColumn(
-            "_bucket", self._bucket_col()
+        remaining = (
+            self._read_buckets(touched, live)
+            .join(fresh.select(*self.keys), self.keys, "left_anti")
+            .withColumn("_bucket", self._bucket_col())
         )
-        remaining = existing.join(
-            fresh.select(*self.keys), self.keys, "left_anti"
-        )
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        remaining.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-        # a bucket emptied by the delete writes no dir under tmp:
-        # _swap_buckets removes the live dir outright (swap in
-        # nothing), so emptied buckets don't accumulate as empty
-        # placeholder dirs in the table root — read()/merge() treat a
-        # missing bucket dir and an empty one identically, and a
-        # later merge that re-touches the bucket recreates it
-        self._swap_buckets(tmp, touched, allow_empty=True)
-
-    def _swap_buckets(
-        self, tmp: str, buckets: Sequence[int], allow_empty: bool = False
-    ) -> None:
-        """Atomically swap freshly-written bucket dirs from ``tmp``
-        into the table root (displaced buckets parked outside it).
-
-        ``allow_empty`` (the :meth:`delete` path): a touched bucket
-        with no dir under ``tmp`` was EMPTIED by the rewrite — remove
-        its live dir instead of leaving a stale or empty placeholder
-        (readers treat a missing bucket dir as empty; a later merge
-        recreates it). merge/compact never produce this case (every
-        bucket they touch carries at least the incoming rows), so
-        a missing src there is a contract violation, not a state."""
-        for b in buckets:
-            src = os.path.join(tmp, f"_bucket={b}")
-            dst = self._bucket_dir(b)
-            if not os.path.isdir(src):
-                if not allow_empty:
-                    raise AssertionError(
-                        f"_swap_buckets: bucket {b} missing from {tmp} "
-                        "outside the delete path"
-                    )
-                if os.path.isdir(dst):
-                    # park-then-remove, same crash discipline as the
-                    # swap: a crash after the rename is recovered by
-                    # _recover_partial_swaps (dst missing -> restore;
-                    # the replayed delete then empties it again)
-                    old = self._old_dir(b)
-                    os.rename(dst, old)
-                    shutil.rmtree(old)
-                continue
-            old = self._old_dir(b)  # parked OUTSIDE the table root
-            if os.path.isdir(dst):
-                os.rename(dst, old)
-                os.rename(src, dst)
-                shutil.rmtree(old)
-            else:
-                os.rename(src, dst)
-        shutil.rmtree(tmp)
+        drop = [f for b in touched for f in have[b]]
+        self._commit(live, remaining.repartition("_bucket"), drop)
 
     def _bucket_stats(self, b: int) -> tuple[int, int]:
-        """(parquet file count, total bytes) for one bucket dir."""
-        d = self._bucket_dir(b)
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        return len(files), sum(
-            os.path.getsize(os.path.join(d, f)) for f in files
-        )
+        """(parquet file count, total bytes) of one bucket."""
+        live = self._roll_forward()
+        files = self._by_bucket(live).get(b, [])
+        return len(files), sum(live[f] for f in files)
 
     def compact(
         self,
         max_files_per_bucket: int = 1,
         target_file_bytes: int | None = None,
     ) -> list[int]:
-        """Small-files maintenance: every incremental merge appends a
-        file set to each touched bucket, so a long-running table
-        accumulates files that degrade scan planning (one task per
-        tiny file at 100 TB). Rewrite each over-threshold bucket and
-        swap it atomically — same crash-safe swap and recovery path as
-        merge, so an interrupted compaction re-converges. Untouched
-        buckets are never opened. Returns the compacted bucket ids
+        """Small-files maintenance: every insert adds a file to each
+        touched bucket, so a long-running table accumulates files that
+        degrade scan planning (one task per tiny file at 100 TB).
+        Rewrite each over-threshold bucket in one version — the same
+        commit and roll-forward as merge, so an interrupted compaction
+        re-converges. Untouched buckets are never opened; sizes come
+        from the manifest. Returns the compacted bucket ids
         (driver-side scalars, <= n_buckets).
 
         ``target_file_bytes=None``: one file per bucket — the right
@@ -373,14 +360,11 @@ class ParquetMergeSink:
         file count exceeds that ideal PLUS ONE (the +1 hysteresis —
         a just-compacted bucket whose bytes shrank under
         recompression must not immediately re-trigger)."""
-        self._recover_partial_swaps()
-        if not self.exists():
-            return []
+        live = self._roll_forward()
+        have = self._by_bucket(live)
         want: dict[int, int] = {}  # bucket -> target file count
-        for b in range(self.n_buckets):
-            if not os.path.isdir(self._bucket_dir(b)):
-                continue
-            n_files, n_bytes = self._bucket_stats(b)
+        for b, files in have.items():
+            n_bytes = sum(live[f] for f in files)
             if target_file_bytes is None:
                 ideal, threshold = 1, max_files_per_bucket
             else:
@@ -388,13 +372,12 @@ class ParquetMergeSink:
                 # +1 hysteresis: a just-compacted bucket whose bytes
                 # shrank under recompression must not re-trigger
                 threshold = ideal + 1
-            if n_files > threshold:
+            if len(files) > threshold:
                 want[b] = ideal
         fat = sorted(want)
         if not fat:
             return []
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        df = self._read_buckets(fat).withColumn("_bucket", self._bucket_col())
+        df = self._read_buckets(fat, live).withColumn("_bucket", self._bucket_col())
         if target_file_bytes is None:
             out = df.repartition(len(fat), "_bucket")
         else:
@@ -416,21 +399,16 @@ class ParquetMergeSink:
                 .repartition(sum(want.values()), "_bucket", "_salt")
                 .drop("_salt")
             )
-        out.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-        self._swap_buckets(tmp, fat)
+        self._commit(live, out, [f for b in fat for f in have[b]])
         return fat
 
     def rebucket(self, new_n: int) -> None:
         """Bucket-count evolution: rewrite the WHOLE table into
         ``new_n`` hash buckets (a growing table's per-bucket working
         set eventually outgrows a core; a shrinking one wastes tasks).
-        Reuses the crash-safe sibling-swap discipline: the new layout
-        (with its meta) is fully written to a ``.rebucket-new`` sibling
-        first, the live root is parked as ``.rebucket-old``, the new
-        root is promoted, and ``_recover_partial_swaps`` re-converges
-        any interruption deterministically from whichever rename the
-        crash fell between. Rows are byte-identical — only the
-        directory a row lives in changes.
+        One version removes every old file and adds the new layout with
+        its bucket count, so a crash leaves either layout whole. Rows
+        are byte-identical — only the directory a row lives in changes.
 
         This is O(table) I/O by nature (every row changes bucket with
         probability ~1 - 1/max(old,new)); at lakehouse scale the same
@@ -438,34 +416,21 @@ class ParquetMergeSink:
         rewrite."""
         if new_n < 1:
             raise ValueError(f"new_n must be >= 1, got {new_n}")
-        self._recover_partial_swaps()
-        if not self.exists():
+        live = self._roll_forward()
+        if not live:
             self.n_buckets = new_n  # nothing on disk yet
             return
         if new_n == self.n_buckets:
             return
-        token = uuid.uuid4().hex[:8]
-        new_dir = f"{self.path}.rebucket-new-{token}"
-        old_dir = f"{self.path}.rebucket-old-{token}"
-        new_bucket = F.pmod(
-            F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(new_n)
-        ).cast("int")
-        (
-            self.read()
-            .withColumn("_bucket", new_bucket)
-            .repartition(min(new_n, 64), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(new_dir)
-        )
-        import json
-
-        with open(os.path.join(new_dir, self._META), "w") as f:
-            json.dump({"n_buckets": new_n}, f)
-        os.rename(self.path, old_dir)
-        os.rename(new_dir, self.path)
-        shutil.rmtree(old_dir)
+        table = self.read()
+        # the new count drives the bucket expression and the version; a
+        # failed commit leaves the old one, which the next roll-forward
+        # reads back
         self.n_buckets = new_n
+        out = table.withColumn("_bucket", self._bucket_col()).repartition(
+            min(new_n, 64), "_bucket"
+        )
+        self._commit(live, out, live)
 
 
 def pg_copy_sql(table: str, columns: Sequence[str]) -> str:

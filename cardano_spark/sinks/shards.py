@@ -26,10 +26,12 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cardano_spark.sources.objectstore import ObjectStore
 
 
 @dataclass
@@ -38,6 +40,23 @@ class ShardManifest:
     n_rows: int
     total_bytes: int
     shards: list[dict]  # [{file, rows, bytes}]
+
+
+def _write_manifest(spark: SparkSession, path: str, shards: list[dict]) -> ShardManifest:
+    """Publish the manifest over ``shards`` as ``_manifest.json``: write
+    a temp object, then rename it into place through the objectstore
+    seam (the FileSystem the shards ride), so a crash mid-write leaves
+    the previous manifest whole."""
+    manifest = ShardManifest(
+        n_shards=len(shards),
+        n_rows=sum(s["rows"] for s in shards),
+        total_bytes=sum(s["bytes"] for s in shards),
+        shards=shards,
+    )
+    store = ObjectStore(spark, path)
+    store.put("_manifest.json.tmp", json.dumps(asdict(manifest), indent=2).encode())
+    store.rename("_manifest.json.tmp", "_manifest.json")
+    return manifest
 
 
 def write_training_shards(
@@ -114,29 +133,7 @@ def write_training_shards(
         {"file": f, "rows": int(counts.get(f, 0)), "bytes": sizes[f]}
         for f in sorted(sizes)
     ]
-    manifest = ShardManifest(
-        n_shards=len(shards),
-        n_rows=sum(s["rows"] for s in shards),
-        total_bytes=sum(s["bytes"] for s in shards),
-        shards=shards,
-    )
-    payload = json.dumps(
-        {
-            "n_shards": manifest.n_shards,
-            "n_rows": manifest.n_rows,
-            "total_bytes": manifest.total_bytes,
-            "shards": manifest.shards,
-        },
-        indent=2,
-    ).encode()
-    # manifest rides the same FileSystem as the shards
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest.json")
-    out = fs.create(mpath, True)
-    try:
-        out.write(payload)
-    finally:
-        out.close()
-    return manifest
+    return _write_manifest(spark, path, shards)
 
 
 @dataclass
@@ -299,27 +296,7 @@ def write_training_shards_incremental(
                 "digest": digests[s],
             }
         )
-    manifest = ShardManifest(
-        n_shards=len(shards),
-        n_rows=sum(s["rows"] for s in shards),
-        total_bytes=sum(s["bytes"] for s in shards),
-        shards=shards,
-    )
-    payload = json.dumps(
-        {
-            "n_shards": manifest.n_shards,
-            "n_rows": manifest.n_rows,
-            "total_bytes": manifest.total_bytes,
-            "shards": manifest.shards,
-        },
-        indent=2,
-    ).encode()
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest.json")
-    out = fs.create(mpath, True)
-    try:
-        out.write(payload)
-    finally:
-        out.close()
+    manifest = _write_manifest(spark, path, shards)
     return IncrementalExportResult(
         manifest=manifest,
         n_rewritten=len(changed),
@@ -563,27 +540,7 @@ def write_training_shards_delta(
             "digest": recomputed[s],
         }
     shards = [entries[s] for s in sorted(entries)]
-    manifest = ShardManifest(
-        n_shards=len(shards),
-        n_rows=sum(s["rows"] for s in shards),
-        total_bytes=sum(s["bytes"] for s in shards),
-        shards=shards,
-    )
-    payload = json.dumps(
-        {
-            "n_shards": manifest.n_shards,
-            "n_rows": manifest.n_rows,
-            "total_bytes": manifest.total_bytes,
-            "shards": manifest.shards,
-        },
-        indent=2,
-    ).encode()
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest.json")
-    out = fs.create(mpath, True)
-    try:
-        out.write(payload)
-    finally:
-        out.close()
+    manifest = _write_manifest(spark, path, shards)
     return IncrementalExportResult(
         manifest=manifest,
         n_rewritten=len(changed),

@@ -30,6 +30,12 @@ from datetime import datetime, timezone
 from pyspark.sql import SparkSession
 
 
+#: bytes per py4j call in get/put. A py4j message over about 8 KiB
+#: waits ~40 ms on the socket (Nagle against delayed ACK; measured on
+#: local mode), so larger objects move in pieces that stay under it
+_PIECE = 4096
+
+
 @dataclass(frozen=True)
 class ObjectInfo:
     """One listed object (the reference's FileInfo,
@@ -55,8 +61,8 @@ class ObjectStore:
         # attribute walk; listing uses these once per object, so
         # resolve them once here
         self._Path = jvm.org.apache.hadoop.fs.Path
-        self._IOUtils = jvm.org.apache.commons.io.IOUtils
-        self._base_path = base.getPath() or ""
+        # qualified, so a relative base still strips from listed paths
+        self._base_path = self._fs.makeQualified(self._Path(self.base_uri)).toUri().getPath()
 
     def _jpath(self, rel: str):
         rel = rel.lstrip("/")
@@ -71,11 +77,42 @@ class ObjectStore:
     def put(self, rel: str, data: bytes) -> None:
         """Upload one object (upload_buffer,
         s3_file_explorer.py:18-20). Overwrites."""
-        out = self._fs.create(self._jpath(rel), True)
+        self._write(self._fs.create(self._jpath(rel), True), data)
+
+    def put_if_absent(self, rel: str, data: bytes) -> None:
+        """Create one object only if none has its name, else raise: the
+        commit point of a versioned manifest. The exclusive create is
+        atomic on HDFS and a check-then-create on the local
+        filesystem."""
+        self._write(self._fs.create(self._jpath(rel), False), data)
+
+    @staticmethod
+    def _write(out, data: bytes) -> None:
         try:
-            out.write(bytearray(data))
+            for i in range(0, len(data), _PIECE):
+                out.write(bytearray(data[i : i + _PIECE]))
         finally:
             out.close()
+
+    def rename(self, src: str, dst: str) -> None:
+        """Move one object onto ``dst``, replacing any object there and
+        creating ``dst``'s parent: the publish step of
+        write-temp-then-rename, and the move of a staged file into its
+        table directory. FileSystem.rename does not replace on every
+        filesystem, so a refused rename is redone as FileContext's
+        replacing rename: one atomic call on HDFS, while the local
+        filesystem deletes ``dst`` just before it."""
+        source, target = self._jpath(src), self._jpath(dst)
+        self._fs.mkdirs(target.getParent())
+        if self._fs.rename(source, target):
+            return
+        jvm = self.spark._jvm
+        opts = self.spark.sparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
+        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+        ctx = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            self._fs.getUri(), self.spark._jsc.hadoopConfiguration()
+        )
+        ctx.rename(source, target, opts)
 
     def get(self, rel: str) -> bytes:
         """Download one object fully into memory (download_to_buffer,
@@ -83,7 +120,7 @@ class ObjectStore:
         readers — this is the driver-side control-object path."""
         stream = self._fs.open(self._jpath(rel))
         try:
-            return bytes(self._IOUtils.toByteArray(stream))
+            return b"".join(iter(lambda: bytes(stream.readNBytes(_PIECE)), b""))
         finally:
             stream.close()
 
@@ -124,17 +161,20 @@ class ObjectStore:
         out: list[ObjectInfo] = []
         it = self._fs.listFiles(root, True)
         while it.hasNext():
-            st = it.next()
-            mod = datetime.fromtimestamp(
-                st.getModificationTime() / 1000.0, tz=timezone.utc
-            ).replace(tzinfo=None)
-            if modified_after is not None and mod <= modified_after:
-                continue
-            out.append(
-                ObjectInfo(
-                    path=self._rel(st.getPath()),
-                    modified=mod,
-                    size=st.getLen(),
-                )
-            )
+            info = self._info(it.next())
+            if modified_after is None or info.modified > modified_after:
+                out.append(info)
         return sorted(out, key=lambda o: o.path)
+
+    def glob(self, pattern: str) -> list[ObjectInfo]:
+        """Objects matching a glob pattern under the base URI, such as
+        ``_bucket=*/*.parquet``: one listing per directory the pattern
+        reaches, so a caller that knows its layout lists no more."""
+        found = self._fs.globStatus(self._jpath(pattern)) or []
+        return sorted((self._info(st) for st in found), key=lambda o: o.path)
+
+    def _info(self, st) -> ObjectInfo:
+        mod = datetime.fromtimestamp(
+            st.getModificationTime() / 1000.0, tz=timezone.utc
+        ).replace(tzinfo=None)
+        return ObjectInfo(path=self._rel(st.getPath()), modified=mod, size=st.getLen())

@@ -173,6 +173,35 @@ def test_incremental_export_rewrites_only_changed_shards(spark, tmp_path):
     assert m.n_rows == 60 and all("digest" in s for s in m.shards)
 
 
+def test_manifest_write_failure_keeps_previous_manifest(spark, tmp_path, monkeypatch):
+    """The manifest is published write-temp-then-rename: a crash after
+    the temp write leaves the previous manifest readable (an in-place
+    overwrite would leave it torn, and every later delta would raise)."""
+    import pytest
+
+    from cardano_spark.sinks.shards import write_training_shards_incremental
+    from cardano_spark.sources.objectstore import ObjectStore
+
+    dest = str(tmp_path / "inc")
+    schema = "doc_id long, text string"
+    df = spark.createDataFrame([(i, f"text {i}") for i in range(40)], schema)
+    first = write_training_shards_incremental(df, dest, "doc_id", 4).manifest
+
+    def crash(self, src, dst):
+        raise RuntimeError("injected crash before the rename")
+
+    monkeypatch.setattr(ObjectStore, "rename", crash)
+    grown = spark.createDataFrame([(i, f"text {i}") for i in range(60)], schema)
+    with pytest.raises(RuntimeError, match="injected"):
+        write_training_shards_incremental(grown, dest, "doc_id", 4)
+    assert os.path.exists(os.path.join(dest, "_manifest.json.tmp"))
+    assert read_manifest(dest) == first
+    assert read_manifest(dest, spark) == first
+    monkeypatch.undo()
+    assert write_training_shards_incremental(grown, dest, "doc_id", 4).manifest.n_rows == 60
+    assert read_manifest(dest).n_rows == 60
+
+
 def test_incremental_export_deletes_emptied_shards(spark, tmp_path):
     import os
 

@@ -299,43 +299,11 @@ def test_parquet_merge_sink_compact(spark, tmp_path):
     assert sink.compact() == []  # second pass: nothing left to do
 
 
-def test_parquet_merge_sink_recovers_interrupted_swap(spark, tmp_path):
-    """A crash between the two swap renames must not lose rows or
-    duplicate them: the parked bucket lives OUTSIDE the table root
-    (invisible to read()), and the next read/merge re-converges."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "t")
-    sink = ParquetMergeSink(spark, path, SCHEMA, ["k"], n_buckets=4)
-    sink.merge(spark.createDataFrame([(i, f"v{i}") for i in range(20)], SCHEMA))
-    want = {r.k: r.v for r in sink.read().collect()}
-
-    # crash case A: dst renamed away, new bucket never landed
-    bucket = next(d for d in os.listdir(path) if d.startswith("_bucket="))
-    b = int(bucket.split("=")[1])
-    parked = f"{path}.old-b{b}-deadbeef"
-    os.rename(os.path.join(path, bucket), parked)
-    assert {r.k: r.v for r in sink.read().collect()} == want  # restored
-    assert not os.path.isdir(parked)
-
-    # crash case B: swap completed but parked copy never deleted —
-    # the stale copy must NOT be readable (it sits outside the root)
-    shutil.copytree(os.path.join(path, bucket), f"{path}.old-b{b}-cafe0000")
-    assert {r.k: r.v for r in sink.read().collect()} == want
-    assert not os.path.isdir(f"{path}.old-b{b}-cafe0000")  # swept
-
-    # and a replayed merge after recovery stays idempotent
-    sink.merge(spark.createDataFrame([(3, "REPLAY"), (100, "new")], SCHEMA))
-    rows = {r.k: r.v for r in sink.read().collect()}
-    assert rows[3] == "v3" and rows[100] == "new" and len(rows) == 21
-
-
 def test_parquet_merge_sink_rewrites_only_touched_buckets(spark, tmp_path):
-    """Merge I/O must be O(touched buckets): bucket files whose keys
-    are disjoint from the incoming batch stay BYTE-IDENTICAL (never
-    re-read or rewritten) — the property that makes an incremental
-    merge into a 100 TB table affordable."""
+    """Insert I/O must be O(new rows): EVERY pre-existing data file
+    stays BYTE-IDENTICAL after an insert (the new rows land in new
+    files; only the manifest under `_log/` changes) — the property
+    that makes an incremental merge into a 100 TB table affordable."""
     import hashlib
     import os
 
@@ -344,8 +312,11 @@ def test_parquet_merge_sink_rewrites_only_touched_buckets(spark, tmp_path):
         for dirpath, _, files in os.walk(root):
             for f in files:
                 p = os.path.join(dirpath, f)
+                rel = os.path.relpath(p, root)
+                if rel.split(os.sep)[0] == "_log":
+                    continue
                 with open(p, "rb") as fh:
-                    out[os.path.relpath(p, root)] = hashlib.md5(fh.read()).hexdigest()
+                    out[rel] = hashlib.md5(fh.read()).hexdigest()
         return out
 
     path = str(tmp_path / "t")
@@ -353,20 +324,12 @@ def test_parquet_merge_sink_rewrites_only_touched_buckets(spark, tmp_path):
     sink.merge(spark.createDataFrame([(i, f"v{i}") for i in range(40)], SCHEMA))
     before = snapshot(path)
 
-    # incoming batch: one replayed key + one new key -> <=2 buckets touched
+    # incoming batch: one replayed key (a no-op) + one new key
     sink.merge(spark.createDataFrame([(3, "REPLAY"), (1000, "new")], SCHEMA))
     after = snapshot(path)
 
-    from pyspark.sql import functions as F
-
-    bucket_of = lambda k: spark.createDataFrame([(k,)], "k long").select(
-        F.pmod(F.xxhash64("k"), F.lit(8)).cast("int").alias("b")
-    ).first().b
-    touched = {f"_bucket={bucket_of(3)}", f"_bucket={bucket_of(1000)}"}
-
-    untouched_before = {p: h for p, h in before.items() if p.split(os.sep)[0] not in touched}
-    untouched_after = {p: h for p, h in after.items() if p.split(os.sep)[0] not in touched}
-    assert untouched_before and untouched_before == untouched_after
+    assert before and {p: after.get(p) for p in before} == before
+    assert len(after) > len(before)  # the new row went to a new file
 
     rows = {r.k: r.v for r in sink.read().collect()}
     assert rows[3] == "v3" and rows[1000] == "new" and len(rows) == 41
@@ -683,39 +646,6 @@ def test_rebucket_grows_table_byte_identical(spark, tmp_path):
         sink.rebucket(0)
 
 
-def test_rebucket_interrupted_swap_recovers(spark, tmp_path):
-    """Crash between the two whole-table renames (root parked as
-    .rebucket-old, new layout not yet promoted): the next read must
-    promote the completed new layout and adopt its bucket count."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "t")
-    sink = ParquetMergeSink(spark, path, SCHEMA, keys=["k"], n_buckets=2)
-    sink.merge(spark.createDataFrame([(i, f"v{i}") for i in range(20)], SCHEMA))
-    before = sorted(map(tuple, sink.read().collect()))
-
-    # manufacture the mid-rebucket crash state by hand: fully-written
-    # new layout sibling + parked old root, no live root
-    fresh = ParquetMergeSink(spark, path + ".stage", SCHEMA, ["k"], n_buckets=5)
-    fresh.merge(spark.createDataFrame([(i, f"v{i}") for i in range(20)], SCHEMA))
-    os.rename(path + ".stage", path + ".rebucket-new-deadbeef")
-    os.rename(path, path + ".rebucket-old-deadbeef")
-
-    recovered = ParquetMergeSink(spark, path, SCHEMA, keys=["k"], n_buckets=2)
-    assert sorted(map(tuple, recovered.read().collect())) == before
-    assert recovered.n_buckets == 5  # from the promoted layout's meta
-    assert not os.path.isdir(path + ".rebucket-old-deadbeef")
-    assert not os.path.isdir(path + ".rebucket-new-deadbeef")
-
-    # aborted-write state (root still live, orphan new sibling): the
-    # orphan is garbage-collected, the live root wins
-    shutil.copytree(path, path + ".rebucket-new-cafe")
-    again = ParquetMergeSink(spark, path, SCHEMA, keys=["k"])
-    assert sorted(map(tuple, again.read().collect())) == before
-    assert not os.path.isdir(path + ".rebucket-new-cafe")
-
-
 def test_compact_size_targeted(spark, tmp_path):
     """target_file_bytes splits a fat bucket into ~ceil(bytes/target)
     files instead of one; content unchanged."""
@@ -798,3 +728,183 @@ def test_cli_maintain_compact_and_rebucket(spark, tmp_path, capsys):
                 len([f for f in os.listdir(d) if f.endswith(".parquet")])
                 == 1
             )
+
+
+# --------------------------------------------------------------------------
+# Manifest commit protocol: crash points, the on-disk invariant, reads
+# --------------------------------------------------------------------------
+
+
+def _committed(path):
+    """The live file list of the table's latest version; at rest the
+    log holds exactly one version."""
+    import json
+
+    log = os.path.join(path, "_log")
+    names = sorted(n for n in os.listdir(log) if n.endswith(".json"))
+    assert len(names) == 1, names
+    with open(os.path.join(log, names[0])) as f:
+        return set(json.load(f)["files"]), int(names[0].split(".")[0])
+
+
+def _on_disk(path):
+    import glob
+
+    return {
+        os.path.relpath(p, path)
+        for p in glob.glob(os.path.join(path, "_bucket=*", "*.parquet"))
+    }
+
+
+def _state(sink):
+    """Rows, bucket count and number of committed files: compact
+    changes only the last."""
+    rows = sorted(map(tuple, sink.read().collect()))
+    return rows, sink.n_buckets, len(_committed(sink.path)[0])
+
+
+_SINK_OPS = {
+    "insert": lambda s, spark: s.merge(
+        spark.createDataFrame([(i, f"n{i}") for i in range(25, 45)], SCHEMA)
+    ),
+    "upsert": lambda s, spark: s.merge(
+        spark.createDataFrame([(i, f"u{i}") for i in range(20, 40)], SCHEMA),
+        mode="upsert",
+    ),
+    "delete": lambda s, spark: s.delete(
+        spark.createDataFrame([(i, "x") for i in range(0, 30, 3)], SCHEMA)
+    ),
+    "compact": lambda s, spark: s.compact(),
+    "rebucket": lambda s, spark: s.rebucket(5),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_SINK_OPS))
+def test_merge_sink_crash_at_every_object_store_call(spark, tmp_path, monkeypatch, op):
+    """For every k, the k-th ObjectStore mutation of the operation
+    raises. A reopened table then reads as the state before the
+    operation or the state after it, its bucket directories hold
+    exactly the committed files, and a replay converges to the
+    uninterrupted run."""
+    import shutil
+
+    from cardano_spark.sources.objectstore import ObjectStore
+
+    base = str(tmp_path / "base")
+    sink = ParquetMergeSink(spark, base, SCHEMA, ["k"], n_buckets=3)
+    for lo in (0, 15):  # two inserts: several files per bucket
+        sink.merge(spark.createDataFrame([(i, f"v{i}") for i in range(lo, lo + 15)], SCHEMA))
+    before = _state(sink)
+
+    calls = [0]
+    crash_at = [0]
+    for name in ("put", "put_if_absent", "rename", "delete"):
+        def wrapped(self, *a, _orig=getattr(ObjectStore, name)):
+            calls[0] += 1
+            if calls[0] == crash_at[0]:
+                raise RuntimeError(f"injected crash at call {calls[0]}")
+            return _orig(self, *a)
+
+        monkeypatch.setattr(ObjectStore, name, wrapped)
+
+    def run(path, k):
+        shutil.copytree(base, path)
+        calls[0], crash_at[0] = 0, k
+        table = ParquetMergeSink(spark, path, SCHEMA, ["k"], n_buckets=3)
+        try:
+            _SINK_OPS[op](table, spark)
+        finally:
+            crash_at[0] = 0
+        return table
+
+    clean = run(str(tmp_path / "clean"), 0)
+    n_calls, after = calls[0], _state(clean)
+    assert n_calls >= 2 and after != before
+    for k in range(1, n_calls + 1):
+        path = str(tmp_path / f"crash{k}")
+        with pytest.raises(RuntimeError, match="injected"):
+            run(path, k)
+        reopened = ParquetMergeSink(spark, path, SCHEMA, ["k"], n_buckets=3)
+        assert _state(reopened) in (before, after), k
+        assert _on_disk(path) == _committed(path)[0], k
+        _SINK_OPS[op](reopened, spark)
+        assert _state(reopened) == after, k
+        assert _on_disk(path) == _committed(path)[0], k
+
+
+def test_merge_sink_disk_matches_manifest_after_every_mutation(spark, tmp_path):
+    """When any mutation returns, the `_bucket=*/*.parquet` files on
+    disk are exactly the latest version's list: no file left over from
+    a rewrite, none uncommitted, and no stage directory."""
+    path = str(tmp_path / "t")
+    sink = ParquetMergeSink(spark, path, SCHEMA, ["k"], n_buckets=4)
+    steps = [
+        lambda: sink.merge(spark.createDataFrame([(i, f"v{i}") for i in range(30)], SCHEMA)),
+        lambda: sink.merge(spark.createDataFrame([(i, f"w{i}") for i in range(20, 50)], SCHEMA)),
+        lambda: sink.compact(),
+        lambda: sink.merge(spark.createDataFrame([(5, "u"), (60, "u")], SCHEMA), mode="upsert"),
+        lambda: sink.delete(spark.createDataFrame([(i, "x") for i in range(10)], SCHEMA)),
+        lambda: sink.rebucket(6),
+        lambda: sink.merge(spark.createDataFrame([(7, "back")], SCHEMA)),
+    ]
+    version = -1
+    for step in steps:
+        step()
+        files, v = _committed(path)
+        assert _on_disk(path) == files and v > version
+        assert not os.path.exists(os.path.join(path, "_stage"))
+        version = v
+    assert sink.read().count() == 42
+
+
+def test_merge_sink_read_of_many_files_runs_no_spark_job(spark, tmp_path, count_jobs):
+    """read() scans the bucket directories, not the committed file
+    list: past 32 explicit paths Spark would list them in a job. A
+    table with more than 32 data files and more than 8 versions still
+    reads with zero jobs."""
+    path = str(tmp_path / "t")
+    sink = ParquetMergeSink(spark, path, SCHEMA, ["k"], n_buckets=4)
+    for batch in range(10):
+        sink.merge(
+            spark.createDataFrame([(batch * 100 + i, "v") for i in range(40)], SCHEMA)
+        )
+    files, version = _committed(path)
+    assert len(files) > 32 and version > 8
+    df, jobs = count_jobs(sink.read)
+    assert jobs == 0
+    assert df.count() == 400
+
+
+def test_merge_sink_adopts_a_table_written_before_the_manifest(spark, tmp_path):
+    """A table from before the manifest (bucket directories plus
+    `_table_meta.json`, no `_log/`) opens with its own bucket count,
+    reads as its directories, and its first mutation adopts the files
+    it finds into a version without rewriting them."""
+    import hashlib
+    import json
+
+    path = str(tmp_path / "t")
+    rows = [(i, f"v{i}") for i in range(30)]
+    (
+        spark.createDataFrame(rows, SCHEMA)
+        .withColumn("_bucket", F.pmod(F.xxhash64("k"), F.lit(5)).cast("int"))
+        .write.partitionBy("_bucket")
+        .parquet(path)
+    )
+    with open(os.path.join(path, "_table_meta.json"), "w") as f:
+        json.dump({"n_buckets": 5}, f)
+    old = {p: hashlib.md5(open(os.path.join(path, p), "rb").read()).hexdigest() for p in _on_disk(path)}
+
+    sink = ParquetMergeSink(spark, path, SCHEMA, ["k"])  # stale default 16
+    assert sink.n_buckets == 5
+    assert sorted(map(tuple, sink.read().collect())) == rows
+    assert not os.path.exists(os.path.join(path, "_log"))  # reads commit nothing
+
+    sink.merge(spark.createDataFrame([(3, "dup"), (100, "new")], SCHEMA))
+    files, _ = _committed(path)
+    assert set(old) < files and _on_disk(path) == files
+    for p, h in old.items():
+        assert hashlib.md5(open(os.path.join(path, p), "rb").read()).hexdigest() == h
+    reopened = ParquetMergeSink(spark, path, SCHEMA, ["k"])
+    assert reopened.n_buckets == 5
+    assert {r.k: r.v for r in reopened.read().collect()} == {**dict(rows), 100: "new"}
