@@ -52,6 +52,7 @@ class CardanoLake:
         self.s3_db_wm = s3_to_db_store(spark, os.path.join(root, "_state"))
         #: per-table row counts observed during the last E2 load (A5)
         self.last_load_counts: dict[str, int] = {}
+        self._sinks: dict[str, ParquetMergeSink] = {}
 
     def raw_zone(self, entity: str) -> str:
         return os.path.join(self.root, "cardano", entity, "raw")
@@ -60,12 +61,17 @@ class CardanoLake:
         return os.path.join(self.root, "tables", table)
 
     def sink(self, table: str) -> ParquetMergeSink:
-        return ParquetMergeSink(
-            self.spark,
-            self.table_path(table),
-            schemas.TARGET_SCHEMAS[table],
-            schemas.PRIMARY_KEYS[table],
-        )
+        """The table's one sink on this lake. Every read and mutation
+        rolls the table forward first, so a kept sink stays current
+        without paying the constructor's roll-forward per call."""
+        if table not in self._sinks:
+            self._sinks[table] = ParquetMergeSink(
+                self.spark,
+                self.table_path(table),
+                schemas.TARGET_SCHEMAS[table],
+                schemas.PRIMARY_KEYS[table],
+            )
+        return self._sinks[table]
 
 
 # --------------------------------------------------------------------------

@@ -797,8 +797,18 @@ def build_corpus_incremental(
       — shard membership is a content hash, the touched shard
       directories are read back partition-pruned, and the manifest
       digests fold invertibly from the delta (cross-checked against a
-      recompute over the touched content). READS and writes are both
-      |new|-bounded; no per-increment corpus scan remains.
+      recompute over the touched content). The WRITES are
+      |new|-bounded. Three READS still grow with the corpus: the
+      exact-dedup probe's distinct over every seen digest, the
+      near-dup probe's scan of the whole band index, and the audit's
+      count of the survivor table (ROADMAP item 3).
+
+    Each intermediate runs once per batch: the arriving batch, the
+    exact-dedup frame, the near-dup frame and the kept rows are each a
+    lazy ``localCheckpoint`` that its one audit count materializes
+    (the arrival count and the next watermark come from one
+    count+max row), so the pair search and the gates never re-run for
+    a later count, merge or export.
 
     CONVERGENCE CONTRACT (pinned in tests/test_corpus_pipeline.py,
     the q136 discipline): after any sequence of arrival batches, the
@@ -881,11 +891,17 @@ def build_corpus_incremental(
     batch = new_docs if wm is None else new_docs.filter(F.col("doc_id") > wm)
     if normalize:
         batch = batch.withColumn("text", CU.normalize_text(F.col("text")))
-    # lazy + count = one pass (the count materializes the cut; the
-    # batch lineage is a literal-watermark filter over the caller's
-    # frame, so nothing it reads can change before the count)
+    # lazy + one aggregate = one pass: the count+max row materializes
+    # the cut (its lineage is a literal-watermark filter over the
+    # caller's frame, so nothing it reads can change before then) and
+    # yields the next watermark. The watermark is the max ARRIVING id:
+    # docs a later stage drops (paragraph dedup can drop all of them)
+    # count as processed, as in the batch twin.
     batch = batch.localCheckpoint(eager=False)
-    n_arrived = batch.count()
+    arrived = batch.agg(
+        F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("m")
+    ).collect()[0]
+    n_arrived = int(arrived["n"])
 
     shingles = TX.distinct_tokens(F.coalesce(F.col("text"), F.lit("")))
     seen_schema = batch.withColumn("_digest", F.md5("text")).schema
@@ -1231,7 +1247,11 @@ def build_corpus_incremental(
         existing_index=index,
     )
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    near_new = exact_new.join(dropped, "doc_id", "left_anti")
+    # lazy + count: the pair search runs once, here; every later stage
+    # reads the checkpoint
+    near_new = exact_new.join(dropped, "doc_id", "left_anti").localCheckpoint(
+        eager=False
+    )
     n_near = near_new.count()
 
     # semantic dedup (optional): q190's frozen-model serving as a
@@ -1321,7 +1341,7 @@ def build_corpus_incremental(
             ),
             "doc_id",
             "left_anti",
-        )
+        ).localCheckpoint(eager=False)
         n_semantic = near_new.count()
         sem_version = int(mv)
         # q192 drift check on this batch vs the model it was served
@@ -1429,13 +1449,17 @@ def build_corpus_incremental(
                 F.col("contamination") <= F.lit(float(contamination_max))
             ).select("doc_id")
             near_new = near_new.join(clean_ids, "doc_id", "left_semi")
-    n_decontam = near_new.count()
+        near_new = near_new.localCheckpoint(eager=False)
+        n_decontam = near_new.count()
+    else:
+        # no decontamination stage: the frame is the one counted last
+        n_decontam = n_semantic if embeddings is not None else n_near
 
     # quality gate (shared q30 formula + token floor; optional Gopher;
     # zero-token docs — possible after span excision — guarded out
     # before the formula's division, same as the batch gate; the SAME
     # _quality_gate definition re-evaluates cut-mode retractions)
-    kept_new = _quality_gate(near_new).localCheckpoint(eager=True)
+    kept_new = _quality_gate(near_new).localCheckpoint(eager=False)
     n_quality = kept_new.count()
 
     # late-decontamination retraction: computed against the PRE-batch
@@ -1533,7 +1557,7 @@ def build_corpus_incremental(
     # post-retraction state: the audit's survivor total must reflect
     # the delete/rewrite that just landed
     survivors = surv_sink.read()
-    new_wm = int(batch.agg(F.max("doc_id").alias("m")).collect()[0]["m"])
+    new_wm = int(arrived["m"])
     wm_store.upsert("corpus", new_wm)
     if sem_refresh_exec is not None:
         # the deferred model swap — see the semantic stage's

@@ -27,9 +27,11 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import asdict, dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cardano_spark.sources.objectstore import ObjectStore
 
@@ -42,21 +44,67 @@ class ShardManifest:
     shards: list[dict]  # [{file, rows, bytes}]
 
 
-def _write_manifest(spark: SparkSession, path: str, shards: list[dict]) -> ShardManifest:
-    """Publish the manifest over ``shards`` as ``_manifest.json``: write
-    a temp object, then rename it into place through the objectstore
-    seam (the FileSystem the shards ride), so a crash mid-write leaves
-    the previous manifest whole."""
+def _write_manifest(store: ObjectStore, shards: list[dict]) -> ShardManifest:
+    """Publish the manifest over ``shards`` as ``_manifest.json`` under
+    the export's ``store``: write a temp object, then rename it into
+    place, so a crash mid-write leaves the previous manifest whole."""
     manifest = ShardManifest(
         n_shards=len(shards),
         n_rows=sum(s["rows"] for s in shards),
         total_bytes=sum(s["bytes"] for s in shards),
         shards=shards,
     )
-    store = ObjectStore(spark, path)
     store.put("_manifest.json.tmp", json.dumps(asdict(manifest), indent=2).encode())
     store.rename("_manifest.json.tmp", "_manifest.json")
     return manifest
+
+
+def _shard_of(key_col: str, n_shards: int) -> Column:
+    """The content shard of a row: ``md5_long(key) pmod n_shards``."""
+    from cardano_spark.functions.hashing import md5_long
+
+    return F.pmod(md5_long(F.col(key_col).cast("string")), F.lit(n_shards)).cast("int")
+
+
+def _row_hash(cols: list[str]) -> Column:
+    """The per-row content hash ``_rh`` over the data columns."""
+    from cardano_spark.functions.hashing import md5_long
+
+    return md5_long(F.to_json(F.struct(*[F.col(c) for c in cols])))
+
+
+def _digests(df: DataFrame) -> dict[str, dict[int, dict]]:
+    """Content digests of a staged frame per ``_kind``, then per
+    ``_shard``, in one bounded collect (one row per kind and shard).
+
+    Four independent signals per shard (xor, 2^20-modular sum,
+    full-width 2^63-modular sum, count): a content change slipping
+    past ALL FOUR would need simultaneous collisions in each — margin
+    against the (already negligible) chance of a silent skipped
+    rewrite leaving manifest digests that match data never rewritten.
+    The wide sum runs in decimal(38,0) because ANSI-mode int64 sum
+    raises on overflow."""
+    out: dict[str, dict[int, dict]] = {}
+    for r in (
+        df.groupBy("_kind", "_shard")
+        .agg(
+            F.expr("bit_xor(_rh)").alias("xor"),
+            F.sum(F.col("_rh") % F.lit(1048576)).alias("msum"),
+            F.expr(
+                "cast(sum(cast(_rh as decimal(38,0)))"
+                " % 9223372036854775807 as long)"
+            ).alias("wsum"),
+            F.count(F.lit(1)).alias("rows"),
+        )
+        .collect()
+    ):
+        out.setdefault(r["_kind"], {})[int(r["_shard"])] = {
+            "xor": int(r["xor"]),
+            "msum": int(r["msum"]),
+            "wsum": int(r["wsum"]),
+            "rows": int(r["rows"]),
+        }
+    return out
 
 
 def write_training_shards(
@@ -133,7 +181,7 @@ def write_training_shards(
         {"file": f, "rows": int(counts.get(f, 0)), "bytes": sizes[f]}
         for f in sorted(sizes)
     ]
-    return _write_manifest(spark, path, shards)
+    return _write_manifest(ObjectStore(spark, path), shards)
 
 
 @dataclass
@@ -208,53 +256,21 @@ def write_training_shards_incremental(
 
     Returns the updated manifest (shards carry their digests) plus
     the rewrite accounting."""
-    from cardano_spark.functions.hashing import md5_long
-
     spark = df.sparkSession
-    cols = df.columns
-    staged = df.withColumn(
-        "_shard",
-        F.pmod(md5_long(F.col(key_col).cast("string")), F.lit(n_shards))
-        .cast("int"),
-    ).withColumn(
-        "_rh", md5_long(F.to_json(F.struct(*[F.col(c) for c in cols])))
+    staged = df.withColumn("_shard", _shard_of(key_col, n_shards)).withColumn(
+        "_rh", _row_hash(df.columns)
     )
-    # four independent signals per shard (xor, 2^20-modular sum,
-    # full-width 2^63-modular sum, count): a content change slipping
-    # past ALL FOUR would need simultaneous collisions in each —
-    # margin against the (already negligible) chance of a silent
-    # skipped rewrite leaving manifest digests that match data never
-    # rewritten. The wide sum runs in decimal(38,0) because ANSI-mode
-    # int64 sum raises on overflow.
-    digests = {
-        int(r["_shard"]): {
-            "xor": int(r["xor"]),
-            "msum": int(r["msum"]),
-            "wsum": int(r["wsum"]),
-            "rows": int(r["rows"]),
-        }
-        for r in staged.groupBy("_shard")
-        .agg(
-            F.expr("bit_xor(_rh)").alias("xor"),
-            F.sum(F.col("_rh") % F.lit(1048576)).alias("msum"),
-            F.expr(
-                "cast(sum(cast(_rh as decimal(38,0)))"
-                " % 9223372036854775807 as long)"
-            ).alias("wsum"),
-            F.count(F.lit(1)).alias("rows"),
-        )
-        .collect()
-    }
+    digests = _digests(staged.withColumn("_kind", F.lit("all"))).get("all", {})
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    store = ObjectStore(spark, path)
     old: dict[int, dict] = {}
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest.json")):
-        m = read_manifest(path, spark)
-        for sh in m.shards:
-            if "shard_id" in sh and "digest" in sh:
-                old[int(sh["shard_id"])] = sh["digest"]
+    try:
+        previous = _read_manifest(store).shards
+    except FileNotFoundError:
+        previous = []
+    for sh in previous:
+        if "shard_id" in sh and "digest" in sh:
+            old[int(sh["shard_id"])] = sh["digest"]
 
     changed = sorted(
         s for s, d in digests.items() if old.get(s) != d
@@ -275,18 +291,13 @@ def write_training_shards_incremental(
             writer = writer.option("maxRecordsPerFile", str(max_rows_per_file))
         writer.parquet(path)
     for s in stale:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_shard={s}"), True)
+        store.delete(f"_shard={s}")
 
     # manifest: per-shard dir sizes via the FileSystem, digests from
     # this run's aggregate (rows were counted distributed above)
     shards = []
     for s in sorted(digests):
-        spath = jvm.org.apache.hadoop.fs.Path(f"{path}/_shard={s}")
-        nbytes = (
-            int(fs.getContentSummary(spath).getLength())
-            if fs.exists(spath)
-            else 0
-        )
+        nbytes = store.size(f"_shard={s}") if store.exists(f"_shard={s}") else 0
         shards.append(
             {
                 "file": f"_shard={s}",
@@ -296,7 +307,7 @@ def write_training_shards_incremental(
                 "digest": digests[s],
             }
         )
-    manifest = _write_manifest(spark, path, shards)
+    manifest = _write_manifest(store, shards)
     return IncrementalExportResult(
         manifest=manifest,
         n_rewritten=len(changed),
@@ -343,25 +354,47 @@ def write_training_shards_delta(
     updated corpus (pinned by pytest), so the two exporters are
     interchangeable per run.
 
+    Cost: one manifest get, then at most four Spark actions (five
+    Spark jobs for an insert-only delta, pinned in
+    tests/test_arrival_batch_jobs.py):
+
+    - a ``groupBy(_shard)`` digest collect over the upserts: it gives
+      the inserted digests, its keys are the touched shards, and it
+      materializes the lazily checkpointed upserts;
+    - with ``delete_keys``, a distinct collect of their shards;
+    - one shuffle by shard of a tagged union of the upserts, the
+      delete keys and the touched shards' old rows; a window over
+      each key marks the old rows an upsert or delete replaces, and
+      one ``groupBy(_kind, _shard)`` collect gives the removed digests
+      and the recomputed digests of the new content together;
+    - the dynamic-partition overwrite of the changed shards, which
+      needs no shuffle of its own: the content is already clustered
+      by shard.
+
+    Two checkpoints stay. The tagged content is checkpointed because
+    the write overwrites the very directories it was read from:
+    re-reading them during the write would see a half-replaced shard.
+    The upserts are checkpointed so that the inserted digests, the
+    recompute and the written rows come from one evaluation of the
+    caller's lineage.
+
     Requires an existing export (manifest with per-shard digests) at
     ``path`` whose ``n_shards`` matches — the first export of a corpus
     is full by definition. Reference analogue: the watermark-bounded
     per-batch upload in s3_to_db_cardano_blocks_pipeline.py:64-127 —
     work proportional to the batch, never the table."""
-    from cardano_spark.functions.hashing import md5_long
-
     spark = upserts.sparkSession
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest.json")):
+    store = ObjectStore(spark, path)
+    try:
+        manifest = _read_manifest(store)
+    except FileNotFoundError:
         raise ValueError(
             "write_training_shards_delta needs an existing export "
             f"(no _manifest.json under {path!r}); run the full "
             "exporter for the first batch"
-        )
+        ) from None
     old: dict[int, dict] = {}
-    for sh in read_manifest(path, spark).shards:
+    for sh in manifest.shards:
         if "shard_id" not in sh or "digest" not in sh:
             raise ValueError(
                 "manifest lacks per-shard digests (written by the "
@@ -372,98 +405,76 @@ def write_training_shards_delta(
 
     cols = upserts.columns  # canonical data-column order for _rh
 
-    def staged(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "_shard",
-            F.pmod(md5_long(F.col(key_col).cast("string")), F.lit(n_shards))
-            .cast("int"),
-        ).withColumn(
-            "_rh", md5_long(F.to_json(F.struct(*[F.col(c) for c in cols])))
-        )
-
-    def digest_rows(df: DataFrame) -> dict[int, dict]:
-        return {
-            int(r["_shard"]): {
-                "xor": int(r["xor"]),
-                "msum": int(r["msum"]),
-                "wsum": int(r["wsum"]),
-                "rows": int(r["rows"]),
-            }
-            # bounded: one row per TOUCHED shard (<= |delta|, <= n_shards)
-            for r in df.groupBy("_shard")
-            .agg(
-                F.expr("bit_xor(_rh)").alias("xor"),
-                F.sum(F.col("_rh") % F.lit(1048576)).alias("msum"),
-                F.expr(
-                    "cast(sum(cast(_rh as decimal(38,0)))"
-                    " % 9223372036854775807 as long)"
-                ).alias("wsum"),
-                F.count(F.lit(1)).alias("rows"),
-            )
-            .collect()
-        }
-
-    ups = staged(upserts).localCheckpoint(eager=True)
-    dels = (
-        delete_keys.select(F.col(key_col))
-        .withColumn(
-            "_shard",
-            F.pmod(md5_long(F.col(key_col).cast("string")), F.lit(n_shards))
-            .cast("int"),
-        )
-        if delete_keys is not None
-        else None
+    ups = (
+        upserts.withColumn("_shard", _shard_of(key_col, n_shards))
+        .withColumn("_rh", _row_hash(cols))
+        .localCheckpoint(eager=False)
     )
-    # touched shard ids: bounded collect (<= |delta| distinct shards)
-    touched = {
-        int(r["_shard"]) for r in ups.select("_shard").distinct().collect()
-    }
-    if dels is not None:
+    ins_d = _digests(ups.withColumn("_kind", F.lit("ins"))).get("ins", {})
+    touched = set(ins_d)
+    dels = None
+    if delete_keys is not None:
+        dels = delete_keys.select(key_col).withColumn(
+            "_shard", _shard_of(key_col, n_shards)
+        )
+        # bounded collect (<= |delta| distinct shards)
         touched |= {
             int(r["_shard"])
             for r in dels.select("_shard").distinct().collect()
         }
     touched = sorted(touched)
     if not touched:
-        m = read_manifest(path, spark)
         return IncrementalExportResult(
-            manifest=m, n_rewritten=0, n_deleted=0, rewritten=[]
+            manifest=manifest, n_rewritten=0, n_deleted=0, rewritten=[]
         )
 
-    # partition-pruned read: only the touched _shard=N directories are
-    # opened (verified by the pruning test) — the |new|-bounded term
-    # that replaces the old exporter's two corpus scans
+    # One shuffle by shard brings each touched shard's old rows, its
+    # upserts and its deletes together (a key's rows share its shard).
+    # An old row is removed iff its key is upserted or deleted; the
+    # kept old rows and the upserts are the new shard content.
+    parts = [ups.withColumn("_kind", F.lit("new"))]
+    if dels is not None:
+        parts.append(dels.withColumn("_kind", F.lit("del")))
     existing_touched = [s for s in touched if s in old]
     if existing_touched:
-        old_rows = (
-            spark.read.parquet(path)
-            .filter(F.col("_shard").isin(existing_touched))
-            .select(*cols, "_shard")
-            .withColumn(
-                "_rh",
-                md5_long(F.to_json(F.struct(*[F.col(c) for c in cols]))),
-            )
+        # partition-pruned read: only the touched _shard=N directories
+        # are opened (verified by the pruning test). The schema is
+        # given, so no job infers it from a footer.
+        schema = T.StructType(
+            [*upserts.schema.fields, T.StructField("_shard", T.IntegerType())]
         )
-        gone_keys = ups.select(F.col(key_col))
-        if dels is not None:
-            gone_keys = gone_keys.unionByName(dels.select(F.col(key_col)))
-        removed = old_rows.join(
-            gone_keys.distinct(), key_col, "left_semi"
-        ).localCheckpoint(eager=True)
-        kept_old = old_rows.join(gone_keys.distinct(), key_col, "left_anti")
-    else:
-        removed = None
-        kept_old = None
+        parts.append(
+            spark.read.schema(schema)
+            .parquet(path)
+            .filter(F.col("_shard").isin(existing_touched))
+            .withColumn("_rh", _row_hash(cols))
+            .withColumn("_kind", F.lit("old"))
+        )
+    rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    replaced = F.max((F.col("_kind") != F.lit("old")).cast("int")).over(
+        Window.partitionBy("_shard", key_col)
+    )
+    # Checkpointed because the write below overwrites the very shard
+    # directories this content was read from. The digest collect
+    # materializes it; the write reads the checkpoint, not the files.
+    tagged = (
+        rows.repartition("_shard")
+        .withColumn(
+            "_kind",
+            F.when(F.col("_kind") != F.lit("old"), F.col("_kind"))
+            .when(replaced == 1, F.lit("rem"))
+            .otherwise(F.lit("new")),
+        )
+        .filter(F.col("_kind") != F.lit("del"))
+        .localCheckpoint(eager=False)
+    )
+    both = _digests(tagged)
+    rem_d, recomputed = both.get("rem", {}), both.get("new", {})
+    new_content = tagged.filter(F.col("_kind") == F.lit("new"))
 
-    new_content = (
-        ups if kept_old is None else kept_old.unionByName(ups)
-    ).localCheckpoint(eager=True)
-
-    # digests two ways: recompute over the new touched content, and
-    # fold old-manifest digests with the removed/inserted row digests
-    recomputed = digest_rows(new_content)
-    rem_d = digest_rows(removed) if removed is not None else {}
-    ins_d = digest_rows(ups)
+    # digests two ways: the recompute over the new touched content
+    # above, and the old-manifest digests folded with the removed and
+    # inserted row digests
     M = 9223372036854775807
     zero = {"xor": 0, "msum": 0, "wsum": 0, "rows": 0}
     folded: dict[int, dict] = {}
@@ -505,7 +516,7 @@ def write_training_shards_delta(
                 F.col("_shard").isin([int(s) for s in changed])
             )
             .select(*cols, "_shard")
-            .repartition(len(changed), F.col("_shard"))
+            # already clustered by shard: one file per shard, no shuffle
             .sortWithinPartitions("_shard", key_col)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -517,30 +528,23 @@ def write_training_shards_delta(
             )
         writer.parquet(path)
     for s in emptied:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_shard={s}"), True)
+        store.delete(f"_shard={s}")
 
-    # manifest: untouched entries verbatim, touched entries refreshed
+    # manifest: untouched and unchanged entries verbatim, rewritten
+    # entries refreshed, emptied entries gone
     entries: dict[int, dict] = {
-        s: dict(e) for s, e in old.items() if s not in touched
+        s: e for s, e in old.items() if s not in emptied
     }
-    for s in touched:
-        if recomputed.get(s) is None:
-            continue  # emptied — gone from the manifest
-        spath = jvm.org.apache.hadoop.fs.Path(f"{path}/_shard={s}")
-        nbytes = (
-            int(fs.getContentSummary(spath).getLength())
-            if fs.exists(spath)
-            else 0
-        )
+    for s in changed:
         entries[s] = {
             "file": f"_shard={s}",
             "shard_id": s,
             "rows": recomputed[s]["rows"],
-            "bytes": nbytes,
+            "bytes": store.size(f"_shard={s}"),
             "digest": recomputed[s],
         }
     shards = [entries[s] for s in sorted(entries)]
-    manifest = _write_manifest(spark, path, shards)
+    manifest = _write_manifest(store, shards)
     return IncrementalExportResult(
         manifest=manifest,
         n_rewritten=len(changed),
@@ -551,20 +555,20 @@ def write_training_shards_delta(
 
 def read_manifest(path: str, spark: SparkSession | None = None) -> ShardManifest:
     """Read ``_manifest.json``; pass ``spark`` for non-local schemes
-    (the Hadoop FileSystem route), plain ``open`` otherwise."""
+    (the Hadoop FileSystem route), plain ``open`` otherwise. A missing
+    manifest raises :class:`FileNotFoundError` on either route."""
     if spark is not None:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest.json")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        stream = fs.open(jpath)
-        try:
-            raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
-        m = json.loads(raw.decode())
-    else:
-        with open(os.path.join(path, "_manifest.json")) as fh:
-            m = json.load(fh)
+        return _read_manifest(ObjectStore(spark, path))
+    with open(os.path.join(path, "_manifest.json"), "rb") as fh:
+        return _parse_manifest(fh.read())
+
+
+def _read_manifest(store: ObjectStore) -> ShardManifest:
+    return _parse_manifest(store.get("_manifest.json"))
+
+
+def _parse_manifest(raw: bytes) -> ShardManifest:
+    m = json.loads(raw)
     return ShardManifest(
         n_shards=m["n_shards"],
         n_rows=m["n_rows"],

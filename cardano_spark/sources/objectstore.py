@@ -27,6 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -117,8 +118,15 @@ class ObjectStore:
     def get(self, rel: str) -> bytes:
         """Download one object fully into memory (download_to_buffer,
         s3_file_explorer.py:22-29). For bulk data use the Spark
-        readers — this is the driver-side control-object path."""
-        stream = self._fs.open(self._jpath(rel))
+        readers — this is the driver-side control-object path. A
+        missing object raises :class:`FileNotFoundError`, so a caller
+        needs no ``exists`` round trip first."""
+        try:
+            stream = self._fs.open(self._jpath(rel))
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+                raise FileNotFoundError(f"{self.base_uri}/{rel}") from None
+            raise
         try:
             return b"".join(iter(lambda: bytes(stream.readNBytes(_PIECE)), b""))
         finally:
@@ -126,6 +134,10 @@ class ObjectStore:
 
     def exists(self, rel: str) -> bool:
         return self._fs.exists(self._jpath(rel))
+
+    def size(self, rel: str) -> int:
+        """Bytes of one object, or of every object under a prefix."""
+        return int(self._fs.getContentSummary(self._jpath(rel)).getLength())
 
     def delete(self, rel: str) -> bool:
         return self._fs.delete(self._jpath(rel), True)

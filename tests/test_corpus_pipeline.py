@@ -1793,3 +1793,38 @@ def test_incremental_semantic_model_init_self_heals(spark, tmp_path):
     model = spark.read.parquet(f"{dest}/_state/semantic_model")
     assert model.count() > 0
     assert b2.n_after_semantic < b2.n_after_neardup
+
+
+def test_build_corpus_incremental_fully_claimed_paragraph_batch_advances(
+    spark, tmp_path
+):
+    """A batch whose every document is fully claimed by earlier
+    paragraphs drops whole at the paragraph stage. The watermark still
+    advances to the max arriving id (dropped docs count as processed,
+    as in the batch twin), the survivors stay as they were, and a
+    replay of the batch is a no-op."""
+    from cardano_spark.pipelines.corpus import build_corpus_incremental
+
+    schema = "doc_id long, text string"
+    dest = str(tmp_path / "inc")
+    kw = dict(paragraph_dedup=True, n_shards=4)
+    a1 = build_corpus_incremental(
+        spark, spark.createDataFrame([(1, GOOD)], schema), dest, **kw
+    )
+    assert a1.watermark == 1 and a1.n_survivors_total == 1
+
+    b2 = spark.createDataFrame([(2, GOOD)], schema)
+    a2 = build_corpus_incremental(spark, b2, dest, **kw)
+    assert a2.n_arrived == 1
+    assert a2.n_after_paragraph == 0
+    assert a2.watermark == 2
+    assert a2.n_survivors_total == 1
+    exported = {
+        r.doc_id: r.text
+        for r in spark.read.parquet(dest).select("doc_id", "text").collect()
+    }
+    assert exported == {1: GOOD}
+
+    a3 = build_corpus_incremental(spark, b2, dest, **kw)
+    assert a3.n_arrived == 0 and a3.export is None
+    assert a3.n_survivors_total == 1

@@ -338,3 +338,26 @@ def test_cli_normalize_events(spark, tmp_path):
     dest = str(tmp_path / "dest")
     assert main(["normalize-events", "--src", str(src), "--dest", dest]) == 0
     assert spark.read.parquet(dest).count() == 3
+
+
+def test_lake_keeps_one_sink_per_table(lake, spark):
+    """``CardanoLake.sink`` returns the same sink for a table on every
+    call, and a merge through it shows in the next read."""
+    from cardano_spark import schemas
+
+    sink = lake.sink("cardano_blocks")
+    assert lake.sink("cardano_blocks") is sink
+    assert lake.sink("cardano_transactions") is not sink
+    assert sink.read().count() == 0
+
+    window = cardano.blocks_to_raw(
+        lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2
+    )
+    assert window is not None
+    cardano.raw_blocks_to_table(lake)
+    assert lake.sink("cardano_blocks").read().count() == BATCH
+
+    row = sink.read().limit(1).collect()[0].asDict()
+    row["height"] = -1
+    sink.merge(spark.createDataFrame([row], schemas.TARGET_SCHEMAS["cardano_blocks"]))
+    assert lake.sink("cardano_blocks").read().count() == BATCH + 1

@@ -506,3 +506,32 @@ def test_write_training_shards_bad_format_rejected(spark, tmp_path):
     src = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     with _pytest.raises(ValueError, match="unknown shard format"):
         write_training_shards(src, str(tmp_path / "x"), "doc_id", 2, fmt="csvish")
+
+
+def test_manifest_over_8_kib_round_trips_on_both_routes(spark, tmp_path):
+    """A manifest larger than one 8 KiB py4j answer reads back whole
+    through the Hadoop route (ObjectStore pieces) and the local route,
+    and a missing manifest raises FileNotFoundError on both."""
+    import json
+
+    import pytest
+
+    from cardano_spark.sinks.shards import write_training_shards_incremental
+
+    dest = str(tmp_path / "m")
+    df = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(300)], "doc_id long, text string"
+    )
+    written = write_training_shards_incremental(df, dest, "doc_id", 48).manifest
+    path = os.path.join(dest, "_manifest.json")
+    assert os.path.getsize(path) > 8 * 1024
+    assert read_manifest(dest, spark) == written
+    assert read_manifest(dest) == written
+    with open(path) as fh:
+        assert json.load(fh)["shards"] == written.shards
+
+    missing = str(tmp_path / "none")
+    with pytest.raises(FileNotFoundError):
+        read_manifest(missing, spark)
+    with pytest.raises(FileNotFoundError):
+        read_manifest(missing)
