@@ -259,7 +259,7 @@ def build_parser() -> argparse.ArgumentParser:
     maintain.add_argument(
         "--compact", action="store_true",
         help="rewrite buckets whose file count exceeds the target "
-        "(crash-safe sibling swap; untouched buckets never opened)",
+        "(one manifest version; untouched buckets never opened)",
     )
     maintain.add_argument("--max-files-per-bucket", type=int, default=1)
     maintain.add_argument(
@@ -269,8 +269,10 @@ def build_parser() -> argparse.ArgumentParser:
     )
     maintain.add_argument(
         "--rebucket", type=int, default=None,
-        help="rewrite the WHOLE table into N hash buckets "
-        "(bucket-count evolution; O(table) by nature)",
+        help="rewrite the WHOLE table into N hash buckets, in one "
+        "version (O(table) by nature). Merges grow the count on their "
+        "own, to about one scan split per bucket, and never shrink it; "
+        "this is the manual path, e.g. to shrink a table",
     )
     scrape = sub.add_parser(
         "scrape-companies",

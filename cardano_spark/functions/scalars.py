@@ -28,19 +28,36 @@ from pyspark.sql import types as T
 
 _SAFE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
+#: Spark's reserved keywords under ``spark.sql.ansi.enforceReservedKeywords``
+#: (``SELECT keyword FROM sql_keywords() WHERE reserved``, Spark 4.1)
+_RESERVED = frozenset(
+    """
+    ALL AND ANY AS AUTHORIZATION BOTH CALL CASE CAST CHECK COLLATE
+    COLLATION COLUMN CONSTRAINT CREATE CROSS CURRENT_DATE CURRENT_TIME
+    CURRENT_TIMESTAMP CURRENT_USER DISTINCT ELSE END ESCAPE EXCEPT
+    EXECUTE FALSE FETCH FILTER FOR FOREIGN FROM FULL GRANT GROUP HAVING
+    IN INNER INTERSECT INTO IS JOIN LATERAL LEADING LEFT NATURAL NOT
+    NULL OFFSET ON ONLY OR ORDER OUTER OVERLAPS PRIMARY RECURSIVE
+    REFERENCES RIGHT SELECT SESSION_USER SOME SQL TABLE THEN TIME TO
+    TRAILING UNION UNIQUE UNKNOWN USER USING WHEN WHERE WITH WITHIN
+    """.split()
+)
+
 
 def sql_ident(name: str) -> str:
     """A caller-supplied column NAME made safe for embedding in the
     SQL-text fast paths (selectExpr / F.expr / OVER strings).
 
-    Plain ``[A-Za-z_][A-Za-z0-9_]*`` names pass through byte-unchanged
-    (so every existing call site generates identical SQL and identical
-    plans); anything else — spaces, hyphens, quotes — is backtick-
-    quoted with interior backticks doubled, restoring the names the
-    old ``F.col`` construction accepted (r11 ADVICE #1). Parameters
-    documented as SQL TEXT (expressions, points, shingle builders)
-    stay raw by contract and must NOT be routed through this."""
-    if _SAFE_IDENT.match(name):
+    Plain ``[A-Za-z_][A-Za-z0-9_]*`` names that are not reserved
+    keywords pass through byte-unchanged (so every existing call site
+    generates identical SQL and identical plans); anything else —
+    spaces, hyphens, quotes, or a reserved keyword such as ``order``
+    in any case — is backtick-quoted with interior backticks doubled,
+    restoring the names the old ``F.col`` construction accepted (r11
+    ADVICE #1). Parameters documented as SQL TEXT (expressions,
+    points, shingle builders) stay raw by contract and must NOT be
+    routed through this."""
+    if _SAFE_IDENT.match(name) and name.upper() not in _RESERVED:
         return name
     return "`" + name.replace("`", "``") + "`"
 

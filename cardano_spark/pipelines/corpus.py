@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,6 +82,19 @@ class CorpusAudit:
     #: between near-dup and decontamination per the D4 paper's
     #: ordering); -1 when the stage is off
     n_after_semantic: int = -1
+
+
+def _checkpoint_counted(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """``df`` as an eager local checkpoint, with its row count ``n``
+    and any further named ``metrics`` observed by the action that
+    fills the checkpoint: 2 Spark jobs, where a lazy checkpoint and a
+    count or aggregate take 3. Reads of the checkpoint recompute
+    nothing."""
+    obs = Observation()
+    cp = df.observe(obs, F.count(F.lit(1)).alias("n"), *metrics).localCheckpoint(
+        eager=True
+    )
+    return cp, obs.get
 
 
 def _drop_neardup(
@@ -804,11 +817,12 @@ def build_corpus_incremental(
       count of the survivor table (ROADMAP item 3).
 
     Each intermediate runs once per batch: the arriving batch, the
-    exact-dedup frame, the near-dup frame and the kept rows are each a
-    lazy ``localCheckpoint`` that its one audit count materializes
-    (the arrival count and the next watermark come from one
-    count+max row), so the pair search and the gates never re-run for
-    a later count, merge or export.
+    exact-dedup frame, the near-dup frame and the kept rows (and the
+    optional stages' frames) are each an eager ``localCheckpoint``
+    whose filling action also observes its audit count (for the
+    arriving batch, the count and the next watermark), so the pair
+    search and the gates never re-run for a later count, merge or
+    export.
 
     CONVERGENCE CONTRACT (pinned in tests/test_corpus_pipeline.py,
     the q136 discipline): after any sequence of arrival batches, the
@@ -891,16 +905,12 @@ def build_corpus_incremental(
     batch = new_docs if wm is None else new_docs.filter(F.col("doc_id") > wm)
     if normalize:
         batch = batch.withColumn("text", CU.normalize_text(F.col("text")))
-    # lazy + one aggregate = one pass: the count+max row materializes
-    # the cut (its lineage is a literal-watermark filter over the
-    # caller's frame, so nothing it reads can change before then) and
-    # yields the next watermark. The watermark is the max ARRIVING id:
-    # docs a later stage drops (paragraph dedup can drop all of them)
-    # count as processed, as in the batch twin.
-    batch = batch.localCheckpoint(eager=False)
-    arrived = batch.agg(
-        F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("m")
-    ).collect()[0]
+    # one pass: the checkpoint materializes the cut (its lineage is a
+    # literal-watermark filter over the caller's frame) and observes
+    # the count and the next watermark. The watermark is the max
+    # ARRIVING id: docs a later stage drops (paragraph dedup can drop
+    # all of them) count as processed, as in the batch twin.
+    batch, arrived = _checkpoint_counted(batch, F.max("doc_id").alias("m"))
     n_arrived = int(arrived["n"])
 
     shingles = TX.distinct_tokens(F.coalesce(F.col("text"), F.lit("")))
@@ -1216,8 +1226,8 @@ def build_corpus_incremental(
             batch = batch.withColumn(
                 "n_chars", F.length("text").cast("long")
             )
-        batch = batch.localCheckpoint(eager=False)
-        n_paragraph = batch.count()
+        batch, counted = _checkpoint_counted(batch)
+        n_paragraph = counted["n"]
 
     seen = seen_sink.read()
     index = band_sink.read()
@@ -1229,12 +1239,14 @@ def build_corpus_incremental(
     canon = staged.groupBy("_digest").agg(F.min("doc_id").alias("doc_id"))
     in_batch = staged.join(canon.select("doc_id"), "doc_id", "left_semi")
     seen_dig = seen.select(F.col("_digest").alias("_seen_digest")).distinct()
-    exact_new = in_batch.join(
-        seen_dig,
-        in_batch["_digest"].eqNullSafe(seen_dig["_seen_digest"]),
-        "left_anti",
-    ).localCheckpoint(eager=False)
-    n_exact = exact_new.count()
+    exact_new, counted = _checkpoint_counted(
+        in_batch.join(
+            seen_dig,
+            in_batch["_digest"].eqNullSafe(seen_dig["_seen_digest"]),
+            "left_anti",
+        )
+    )
+    n_exact = counted["n"]
 
     # near-dup: probe the persisted band index, drop the later side of
     # every verified pair (keep_first_pairwise)
@@ -1247,12 +1259,12 @@ def build_corpus_incremental(
         existing_index=index,
     )
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    # lazy + count: the pair search runs once, here; every later stage
-    # reads the checkpoint
-    near_new = exact_new.join(dropped, "doc_id", "left_anti").localCheckpoint(
-        eager=False
+    # the pair search runs once, here; every later stage reads the
+    # checkpoint
+    near_new, counted = _checkpoint_counted(
+        exact_new.join(dropped, "doc_id", "left_anti")
     )
-    n_near = near_new.count()
+    n_near = counted["n"]
 
     # semantic dedup (optional): q190's frozen-model serving as a
     # corpus stage — see the docstring's semantic contract. Runs
@@ -1335,14 +1347,16 @@ def build_corpus_incremental(
             cur_model,
             float(semantic_threshold),
         ).localCheckpoint(eager=True)
-        near_new = near_new.join(
-            flags.filter(F.col("is_dup") == 1).select(
-                F.col("vec_id").alias("doc_id")
-            ),
-            "doc_id",
-            "left_anti",
-        ).localCheckpoint(eager=False)
-        n_semantic = near_new.count()
+        near_new, counted = _checkpoint_counted(
+            near_new.join(
+                flags.filter(F.col("is_dup") == 1).select(
+                    F.col("vec_id").alias("doc_id")
+                ),
+                "doc_id",
+                "left_anti",
+            )
+        )
+        n_semantic = counted["n"]
         sem_version = int(mv)
         # q192 drift check on this batch vs the model it was served
         # under — one |new|-bounded pass into the audit
@@ -1449,8 +1463,8 @@ def build_corpus_incremental(
                 F.col("contamination") <= F.lit(float(contamination_max))
             ).select("doc_id")
             near_new = near_new.join(clean_ids, "doc_id", "left_semi")
-        near_new = near_new.localCheckpoint(eager=False)
-        n_decontam = near_new.count()
+        near_new, counted = _checkpoint_counted(near_new)
+        n_decontam = counted["n"]
     else:
         # no decontamination stage: the frame is the one counted last
         n_decontam = n_semantic if embeddings is not None else n_near
@@ -1459,8 +1473,8 @@ def build_corpus_incremental(
     # zero-token docs — possible after span excision — guarded out
     # before the formula's division, same as the batch gate; the SAME
     # _quality_gate definition re-evaluates cut-mode retractions)
-    kept_new = _quality_gate(near_new).localCheckpoint(eager=False)
-    n_quality = kept_new.count()
+    kept_new, counted = _checkpoint_counted(_quality_gate(near_new))
+    n_quality = counted["n"]
 
     # late-decontamination retraction: computed against the PRE-batch
     # survivor state (batch ids are > wm, so the sets are disjoint;

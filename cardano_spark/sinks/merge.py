@@ -6,10 +6,13 @@ Two implementations of the same contract (``merge(df)``):
 - ``ParquetMergeSink``: a parquet-backed managed table for local /
   lakehouse use. Insert-if-absent is a left-anti join against the key
   columns of the touched buckets; the new rows land as new files, and
-  one manifest version commits each change. At 100 TB you'd use an
-  Iceberg/Delta table and its MERGE INTO; the anti-join plan and the
-  add/remove commit are the same ideas at their smallest — this sink
-  is the dependency-free stand-in.
+  one manifest version commits each change. The bucket count follows
+  the table's bytes: a new table is one bucket, so an insert is one
+  shuffle, one broadcast and one file write, and the table is
+  rebucketed to about one scan split per bucket as it grows. At
+  100 TB you'd use an Iceberg/Delta table and its MERGE INTO; the
+  anti-join plan and the add/remove commit are the same ideas at
+  their smallest — this sink is the dependency-free stand-in.
 - ``DBUpsertSink``: staging + single merge statement against a
   DB-API database (the reference's temp table + asyncpg COPY +
   ``INSERT ... SELECT ... ON CONFLICT DO NOTHING``,
@@ -54,6 +57,9 @@ def dedup_by_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
 _LOG = "_log"  # committed versions, one JSON object each
 _STAGE = "_stage"  # a mutation's new files, until its version commits
 _LEGACY_META = "_table_meta.json"  # bucket count of a pre-manifest table
+# the bucket count every pre-manifest table without a meta file was
+# written with (the fixed default of that time)
+_LEGACY_N_BUCKETS = 16
 
 
 class ParquetMergeSink:
@@ -68,14 +74,32 @@ class ParquetMergeSink:
     Spark lists up to 32 paths on the driver but starts a listing job
     for more, and appended files pass 32 within a few merges.
 
+    Bucket count: sized to the data. A new table starts with
+    ``n_buckets`` (default 1); a committed count always wins over the
+    argument. After each merge commits, the sink sums the live bytes
+    of the manifest (driver-side, no Spark job). Once they pass
+    ``2 * n_buckets * split``, where ``split`` is the session's
+    ``spark.sql.files.maxPartitionBytes``, the same call rebuckets the
+    table to ``ceil(bytes / split)`` buckets (:meth:`rebucket`, one
+    version), so a bucket holds about one scan split. The table
+    doubles between growth steps, so the rewrites sum to about twice
+    the final size: each byte is rewritten at most about twice over
+    the table's life. Nothing shrinks a table; ``maintain --rebucket
+    N`` is the manual path.
+
     Merge I/O is O(new rows) for an insert: it reads only the key
     columns of the buckets the batch touches and writes only the rows
     whose key is absent, as one new file per touched bucket. No
     existing file is rewritten (pinned by
-    tests/test_watermark_and_sinks.py). Upsert, delete, compact and
-    rebucket rewrite what they touch, so they are O(touched buckets)
-    (rebucket: every bucket). Inserts add files until :meth:`compact`
-    (the ``maintain --compact`` CLI step) folds them.
+    tests/test_watermark_and_sinks.py). At one bucket a non-empty
+    batch touches bucket 0, so an insert runs 3 Spark jobs (the bucket
+    shuffle, the broadcast of the existing keys, the write) and stages
+    one file. Above one bucket it first collects the touched bucket
+    ids from the cached batch, so it reads only those buckets' keys:
+    5 jobs, and one file per touched bucket. Upsert, delete, compact
+    and rebucket rewrite what they touch, so they are O(touched
+    buckets) (rebucket: every bucket). Inserts add files until
+    :meth:`compact` (the ``maintain --compact`` CLI step) folds them.
 
     Commit protocol: one manifest. Every mutation
     1. writes its new files under ``path/_stage/``, which Spark scans
@@ -107,6 +131,8 @@ class ParquetMergeSink:
     A table written before the manifest existed (bucket directories
     and ``_table_meta.json``, no ``_log``) reads as its directories,
     and its first mutation adopts the files it finds into its version.
+    Without a meta file it is adopted with the 16 buckets every such
+    table was written with.
     """
 
     def __init__(
@@ -115,7 +141,7 @@ class ParquetMergeSink:
         path: str,
         schema: T.StructType,
         keys: Sequence[str],
-        n_buckets: int = 16,
+        n_buckets: int = 1,
     ):
         self.spark = spark
         self.path = path.rstrip("/")
@@ -180,12 +206,15 @@ class ParquetMergeSink:
     def _unversioned(self) -> dict:
         """State of a table with no committed version: none, or one
         written before the manifest existed, which is its bucket
-        directories plus the bucket count in its meta file."""
+        directories plus the bucket count in its meta file (16 when
+        it has none)."""
         files = {o.path: o.size for o in self._store.glob("_bucket=*/*.parquet")}
-        if not files or not self._store.exists(_LEGACY_META):
+        if not files:
             return {"files": files}
-        meta = json.loads(self._store.get(_LEGACY_META))
-        return {"n_buckets": int(meta["n_buckets"]), "files": files}
+        n = _LEGACY_N_BUCKETS
+        if self._store.exists(_LEGACY_META):
+            n = json.loads(self._store.get(_LEGACY_META))["n_buckets"]
+        return {"n_buckets": int(n), "files": files}
 
     def _staged(self) -> dict[str, int]:
         """Files under ``_stage``, by the path they take when live."""
@@ -199,10 +228,11 @@ class ParquetMergeSink:
         live: dict[str, int],
         new: DataFrame,
         drop: Collection[str],
-    ) -> None:
+    ) -> dict[str, int]:
         """Steps 1-3 of every mutation: stage ``new`` (rows carrying
         ``_bucket``) as files, commit the version that drops ``drop``
-        from ``live`` and adds them, and roll forward to it."""
+        from ``live`` and adds them, roll forward to it and return its
+        live files."""
         new.write.mode("overwrite").partitionBy("_bucket").parquet(
             f"{self.path}/{_STAGE}"
         )
@@ -216,7 +246,17 @@ class ParquetMergeSink:
                     sort_keys=True,
                 ).encode(),
             )
-        self._roll_forward()
+        return self._roll_forward()
+
+    def _grow(self, live: dict[str, int]) -> None:
+        """Rebucket to about one scan split per bucket once the live
+        bytes pass two splits per bucket. The bytes come from the
+        manifest and the split from the session's SQLConf, so the check
+        runs no Spark job."""
+        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        size = sum(live.values())
+        if size > 2 * self.n_buckets * split:
+            self.rebucket(-(-size // split))
 
     @staticmethod
     def _by_bucket(live: Collection[str]) -> dict[int, list[str]]:
@@ -278,32 +318,42 @@ class ParquetMergeSink:
             raise ValueError(f"mode must be insert|upsert, got {mode!r}")
         live = self._roll_forward()
         # clustered by bucket before the dedup (the bucket is a function
-        # of the key, so the window needs no second shuffle), and cached:
-        # the touched-bucket collect and the write share one pass over
-        # the batch, and a broadcast anti-join keeps each bucket in one
-        # partition, so an insert adds one file per touched bucket
+        # of the key, so the window needs no second shuffle); a
+        # broadcast anti-join keeps each bucket in one partition, so an
+        # insert adds one file per touched bucket
         fresh = dedup_by_key(
             incoming.withColumn("_bucket", self._bucket_col()).repartition("_bucket"),
             ["_bucket", *self.keys],
-        ).persist()
-        try:
-            touched = self._touched(fresh)
-            if not touched:
-                return
-            existing = self._read_buckets(touched, live)
-            if mode == "insert":
-                new = fresh.join(existing.select(*self.keys), self.keys, "left_anti")
-                drop: list[str] = []
-            else:
-                new = fresh.unionByName(
-                    existing.join(fresh.select(*self.keys), self.keys, "left_anti")
-                    .withColumn("_bucket", self._bucket_col())
-                ).repartition("_bucket")
-                have = self._by_bucket(live)
-                drop = [f for b in touched for f in have.get(b, [])]
-            self._commit(live, new, drop)
-        finally:
-            fresh.unpersist()
+        )
+        if mode == "insert" and self.n_buckets == 1:
+            # a non-empty batch touches bucket 0, and an empty one stages
+            # no file and so commits no version: no touched-bucket
+            # collect, and the write is the batch's one pass
+            existing = self._read_buckets([0], live).select(*self.keys)
+            live = self._commit(live, fresh.join(existing, self.keys, "left_anti"), [])
+        else:
+            # cached: the touched-bucket collect and the write share one
+            # pass over the batch
+            fresh = fresh.persist()
+            try:
+                touched = self._touched(fresh)
+                if not touched:
+                    return
+                existing = self._read_buckets(touched, live)
+                if mode == "insert":
+                    new = fresh.join(existing.select(*self.keys), self.keys, "left_anti")
+                    drop: list[str] = []
+                else:
+                    new = fresh.unionByName(
+                        existing.join(fresh.select(*self.keys), self.keys, "left_anti")
+                        .withColumn("_bucket", self._bucket_col())
+                    ).repartition("_bucket")
+                    have = self._by_bucket(live)
+                    drop = [f for b in touched for f in have.get(b, [])]
+                live = self._commit(live, new, drop)
+            finally:
+                fresh.unpersist()
+        self._grow(live)
 
     def delete(self, keys: DataFrame) -> None:
         """Key-delete a batch from the table, rewriting only the
@@ -406,6 +456,7 @@ class ParquetMergeSink:
         """Bucket-count evolution: rewrite the WHOLE table into
         ``new_n`` hash buckets (a growing table's per-bucket working
         set eventually outgrows a core; a shrinking one wastes tasks).
+        :meth:`merge` calls it as the table grows; shrinking is manual.
         One version removes every old file and adds the new layout with
         its bucket count, so a crash leaves either layout whole. Rows
         are byte-identical — only the directory a row lives in changes.

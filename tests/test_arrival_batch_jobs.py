@@ -10,11 +10,11 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMALL
 
 #: Spark jobs of a second arrival batch of ~100 documents with no
-#: benchmark and no paragraph or semantic stage, as measured: arrival
-#: count+max, the exact and near-dup checkpoints and their counts, the
-#: kept-rows count, three state merges, the shard delta and the
+#: benchmark and no paragraph or semantic stage, as measured: the
+#: arrival, exact, near-dup and kept checkpoints (each observing its
+#: own count), three one-bucket state inserts, the shard delta and the
 #: survivor count
-SECOND_BATCH_JOBS = 41
+SECOND_BATCH_JOBS = 31
 
 
 def _documents(spark):

@@ -23,9 +23,8 @@ ALLOWED: dict[tuple[str, str], str] = {
         "n_shards digest rows / manifest rows — layout-parameter-sized"
     ),
     ("pipelines/corpus.py", ".collect()"): (
-        "3-row per-split counts for the manifest; 1-row count+max "
-        "arrival aggregate; 1-row semantic model version; 1-row q192 "
-        "drift verdict"
+        "3-row per-split counts for the manifest; 1-row semantic "
+        "model version; 1-row q192 drift verdict"
     ),
     ("operators/curation.py", ".collect()"): (
         "range_partitions (32) per-partition totals of the prefix sum, "

@@ -48,3 +48,30 @@ def test_semantic_dedup_accepts_spaced_names(spark):
     out = semantic_dedup(e, "vec id", "the vec", n_centroids=2, threshold=0.9)
     assert out.count() == 6
     assert set(out.columns) == {"vec_id", "cluster_id", "is_dup"}
+
+
+def test_sql_ident_quotes_reserved_keywords():
+    assert sql_ident("order") == "`order`"
+    assert sql_ident("From") == "`From`"
+    assert sql_ident("orders") == "orders"
+
+
+def test_with_running_accepts_a_reserved_keyword_name(spark):
+    """A column named ``order`` parses under
+    ``spark.sql.ansi.enforceReservedKeywords=true``."""
+    from cardano_spark.operators.relational import with_running
+
+    confs = ("spark.sql.ansi.enabled", "spark.sql.ansi.enforceReservedKeywords")
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k in confs:
+            spark.conf.set(k, "true")
+        df = spark.range(4).selectExpr(
+            "id % 2 AS grp", "id AS `order`", "CAST(id AS LONG) AS v"
+        )
+        out = with_running(df, ["grp"], ["order"], "v", "from")
+        rows = {r["order"]: r["from"] for r in out.collect()}
+        assert rows == {0: 0, 1: 1, 2: 2, 3: 4}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -908,3 +908,204 @@ def test_merge_sink_adopts_a_table_written_before_the_manifest(spark, tmp_path):
     reopened = ParquetMergeSink(spark, path, SCHEMA, ["k"])
     assert reopened.n_buckets == 5
     assert {r.k: r.v for r in reopened.read().collect()} == {**dict(rows), 100: "new"}
+
+
+def test_merge_sink_adopts_a_pre_manifest_table_without_meta_as_16_buckets(spark, tmp_path):
+    """A pre-manifest table with no `_table_meta.json` was written with
+    16 buckets. It is adopted with 16 whatever the constructor default,
+    so replaying an insert of its own keys finds every one of them and
+    adds no row."""
+    path = str(tmp_path / "t")
+    rows = [(i, f"v{i}") for i in range(100)]
+    (
+        spark.createDataFrame(rows, SCHEMA)
+        .withColumn("_bucket", F.pmod(F.xxhash64("k"), F.lit(16)).cast("int"))
+        .write.partitionBy("_bucket")
+        .parquet(path)
+    )
+    assert len({p.split(os.sep)[0] for p in _on_disk(path)}) == 16
+    assert not os.path.exists(os.path.join(path, "_log"))
+
+    sink = ParquetMergeSink(spark, path, SCHEMA, ["k"])
+    assert sink.n_buckets == 16
+    sink.merge(spark.createDataFrame([(k, "replay") for k, _ in rows], SCHEMA))
+    assert sorted(map(tuple, sink.read().collect())) == rows
+    reopened = ParquetMergeSink(spark, path, SCHEMA, ["k"])
+    assert reopened.n_buckets == 16
+    assert sorted(map(tuple, reopened.read().collect())) == rows
+
+
+# --------------------------------------------------------------------------
+# Bucket count sized to the data: growth, its crash safety, job budgets
+# --------------------------------------------------------------------------
+
+_SPLIT = "spark.sql.files.maxPartitionBytes"
+
+
+def _rows(lo, hi):
+    """Rows whose values barely compress, so file bytes track rows."""
+    import hashlib
+
+    return [(i, hashlib.sha256(str(i).encode()).hexdigest()) for i in range(lo, hi)]
+
+
+def _bucket_of_every_row_matches(spark, path, n):
+    laid = spark.read.parquet(path)
+    return laid.filter(
+        F.col("_bucket") != F.pmod(F.xxhash64("k"), F.lit(n))
+    ).count() == 0
+
+
+def test_merge_sink_grows_to_one_split_per_bucket(spark, tmp_path, monkeypatch):
+    """A one-bucket table passes twice the scan split: the insert that
+    crosses it rebuckets the table in one further version to
+    ceil(bytes / split) buckets, with the same rows, the disk equal to
+    the manifest, the count durable, and the next insert routed by the
+    new count without duplicating a key."""
+    import math
+
+    path = str(tmp_path / "t")
+    grown = []
+    rebucket = ParquetMergeSink.rebucket
+
+    def spy(self, new_n):
+        grown.append((sum(self._roll_forward().values()), new_n))
+        return rebucket(self, new_n)
+
+    monkeypatch.setattr(ParquetMergeSink, "rebucket", spy)
+    split = 4096
+    saved = spark.conf.get(_SPLIT)
+    spark.conf.set(_SPLIT, str(split))
+    try:
+        sink = ParquetMergeSink(spark, path, SCHEMA, ["k"])
+        rows, lo = [], 0
+        while sink.n_buckets == 1:
+            assert lo < 2000, "the table never grew"
+            _, version = _committed(path) if lo else (None, -1)
+            batch = _rows(lo, lo + 40)
+            sink.merge(spark.createDataFrame(batch, SCHEMA))
+            rows += batch
+            lo += 40
+        size, n = grown[0]
+        assert len(grown) == 1 and size > 2 * split
+        assert n == math.ceil(size / split) == sink.n_buckets > 1
+        files, v = _committed(path)
+        assert v == version + 2  # the insert, then one rebucket version
+        assert _on_disk(path) == files
+        assert sorted(map(tuple, sink.read().collect())) == rows
+        assert _bucket_of_every_row_matches(spark, path, n)
+
+        reopened = ParquetMergeSink(spark, path, SCHEMA, ["k"])
+        assert reopened.n_buckets == n
+        reopened.merge(
+            spark.createDataFrame([(0, "dup"), (1, "dup")] + _rows(lo, lo + 5), SCHEMA)
+        )
+        assert reopened.n_buckets == n and len(grown) == 1
+        assert sorted(map(tuple, reopened.read().collect())) == rows + _rows(lo, lo + 5)
+        assert _on_disk(path) == _committed(path)[0]
+        assert _bucket_of_every_row_matches(spark, path, n)
+    finally:
+        spark.conf.set(_SPLIT, saved)
+
+
+@pytest.mark.parametrize("grow", [False, True], ids=["one_bucket_insert", "insert_that_grows"])
+def test_merge_sink_sized_insert_crash_at_every_object_store_call(
+    spark, tmp_path, monkeypatch, grow
+):
+    """The checks of test_merge_sink_crash_at_every_object_store_call
+    for the inserts a sized table runs: a one-bucket insert, and an
+    insert that crosses two scan splits and so rebuckets in the same
+    call. The latter commits two versions, so a crash between them
+    leaves the inserted, not yet grown table, which a replay grows."""
+    import shutil
+
+    from cardano_spark.sources.objectstore import ObjectStore
+
+    base = str(tmp_path / "base")
+    sink = ParquetMergeSink(spark, base, SCHEMA, ["k"])
+    for lo in (0, 30):
+        sink.merge(spark.createDataFrame(_rows(lo, lo + 30), SCHEMA))
+    before = _state(sink)
+    insert = spark.createDataFrame(_rows(60, 120), SCHEMA)
+
+    calls = [0]
+    crash_at = [0]
+    for name in ("put", "put_if_absent", "rename", "delete"):
+        def wrapped(self, *a, _orig=getattr(ObjectStore, name)):
+            calls[0] += 1
+            if calls[0] == crash_at[0]:
+                raise RuntimeError(f"injected crash at call {calls[0]}")
+            return _orig(self, *a)
+
+        monkeypatch.setattr(ObjectStore, name, wrapped)
+
+    def run(path, k):
+        shutil.copytree(base, path)
+        calls[0], crash_at[0] = 0, k
+        table = ParquetMergeSink(spark, path, SCHEMA, ["k"])
+        try:
+            table.merge(insert)
+        finally:
+            crash_at[0] = 0
+        return table
+
+    inserted = _state(run(str(tmp_path / "inserted"), 0))
+    saved = spark.conf.get(_SPLIT)
+    if grow:
+        # twice the split lies between the table's bytes before the
+        # insert and after it
+        split = sum(ParquetMergeSink(spark, base, SCHEMA, ["k"])._roll_forward().values())
+        spark.conf.set(_SPLIT, str(split // 2 + 1))
+    try:
+        clean = run(str(tmp_path / "clean"), 0)
+        n_calls, after = calls[0], _state(clean)
+        assert n_calls >= 2 and after != before
+        assert (after[1] > 1) == grow and (after == inserted) != grow
+        for k in range(1, n_calls + 1):
+            path = str(tmp_path / f"crash{k}")
+            with pytest.raises(RuntimeError, match="injected"):
+                run(path, k)
+            reopened = ParquetMergeSink(spark, path, SCHEMA, ["k"])
+            assert _state(reopened) in (before, inserted, after), k
+            assert _on_disk(path) == _committed(path)[0], k
+            reopened.merge(insert)
+            assert _state(reopened) == after, k
+            assert _on_disk(path) == _committed(path)[0], k
+    finally:
+        spark.conf.set(_SPLIT, saved)
+
+
+def test_insert_job_budget_one_bucket_and_above(spark, tmp_path, count_jobs):
+    """A 250-row insert into a one-bucket table holding rows is the
+    bucket shuffle, the broadcast of the existing keys and the write: 3
+    jobs and one staged file. Above one bucket the touched-bucket
+    collect over the cached batch comes first: 5 jobs."""
+    for n_buckets, budget in ((1, 3), (4, 5)):
+        path = str(tmp_path / f"t{n_buckets}")
+        sink = ParquetMergeSink(spark, path, SCHEMA, ["k"], n_buckets=n_buckets)
+        sink.merge(spark.createDataFrame(_rows(0, 250), SCHEMA))
+        batch = spark.createDataFrame(_rows(250, 500), SCHEMA)
+        before = _on_disk(path)
+        _, jobs = count_jobs(lambda: sink.merge(batch))
+        assert sink.read().count() == 500
+        if n_buckets == 1:
+            assert jobs <= budget, jobs
+            assert len(_on_disk(path) - before) == 1
+        else:
+            assert jobs == budget, jobs
+
+
+def test_one_bucket_empty_insert_commits_nothing(spark, tmp_path, count_jobs):
+    """An empty insert into a one-bucket table skips the touched-bucket
+    collect, so it runs the write's 3 jobs (the 16-bucket path returned
+    after its 2-job collect) and stages no file, commits no version and
+    leaves no `_stage`. Only a replayed empty batch reaches it."""
+    path = str(tmp_path / "t")
+    sink = ParquetMergeSink(spark, path, SCHEMA, ["k"])
+    sink.merge(spark.createDataFrame(_rows(0, 50), SCHEMA))
+    files, version = _committed(path)
+    _, jobs = count_jobs(lambda: sink.merge(spark.createDataFrame([], SCHEMA)))
+    assert jobs <= 3, jobs
+    assert _committed(path) == (files, version)
+    assert _on_disk(path) == files
+    assert not os.path.exists(os.path.join(path, "_stage"))
