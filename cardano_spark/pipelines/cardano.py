@@ -10,12 +10,11 @@ here goes through Hadoop FS.
 Stage semantics preserved:
 - E1 provider->raw: watermark window -> partition-parallel fetch ->
   raw JSON zone -> watermark upsert.
-- E2 raw->table: incremental file scan (modifiedAfter, exact to the
-  microsecond) -> transform -> idempotent merge -> watermark = max
-  mtime of the files older than the millisecond the scan listed in
-  (the boundary rule in sources/files.py); merge + watermark are
-  crash-safe/replayable instead of transactional (D1 makes replays
-  no-ops). A caught-up stage runs no Spark job.
+- E2 raw->table: the batch keys E1 recorded minus the keys already
+  loaded -> one scan of exactly those directories -> transform ->
+  idempotent merge -> one ledger object per loaded key; merge +
+  ledger are crash-safe/replayable instead of transactional (D1
+  makes replays no-ops). A caught-up stage runs no Spark job.
 - E3 windowed orchestration with the J4 dependency gates.
 """
 
@@ -23,7 +22,6 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +30,7 @@ from pyspark.sql import types as T
 from cardano_spark import schemas
 from cardano_spark.pipelines import transforms
 from cardano_spark.sinks.merge import ParquetMergeSink
-from cardano_spark.sources.files import max_modified, read_json_zone, scan_cutoff
+from cardano_spark.sources.files import read_json_zone
 from cardano_spark.sources.http_fetch import fetch_json_map, heights_range
 from cardano_spark.watermark import (
     dependency_gate,
@@ -251,50 +249,65 @@ def _load_zone(
     wm_name: str,
     raw_schema: T.StructType,
     build_tables: Callable[[DataFrame], dict[str, DataFrame]],
-) -> datetime | None:
-    """Shared E2 skeleton: incremental scan -> transform -> merge all
-    target tables -> advance the file watermark. A replayed batch
-    merges to zero new rows, so a crash between merge and watermark
-    upsert costs one harmless re-merge (the reference needed a DB
-    transaction for the same guarantee).
+) -> list[int] | None:
+    """Shared E2 skeleton: choose batches by key -> transform -> merge
+    all target tables -> record the loaded keys. Returns the keys
+    loaded, or None when there was nothing new.
 
-    The scan's listing decides the batch and runs on the driver, so an
-    empty batch is seen without a Spark job. The watermark advances
-    only to files older than the millisecond the scan listed in; files
-    from that millisecond are read again next time (the boundary rule
-    in sources/files.py). Returns the new watermark, the unchanged one
-    when no file was old enough, or None when nothing was read."""
+    The batches are the keys E1 upserted into the provider ledger
+    under ``wm_name`` (each names the ``raw/{key}`` directory E1 wrote
+    just before), minus the keys in E2's own ledger. Both reads are
+    driver-side listings, so a caught-up stage runs no Spark job, and
+    the scan reads exactly the new directories, however many older
+    ones the zone holds. The set, not a max, is compared, so a
+    backfilled lower key still loads. Consequences:
+
+    - a batch rewritten under a key already loaded is not reloaded;
+    - a directory whose provider upsert never happened (E1 crashed
+      between write and upsert) is not loaded until E1 runs again and
+      records it;
+    - provider ledger values written by the earlier Spark writer
+      count like any other.
+
+    A crash between the merges and the ledger upserts reloads the
+    batch, which merges to zero new rows (the reference needed a DB
+    transaction for the same guarantee)."""
     from pyspark.sql import Observation
 
-    wm = lake.s3_db_wm.read_latest(wm_name)
-    path = os.path.join(lake.raw_zone(zone), "*")
-    cutoff = scan_cutoff()
-    raw = read_json_zone(lake.spark, path, raw_schema, modified_after=wm)
-    if not raw.inputFiles():
+    keys = sorted(
+        lake.provider_wm.read_values(wm_name) - lake.s3_db_wm.read_values(wm_name)
+    )
+    if not keys:
         return None
-    raw = raw.cache()
+    # one path string: a Hadoop glob over exactly the new directories.
+    # Not cached: a zone feeding several tables re-reads its few new
+    # JSON files per table, which costs less than filling a cache
+    raw = read_json_zone(
+        lake.spark,
+        os.path.join(lake.raw_zone(zone), "{" + ",".join(map(str, keys)) + "}"),
+        raw_schema,
+    )
     counts: dict[str, int] = {}
-    try:
-        new_wm = max_modified(raw.where(F.col("_modified") < F.lit(cutoff)))
-        for table, df in build_tables(raw.drop("_modified")).items():
-            # A5 (transform_cardano_tx_utxo_dto_to_df.py:93-96 logs
-            # per-table row counts): df.observe rides the merge's own
-            # actions — no extra count() job over the lineage.
-            obs = Observation(f"load_{table}")
-            lake.sink(table).merge(
-                df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-            )
-            counts[table] = obs.get["n_rows"]
-    finally:
-        raw.unpersist()
+    for table, df in build_tables(raw).items():
+        # A5 (transform_cardano_tx_utxo_dto_to_df.py:93-96 logs
+        # per-table row counts): df.observe rides the merge's own
+        # actions — no extra count() job over the lineage.
+        obs = Observation(f"load_{table}")
+        lake.sink(table).merge(df.observe(obs, F.count(F.lit(1)).alias("n_rows")))
+        counts[table] = obs.get["n_rows"]
     lake.last_load_counts = counts
-    if new_wm is None:
-        return wm
-    lake.s3_db_wm.upsert(wm_name, new_wm)
-    return new_wm
+    for key in keys:
+        lake.s3_db_wm.upsert(wm_name, key)
+    return keys
 
 
-def raw_blocks_to_table(lake: CardanoLake) -> datetime | None:
+def max_modified(df: DataFrame) -> None:
+    """Not called: E2 chooses its batches by key. The ``--trace 1``
+    tracer in ``perfbench/etl.py`` still wraps this name, and is its
+    only user."""
+
+
+def raw_blocks_to_table(lake: CardanoLake) -> list[int] | None:
     """E2 for blocks (s3_to_db_cardano_blocks_pipeline.py:64-127)."""
     created = transforms.batch_created_at()
     return _load_zone(
@@ -308,7 +321,7 @@ def raw_blocks_to_table(lake: CardanoLake) -> datetime | None:
     )
 
 
-def raw_block_transactions_to_table(lake: CardanoLake) -> datetime | None:
+def raw_block_transactions_to_table(lake: CardanoLake) -> list[int] | None:
     created = transforms.batch_created_at()
     return _load_zone(
         lake,
@@ -323,7 +336,7 @@ def raw_block_transactions_to_table(lake: CardanoLake) -> datetime | None:
     )
 
 
-def raw_transactions_to_table(lake: CardanoLake) -> datetime | None:
+def raw_transactions_to_table(lake: CardanoLake) -> list[int] | None:
     """E2 for transactions + the fixed output_amount explode
     (SURVEY §2.13)."""
     created = transforms.batch_created_at()
@@ -339,7 +352,7 @@ def raw_transactions_to_table(lake: CardanoLake) -> datetime | None:
     )
 
 
-def raw_tx_utxo_to_tables(lake: CardanoLake) -> datetime | None:
+def raw_tx_utxo_to_tables(lake: CardanoLake) -> list[int] | None:
     """E2 widest variant: one scan, five merged tables
     (s3_to_db_cardano_tx_utxo_pipeline.py:88-209)."""
     created = transforms.batch_created_at()

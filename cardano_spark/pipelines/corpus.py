@@ -339,33 +339,33 @@ def build_corpus(
             docs = docs.withColumn(
                 "n_chars", F.length("text").cast("long")
             )
-        docs = docs.localCheckpoint(eager=False)
-        n_paragraph = docs.count()
+        docs, counted = _checkpoint_counted(docs)
+        n_paragraph = counted["n"]
         stage_ids.append(("paragraph", docs.select("doc_id")))
 
-    # Stage frames are lazily checkpointed and the audit count
-    # materializes each one (the _cc_star_rounds one-pass discipline):
-    # without the cut, every stage count and every downstream
-    # consumer (next stage, split exports, attribute ledger) re-ran
-    # the WHOLE prior chain — quadratic in pipeline depth (guide
-    # §1.2/§5; measured r12: 7 counts = 3.6 s of a 5.4 s sf0.001
-    # build). Counts are plan-independent, so the audit values are
+    # Stage frames are checkpointed and the audit count is observed by
+    # the action that fills each one (_checkpoint_counted, the
+    # _cc_star_rounds one-pass discipline): without the cut, every
+    # stage count and every downstream consumer (next stage, split
+    # exports, attribute ledger) re-ran the WHOLE prior chain —
+    # quadratic in pipeline depth (guide §1.2/§5; measured r12: 7
+    # counts = 3.6 s of a 5.4 s sf0.001 build). A stage that does not
+    # run leaves the frame as it was and reuses the previous count.
+    # Counts are plan-independent, so the audit values are
     # bit-identical.
     # 1. exact dedup: keep the smallest id per content digest
     canonical = DD.exact_dedup_groups(docs, "doc_id", "text").select(
         F.col("canonical_id").alias("doc_id")
     )
-    exact = docs.join(canonical, "doc_id", "left_semi").localCheckpoint(
-        eager=False
-    )
-    n_exact = exact.count()
+    exact, counted = _checkpoint_counted(docs.join(canonical, "doc_id", "left_semi"))
+    n_exact = counted["n"]
     stage_ids.append(("exact", exact.select("doc_id")))
 
     # 2. near-dup dedup (detect -> cluster -> elect -> apply)
-    near = _drop_neardup(exact, neardup_threshold, neardup_rule).localCheckpoint(
-        eager=False
+    near, counted = _checkpoint_counted(
+        _drop_neardup(exact, neardup_threshold, neardup_rule)
     )
-    n_near = near.count()
+    n_near = counted["n"]
     stage_ids.append(("neardup", near.select("doc_id")))
 
     # 2.5 optional SEMANTIC dedup (q109's SemDeDup flags over the
@@ -410,8 +410,8 @@ def build_corpus(
             "doc_id",
             "left_anti",
         )
-        near = near.localCheckpoint(eager=False)
-        n_semantic = near.count()
+        near, counted = _checkpoint_counted(near)
+        n_semantic = counted["n"]
         stage_ids.append(("semantic", near.select("doc_id")))
 
     # 3. benchmark decontamination (optional).
@@ -454,8 +454,10 @@ def build_corpus(
                 F.col("contamination") <= F.lit(float(contamination_max))
             ).select("doc_id")
             near = near.join(clean_ids, "doc_id", "left_semi")
-    near = near.localCheckpoint(eager=False)
-    n_decontam = near.count()
+        near, counted = _checkpoint_counted(near)
+        n_decontam = counted["n"]
+    else:
+        n_decontam = n_near if n_semantic < 0 else n_semantic
     stage_ids.append(("decontam", near.select("doc_id")))
 
     # 4. quality gate (shared q30 formula + a token floor; optional
@@ -476,8 +478,8 @@ def build_corpus(
     if quality_rules == "gopher":
         _, gflags = CU.gopher_flag_columns(F.col("text"))
         gate = gate & (gflags == F.lit(127))
-    kept = near.filter(gate).localCheckpoint(eager=False)
-    n_quality = kept.count()
+    kept, counted = _checkpoint_counted(near.filter(gate))
+    n_quality = counted["n"]
     stage_ids.append(("quality", kept.select("doc_id")))
 
     # 5. optional DSIR target selection (exact-integer weights: the
@@ -495,10 +497,10 @@ def build_corpus(
             .limit(int(select_top))
             .select("doc_id")
         )
-        kept = kept.join(chosen, "doc_id", "left_semi")
-    if target is not None:
-        kept = kept.localCheckpoint(eager=False)
-    n_select = kept.count()
+        kept, counted = _checkpoint_counted(kept.join(chosen, "doc_id", "left_semi"))
+        n_select = counted["n"]
+    else:
+        n_select = n_quality
     stage_ids.append(("select", kept.select("doc_id")))
 
     # 6. optional PPS token budget (deterministic systematic draw)
@@ -507,10 +509,10 @@ def build_corpus(
         picked = CU.pps_systematic_sample(
             kept, "doc_id", toks_b, k=int(token_budget_points)
         ).select("doc_id")
-        kept = kept.join(picked, "doc_id", "left_semi")
-    if token_budget_points is not None:
-        kept = kept.localCheckpoint(eager=False)
-    n_budget = kept.count()
+        kept, counted = _checkpoint_counted(kept.join(picked, "doc_id", "left_semi"))
+        n_budget = counted["n"]
+    else:
+        n_budget = n_select
     stage_ids.append(("budget", kept.select("doc_id")))
 
     # 7. optional split assignment (doc-level q41 rule, or q137's
@@ -868,12 +870,15 @@ def build_corpus_incremental(
 
     CRASH SAFETY: every state table is a ``ParquetMergeSink`` (keyed,
     idempotent insert — the reference's ON CONFLICT DO NOTHING twin)
-    and the fold order is survivors -> band index -> seen digests ->
-    watermark, so a replay after a crash at ANY boundary converges:
-    before the seen-fold the batch re-processes identically and the
-    merges absorb re-presented rows; after it, the seen-digest probe
-    drops the whole batch and only the watermark advances
-    (pinned by the torn-state replay test). Retraction orders SHARD
+    and the fold order is survivors -> shard export -> precut -> band
+    index -> seen digests -> paragraph digests -> watermark, so a
+    replay after a crash at ANY boundary converges: before the
+    seen-fold the batch re-processes identically and the merges and
+    the export absorb re-presented rows; after it, the seen-digest
+    probe drops the whole batch and only the watermark advances. The
+    export precedes the seen-fold because a gated-out replay exports
+    nothing (pinned by the torn-state replay test and the per-step
+    crash-point test). Retraction orders SHARD
     DELTA FIRST, survivor delete second: retract ids derive from the
     survivor state, so the reverse order would let a crash between
     the two strand contaminated rows in the export (the replay would
@@ -898,7 +903,7 @@ def build_corpus_incremental(
             )
         )
     state = f"{dest}/_state"
-    wm_store: ParquetWatermarkStore[int] = ParquetWatermarkStore(
+    wm_store = ParquetWatermarkStore(
         spark, f"{state}/watermark", "doc_id", T.LongType()
     )
     wm = wm_store.read_latest("corpus")
@@ -1498,36 +1503,17 @@ def build_corpus_incremental(
         n_retracted = retract_ids.count()
 
     # fold state forward through the keyed idempotent sinks, in
-    # crash-safe order: survivors first, the seen-digest GATE last —
-    # a replay before the seen-fold recomputes identically and the
-    # merges absorb duplicates; a replay after it is gated out by the
-    # digest probe with survivors already intact. seen/bands grow by
-    # the EXACT survivors (near-dup-dropped docs stay in the index —
-    # the pairwise rule compares against every seen doc).
+    # crash-safe order: survivors, then the export, then the
+    # growth-only indexes with the seen-digest GATE among them — a
+    # replay before the seen-fold recomputes identically and the
+    # merges and the export absorb duplicates; a replay after it is
+    # gated out by the digest probe with survivors and export already
+    # intact. The export must land before the gate: a batch gated out
+    # on replay exports nothing, so a crash between the gate and the
+    # export would drop it from the shards for good. seen/bands grow
+    # by the EXACT survivors (near-dup-dropped docs stay in the index
+    # — the pairwise rule compares against every seen doc).
     surv_sink.merge(kept_new.drop("_digest"))
-    if precut_sink is not None and precut_new is not None:
-        # growth-only like bands: folds BEFORE the seen gate, so a
-        # replay that re-presents the batch re-merges idempotently
-        # and a replay gated out by `seen` has already retained the
-        # originals
-        precut_sink.merge(precut_new.drop("_digest"))
-    band_sink.merge(DD.band_index(exact_new, "doc_id", shingles))
-    seen_sink.merge(exact_new)
-    # paragraph digests fold AFTER the seen gate like the other
-    # growth-only state: a replay before this fold re-derives the
-    # same kept occurrences (idempotent merge); a replay after it
-    # rewrites the batch to empty rebuilds, which drop at the
-    # paragraph stage itself — survivors and export stay intact and
-    # only the watermark advances.
-    if para_sink is not None and new_para_digests is not None:
-        para_sink.merge(new_para_digests)
-    # NOTE the retraction's survivor delete runs AFTER the export
-    # delta below (r9 ADVICE): retract_ids derive from the survivor
-    # state, so deleting survivors before the shard delta lands would
-    # let a crash in between strand contaminated rows in the export —
-    # a replay would re-derive an empty retract set. The delta's
-    # delete_keys fold idempotently, so shards-first converges from a
-    # crash at either boundary (torn-retraction replay test).
 
     # export: first batch writes the corpus in full; every later batch
     # is |new|-bounded — the survivor corpus is APPEND-ONLY under the
@@ -1563,6 +1549,29 @@ def build_corpus_incremental(
             n_shards,
             delete_keys=delete_keys,
         )
+    if precut_sink is not None and precut_new is not None:
+        # growth-only like bands: folds BEFORE the seen gate, so a
+        # replay that re-presents the batch re-merges idempotently
+        # and a replay gated out by `seen` has already retained the
+        # originals
+        precut_sink.merge(precut_new.drop("_digest"))
+    band_sink.merge(DD.band_index(exact_new, "doc_id", shingles))
+    seen_sink.merge(exact_new)
+    # paragraph digests fold AFTER the seen gate like the other
+    # growth-only state: a replay before this fold re-derives the
+    # same kept occurrences (idempotent merge); a replay after it
+    # rewrites the batch to empty rebuilds, which drop at the
+    # paragraph stage itself — survivors and export stay intact and
+    # only the watermark advances.
+    if para_sink is not None and new_para_digests is not None:
+        para_sink.merge(new_para_digests)
+    # NOTE the retraction's survivor delete runs AFTER the export
+    # delta above (r9 ADVICE): retract_ids derive from the survivor
+    # state, so deleting survivors before the shard delta lands would
+    # let a crash in between strand contaminated rows in the export —
+    # a replay would re-derive an empty retract set. The delta's
+    # delete_keys fold idempotently, so shards-first converges from a
+    # crash at either boundary (torn-retraction replay test).
     if retract_changed is not None:
         surv_sink.delete(retract_gone)
         surv_sink.merge(retract_changed, mode="upsert")

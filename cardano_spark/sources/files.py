@@ -1,63 +1,25 @@
-"""Incremental file-zone readers (SURVEY.md §2.1 S5-S11, §2.3 P3).
+"""Raw-zone readers (SURVEY.md §2.1 S5-S8, §2.3 P3).
 
-The reference lists S3 objects page by page and keeps only those with
-``modified_date > watermark`` (src/file_explorer/s3_file_explorer.py:31-51).
-Spark's file sources have that filter built in (``modifiedAfter``), so
-the incremental scan is one reader option — the listing, the filter,
-and the download all stay inside the data source. ``_metadata`` gives
-the per-file modification time back for the new-watermark aggregate
-(A3) without a second listing.
-
-Boundary rule. ``modifiedAfter`` is passed with microseconds and keeps
-files strictly newer than the watermark, so a file whose mtime equals
-the watermark is never read again. That is safe only if every file
-with that mtime was in the scan that set the watermark. A file can
-still land in the very millisecond the scan lists (mtimes have
-millisecond resolution) and be missed, so the new watermark only
-advances to files strictly older than that millisecond
-(:func:`scan_cutoff`). A file from the listing millisecond is read
-again by the next scan, which the idempotent merge makes harmless.
-Writers that overlap the scan (a committer renaming files written
-earlier) are not covered: the zone has one writer at a time.
+The reference lists S3 objects newer than an mtime watermark
+(src/file_explorer/s3_file_explorer.py:31-51). Here E2 names the
+batch directories it loads by key (``pipelines/cardano.py``), so a
+zone read is one schema'd scan of a path or a Hadoop glob such as
+``raw/{1500,1750}``: the listing and the download stay inside the
+data source, and no mtime is read.
 """
 
 from __future__ import annotations
-
-from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _fmt(ts: datetime) -> str:
-    # Spark's modifiedAfter, in the UTC session tz; without the fraction
-    # the cut falls back to the whole second and re-reads its files
-    return ts.strftime("%Y-%m-%dT%H:%M:%S.%f")
-
-
-def scan_cutoff() -> datetime:
-    """Start of the current millisecond, naive UTC. Take it just
-    before a zone scan lists; only files older than it may advance the
-    watermark (the boundary rule above)."""
-    now = datetime.now(timezone.utc).replace(tzinfo=None)
-    return now - timedelta(microseconds=now.microsecond % 1000)
-
-
-def read_json_zone(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    modified_after: datetime | None = None,
-) -> DataFrame:
-    """Schema'd JSON scan of a raw zone, optionally incremental.
-    Equivalent of get_*_from_s3 (S5-S8) + the watermark listing (S9):
-    one declarative read, no per-file driver loop."""
-    reader = spark.read.schema(schema)
-    if modified_after is not None:
-        reader = reader.option("modifiedAfter", _fmt(modified_after))
-    df = reader.json(path)
-    return df.select("*", F.col("_metadata.file_modification_time").alias("_modified"))
+def read_json_zone(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Schema'd JSON scan of a raw zone path or glob: the
+    get_*_from_s3 readers (S5-S8) as one declarative read, no
+    per-file driver loop."""
+    return spark.read.schema(schema).json(path)
 
 
 def cast_to_schema(
@@ -97,11 +59,3 @@ def cast_to_schema(
         else:
             cols.append(F.lit(None).cast(field.dataType).alias(field.name))
     return df.select(*cols)
-
-
-def max_modified(df: DataFrame) -> datetime | None:
-    """New watermark = max file mtime in the batch (A3,
-    s3_to_db_cardano_blocks_pipeline.py:84-87). Filter ``df`` to
-    ``_modified < scan_cutoff()`` first (the boundary rule above)."""
-    row = df.agg(F.max("_modified").alias("m")).collect()[0]
-    return row["m"]

@@ -5,27 +5,19 @@ or ``s3a://bucket`` (the 100 TB deployment); only the base URI
 changes.
 
 The reference drives boto3 directly (upload_fileobj /
-download_fileobj / a ListObjectsV2 paginator filtered by
-last-modified, src/file_explorer/s3_file_explorer.py:18-51).  Spark's
-data sources already cover the bulk read path (``modifiedAfter`` in
-sources/files.py); this wrapper covers the residual imperative
-surface — single-object get/put and watermark-filtered listing for
-driver-side orchestration (the watermark ledger in watermark.py,
-manifest files, marker objects, small control reads) — without
-importing any cloud SDK: the JVM that is already running Spark
-carries the FileSystem implementations.
-
-Timestamps: Hadoop reports modification time as epoch millis; the
-listing exposes naive-UTC ``datetime`` (the reference converts S3's
-tz-aware LastModified to naive UTC the same way,
-s3_file_explorer.py:43-47), so watermark comparisons match the
-ParquetWatermarkStore convention.
+download_fileobj / a ListObjectsV2 paginator,
+src/file_explorer/s3_file_explorer.py:18-51). Spark's data sources
+already cover the bulk read path (sources/files.py); this wrapper
+covers the residual imperative surface — single-object get/put,
+rename and flat or glob listings for driver-side control state (the
+watermark ledger in watermark.py, manifest files, small control
+reads) — without importing any cloud SDK: the JVM that is already
+running Spark carries the FileSystem implementations.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timezone
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
@@ -43,7 +35,6 @@ class ObjectInfo:
     src/models/file_info/file_info.py)."""
 
     path: str  # path relative to the store's base URI
-    modified: datetime  # naive UTC
     size: int
 
 
@@ -142,15 +133,15 @@ class ObjectStore:
     def delete(self, rel: str) -> bool:
         return self._fs.delete(self._jpath(rel), True)
 
-    # -- S9: listing with the watermark filter -------------------------
+    # -- S9: listing -----------------------------------------------------
 
     def list_names(self, prefix: str = "") -> list[str]:
         """Names of the files directly under a prefix: one
         non-recursive listing (ListObjectsV2 with a delimiter), for
         small flat control directories such as the watermark ledger.
         On the local filesystem it costs ~0.3 ms per object, against
-        ~3.5 ms for :meth:`list_files`, whose recursive located
-        listing stats every file again (measured on a 4-vCPU host)."""
+        ~3.5 ms for a recursive located listing, which stats every
+        file again (measured on a 4-vCPU host)."""
         root = self._jpath(prefix)
         if not self._fs.exists(root):
             return []
@@ -158,35 +149,12 @@ class ObjectStore:
             st.getPath().getName() for st in self._fs.listStatus(root) if st.isFile()
         )
 
-    def list_files(
-        self, prefix: str = "", modified_after: datetime | None = None
-    ) -> list[ObjectInfo]:
-        """Recursive listing under a prefix, keeping only objects with
-        ``mtime > modified_after`` (the reference's paginated
-        ListObjectsV2 + last-modified filter,
-        s3_file_explorer.py:31-51). Driver-side by design: this feeds
-        orchestration decisions; bulk reads go through the Spark
-        sources, whose listing is distributed."""
-        root = self._jpath(prefix) if prefix else self._jpath("")
-        if not self._fs.exists(root):
-            return []
-        out: list[ObjectInfo] = []
-        it = self._fs.listFiles(root, True)
-        while it.hasNext():
-            info = self._info(it.next())
-            if modified_after is None or info.modified > modified_after:
-                out.append(info)
-        return sorted(out, key=lambda o: o.path)
-
     def glob(self, pattern: str) -> list[ObjectInfo]:
         """Objects matching a glob pattern under the base URI, such as
         ``_bucket=*/*.parquet``: one listing per directory the pattern
         reaches, so a caller that knows its layout lists no more."""
         found = self._fs.globStatus(self._jpath(pattern)) or []
-        return sorted((self._info(st) for st in found), key=lambda o: o.path)
-
-    def _info(self, st) -> ObjectInfo:
-        mod = datetime.fromtimestamp(
-            st.getModificationTime() / 1000.0, tz=timezone.utc
-        ).replace(tzinfo=None)
-        return ObjectInfo(path=self._rel(st.getPath()), modified=mod, size=st.getLen())
+        return sorted(
+            (ObjectInfo(self._rel(st.getPath()), st.getLen()) for st in found),
+            key=lambda o: o.path,
+        )

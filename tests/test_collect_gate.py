@@ -30,7 +30,6 @@ ALLOWED: dict[tuple[str, str], str] = {
         "range_partitions (32) per-partition totals of the prefix sum, "
         "or the 16Ki-word Bloom filter"
     ),
-    ("sources/files.py", ".collect()[0]"): "1-row max(_modified) watermark",
     ("streaming/jobs.py", ".collect()"): (
         "_arrival_cuts: <= n_arrival_files order-statistic scalars via "
         "global_rank + 1-row max"

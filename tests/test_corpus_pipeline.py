@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from cardano_spark.pipelines.corpus import build_corpus
@@ -1082,6 +1083,106 @@ def test_build_corpus_incremental_torn_state_replay_converges(
     # and a full replay AFTER the seen fold is gated to a no-op body
     a3 = build_corpus_incremental(spark, b2, dest, **kw)
     assert a3.n_arrived == 0 and a3.n_survivors_total == 2
+
+
+#: the fold steps of a later arrival batch, in the order they run
+FOLD_STEPS = (
+    "survivors",
+    "shard_delta",
+    "precut",
+    "band_index",
+    "seen",
+    "para_index",
+    "watermark",
+)
+
+
+def _fold_batches(spark):
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    return [
+        spark.createDataFrame(
+            [(10, "the first document body is long enough with the usual "
+                  "common words to pass the gate", "en", "web", 90)],
+            schema,
+        ),
+        spark.createDataFrame(
+            [(11, "the second document body is here and it is long enough "
+                  "with the usual common words too", "en", "web", 95)],
+            schema,
+        ),
+    ]
+
+
+#: every fold step runs: cut mode keeps precut originals and
+#: paragraph dedup keeps its digest index
+_FOLD_KW = dict(
+    min_quality=0.3, min_tokens=3, n_shards=4,
+    decontam_mode="cut", paragraph_dedup=True,
+)
+
+
+def _fold_outcome(spark, dest, schema):
+    """Survivor rows, shard read-back rows and manifest digests."""
+    from cardano_spark.sinks.merge import ParquetMergeSink
+    from cardano_spark.sinks.shards import read_manifest
+
+    survivors = ParquetMergeSink(spark, f"{dest}/_state/survivors", schema, ["doc_id"])
+    return (
+        sorted(survivors.read().collect()),
+        sorted(spark.read.parquet(dest).select("doc_id", "text").collect()),
+        [(e["shard_id"], e["rows"], e["digest"]) for e in read_manifest(dest).shards],
+    )
+
+
+@pytest.fixture(scope="module")
+def clean_fold(spark, tmp_path_factory):
+    from cardano_spark.pipelines.corpus import build_corpus_incremental
+
+    dest = str(tmp_path_factory.mktemp("clean_fold"))
+    batches = _fold_batches(spark)
+    for b in batches:
+        build_corpus_incremental(spark, b, dest, **_FOLD_KW)
+    return _fold_outcome(spark, dest, batches[0].schema)
+
+
+@pytest.mark.parametrize("step", FOLD_STEPS)
+def test_build_corpus_incremental_crash_at_each_fold_step_converges(
+    spark, tmp_path, monkeypatch, clean_fold, step
+):
+    """A crash at any fold step of a later arrival batch, then a
+    replay, leaves the survivors, the exported shards and the manifest
+    digests of an uninterrupted run. The export runs before the seen
+    gate: a replay the gate drops exports nothing, so a crash between
+    the two would lose the batch from the shards."""
+    import cardano_spark.pipelines.corpus as CORPUS
+    from cardano_spark.sinks.merge import ParquetMergeSink
+    from cardano_spark.watermark import ParquetWatermarkStore
+
+    def crash(*args, **kwargs):
+        raise RuntimeError(f"simulated crash at {step}")
+
+    real_merge = ParquetMergeSink.merge
+
+    def merge_or_crash(self, *args, **kwargs):
+        if self.path.endswith(f"/_state/{step}"):
+            crash()
+        return real_merge(self, *args, **kwargs)
+
+    b1, b2 = _fold_batches(spark)
+    dest = str(tmp_path / "inc")
+    CORPUS.build_corpus_incremental(spark, b1, dest, **_FOLD_KW)
+    with monkeypatch.context() as m:
+        if step == "shard_delta":
+            m.setattr(CORPUS, "write_training_shards_delta", crash)
+        elif step == "watermark":
+            m.setattr(ParquetWatermarkStore, "upsert", crash)
+        else:
+            m.setattr(ParquetMergeSink, "merge", merge_or_crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            CORPUS.build_corpus_incremental(spark, b2, dest, **_FOLD_KW)
+    audit = CORPUS.build_corpus_incremental(spark, b2, dest, **_FOLD_KW)
+    assert audit.watermark == 11 and audit.n_survivors_total == 2
+    assert _fold_outcome(spark, dest, b2.schema) == clean_fold
 
 
 def test_build_corpus_decontam_cut_mode(spark, tmp_path):

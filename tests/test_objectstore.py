@@ -1,21 +1,12 @@
 """S9/S10 contract test: the ObjectStore runs against the Hadoop
 FileSystem interface — the same one s3a:// implements — so exercising
-it on a ``file://`` base URI pins listing, the watermark filter, and
-upload/download through the interface the 100 TB deployment uses
-(mirrors the reference's moto fake-S3 suite,
+it on a ``file://`` base URI pins listing and upload/download
+through the interface the 100 TB deployment uses (mirrors the reference's moto fake-S3 suite,
 unit_tests/src/file_explorer/test_s3_file_explorer.py:26-135)."""
 
 from __future__ import annotations
 
-import os
-import time
-from datetime import datetime, timedelta, timezone
-
 from cardano_spark.sources.objectstore import ObjectStore
-
-
-def _utcnow() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
 def test_objectstore_put_get_roundtrip(spark, tmp_path):
@@ -31,41 +22,21 @@ def test_objectstore_put_get_roundtrip(spark, tmp_path):
     assert not store.exists("cardano/blocks/b1.json")
 
 
-def test_objectstore_listing_and_watermark_filter(spark, tmp_path):
-    """The reference's list_files(prefix, last_modified_date)
-    contract: recursive under prefix, strictly-newer-than filter,
-    naive-UTC timestamps."""
+def test_objectstore_list_names_is_flat(spark, tmp_path):
+    """``list_names`` lists the files directly under a prefix, sorted,
+    and nothing for a missing prefix."""
     store = ObjectStore(spark, f"file://{tmp_path}")
-    store.put("zone/2024/01/a.json", b"a")
-    store.put("zone/2024/02/b.json", b"bb")
-    store.put("other/c.json", b"c")
-
-    # age the first file below the watermark we'll use
-    old = time.time() - 3600
-    os.utime(tmp_path / "zone" / "2024" / "01" / "a.json", (old, old))
-
-    everything = store.list_files("zone")
-    assert [o.path for o in everything] == [
-        "zone/2024/01/a.json",
-        "zone/2024/02/b.json",
-    ]
-    assert {o.size for o in everything} == {1, 2}
-    for o in everything:
-        assert o.modified.tzinfo is None  # naive UTC, the wm convention
-        assert abs(o.modified - _utcnow()) < timedelta(hours=2)
-
-    wm = _utcnow() - timedelta(minutes=30)
-    fresh = store.list_files("zone", modified_after=wm)
-    assert [o.path for o in fresh] == ["zone/2024/02/b.json"]
-
-    assert store.list_files("missing-prefix") == []
+    store.put("zone/b.json", b"b")
+    store.put("zone/a.json", b"a")
+    store.put("zone/2024/c.json", b"c")
+    assert store.list_names("zone") == ["a.json", "b.json"]
+    assert store.list_names("missing-prefix") == []
 
 
 def test_objectstore_feeds_spark_reader(spark, tmp_path):
     """End-to-end S9->S5 shape: objects PUT through the store are
     readable by the schema'd incremental zone reader over the same
-    base URI, and the watermark listing agrees with what the reader
-    ingests."""
+    base URI, and the listing agrees with what the reader ingests."""
     import json
 
     from pyspark.sql import types as T
@@ -79,4 +50,4 @@ def test_objectstore_feeds_spark_reader(spark, tmp_path):
     schema = T.StructType([T.StructField("x", T.LongType())])
     df = read_json_zone(spark, f"file://{tmp_path}/raw/blocks", schema)
     assert sorted(r.x for r in df.collect()) == [0, 1, 2]
-    assert len(store.list_files("raw/blocks")) == 3
+    assert store.list_names("raw/blocks") == [f"part-{i}.json" for i in range(3)]

@@ -3,9 +3,10 @@ E3 windowed full pipeline — against the deterministic fake transport."""
 
 from __future__ import annotations
 
+import json
 import os
-import time
-from datetime import datetime, timedelta
+import shutil
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,43 +54,28 @@ def test_blocks_end_to_end(lake):
     assert total == 2 * BATCH
 
 
-def _set_mtime(directory: str, ms: int) -> None:
-    for name in os.listdir(directory):
-        os.utime(os.path.join(directory, name), ns=(ms * 1_000_000, ms * 1_000_000))
+def _record_batches(lake, n: int, size: int) -> int:
+    """Land ``n`` blocks batches of ``size`` heights as E1 does (one
+    ``raw/{end}`` JSON directory, then the provider upsert) without
+    the fetch. Returns the rows landed."""
+    zone = lake.raw_zone("blocks")
+    for i in range(n):
+        start = DEFAULT_START_BLOCK + i * size
+        end = start + size - 1
+        out = os.path.join(zone, str(end))
+        os.makedirs(out)
+        with open(os.path.join(out, "part-00000.json"), "w") as f:
+            for h in range(start, end + 1):
+                f.write(json.dumps(fake_blockfrost.block_payload(h)) + "\n")
+        open(os.path.join(out, "_SUCCESS"), "w").close()
+        lake.provider_wm.upsert("cardano_blocks", end)
+    return n * size
 
 
-def test_e2_boundary_listing_millisecond(lake, monkeypatch):
-    """A file landing in the millisecond the E2 scan lists in, after
-    the listing, has the mtime that a max-mtime watermark would take.
-    The watermark stops short of that millisecond, so the next cycle
-    reads the file."""
-    from cardano_spark.sources.files import read_json_zone
-
-    def land_batch(ms: int) -> None:
-        _, end = cardano.blocks_to_raw(
-            lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2
-        )
-        _set_mtime(os.path.join(lake.raw_zone("blocks"), str(end)), ms)
-
-    listed_ms = (int(time.time()) - 60) * 1000 + 620
-    listed_at = datetime(1970, 1, 1) + timedelta(milliseconds=listed_ms)
-    land_batch(listed_ms - 5000)
-    land_batch(listed_ms)  # in the listing millisecond
-    monkeypatch.setattr(cardano, "scan_cutoff", lambda: listed_at)
-    wm = cardano.raw_blocks_to_table(lake)
-    assert wm == listed_at - timedelta(seconds=5)
-    assert lake.sink("cardano_blocks").read().count() == 2 * BATCH
-    monkeypatch.undo()
-
-    land_batch(listed_ms)  # same millisecond, after the listing
-    zone = os.path.join(lake.raw_zone("blocks"), "*")
-    # a watermark at the listing millisecond would skip it for good
-    assert not read_json_zone(
-        lake.spark, zone, cardano.schemas.RAW_BLOCK, modified_after=listed_at
-    ).inputFiles()
-    assert cardano.raw_blocks_to_table(lake) == listed_at
-    assert lake.last_load_counts == {"cardano_blocks": 2 * BATCH}
-    assert lake.sink("cardano_blocks").read().count() == 3 * BATCH
+def _table_rows(lake, table: str) -> list:
+    """The table's rows without the per-run ``created_at`` stamp."""
+    df = lake.sink(table).read().drop("created_at")
+    return sorted(df.collect())
 
 
 def test_e2_caught_up_runs_no_spark_job(lake, monkeypatch, count_jobs):
@@ -101,6 +87,146 @@ def test_e2_caught_up_runs_no_spark_job(lake, monkeypatch, count_jobs):
 
     monkeypatch.setattr(cardano.ParquetMergeSink, "merge", no_merge)
     assert count_jobs(lambda: cardano.raw_blocks_to_table(lake)) == (None, 0)
+
+
+def test_e2_caught_up_over_many_batches_runs_no_spark_job(lake, count_jobs):
+    """E2 chooses its batches by key, so a caught-up stage runs no
+    Spark job however many batch directories the zone holds (a glob
+    over more than 32 of them lists in a Spark job), and one new
+    batch loads exactly once."""
+    landed = _record_batches(lake, 40, 2)
+    assert len(cardano.raw_blocks_to_table(lake)) == 40
+    assert lake.last_load_counts == {"cardano_blocks": landed}
+    assert count_jobs(lambda: cardano.raw_blocks_to_table(lake)) == (None, 0)
+
+    _, end = cardano.blocks_to_raw(
+        lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2
+    )
+    assert cardano.raw_blocks_to_table(lake) == [end]
+    assert lake.last_load_counts == {"cardano_blocks": BATCH}
+    assert lake.sink("cardano_blocks").read().count() == landed + BATCH
+    assert count_jobs(lambda: cardano.raw_blocks_to_table(lake)) == (None, 0)
+
+
+def test_e2_skips_a_directory_until_e1_records_it(lake, monkeypatch):
+    """E1 crashing between its write and its provider upsert leaves a
+    directory no ledger names: E2 does not load it. The next E1 run
+    rewrites the same window and records it, and E2 loads it once."""
+    real_upsert = lake.provider_wm.upsert
+
+    def crash(table, value):
+        raise RuntimeError("simulated crash before the provider upsert")
+
+    monkeypatch.setattr(lake.provider_wm, "upsert", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        cardano.blocks_to_raw(lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2)
+    monkeypatch.setattr(lake.provider_wm, "upsert", real_upsert)
+    assert os.listdir(lake.raw_zone("blocks")) == [str(DEFAULT_START_BLOCK + BATCH - 1)]
+    assert cardano.raw_blocks_to_table(lake) is None
+
+    _, end = cardano.blocks_to_raw(
+        lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2
+    )
+    assert end == DEFAULT_START_BLOCK + BATCH - 1
+    assert cardano.raw_blocks_to_table(lake) == [end]
+    assert lake.last_load_counts == {"cardano_blocks": BATCH}
+    assert cardano.raw_blocks_to_table(lake) is None
+
+
+def test_e2_loads_a_backfilled_lower_key(lake):
+    """An explicit-window ``full_tx_pipeline`` over earlier blocks
+    records a key below the loaded ones; E2 compares key sets, not a
+    max, so the backfill loads."""
+    cardano.blocks_to_raw(lake, fake_blockfrost.transport, batch=BATCH)
+    cardano.block_transactions_to_raw(lake, fake_blockfrost.transport, batch=BATCH)
+    cardano.raw_block_transactions_to_table(lake)
+    start, mid, end = DEFAULT_START_BLOCK, DEFAULT_START_BLOCK + BATCH // 2, DEFAULT_START_BLOCK + BATCH - 1
+
+    def hashes(lo: int, hi: int) -> set[str]:
+        return {h for b in range(lo, hi + 1) for h in fake_blockfrost.tx_hashes_for_block(b)}
+
+    cardano.full_tx_pipeline(lake, fake_blockfrost.transport, mid, end, window=BATCH)
+    txs = {r.hash for r in lake.sink("cardano_transactions").read().select("hash").collect()}
+    assert txs == hashes(mid, end)
+
+    cardano.full_tx_pipeline(lake, fake_blockfrost.transport, start, mid - 1, window=BATCH)
+    assert lake.provider_wm.read_latest("cardano_transactions") == end
+    assert lake.s3_db_wm.read_values("cardano_transactions") == {mid - 1, end}
+    txs = {r.hash for r in lake.sink("cardano_transactions").read().select("hash").collect()}
+    assert txs == hashes(start, end) and len(txs) > len(hashes(mid, end))
+    assert lake.sink("cardano_tx_utxo").read().count() == len(txs)
+
+
+def test_e2_upgrades_a_lake_with_an_mtime_ledger(lake, count_jobs):
+    """A lake whose E2 ledger is the earlier mtime ledger
+    (``s3_to_db_import_status``, timestamp values in the object names)
+    reloads every batch once through the idempotent merge, to the
+    same row counts, and is caught up after."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for _ in range(2):
+        cardano.blocks_to_raw(lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2)
+    keys = cardano.raw_blocks_to_table(lake)
+    before = _table_rows(lake, "cardano_blocks")
+    assert len(keys) == 2 and len(before) == 2 * BATCH
+
+    # the lake as the earlier E2 left it: no key ledger, one mtime object
+    state = os.path.join(lake.root, "_state")
+    shutil.rmtree(os.path.join(state, "s3_to_db_loaded_batches"))
+    old = os.path.join(state, "s3_to_db_import_status")
+    os.makedirs(old)
+    ts = pa.timestamp("us", tz="UTC")
+    now = datetime.now(timezone.utc)
+    pq.write_table(
+        pa.Table.from_pylist(
+            [{"table": "cardano_blocks", "file_modified_date": now, "created_at": now}],
+            schema=pa.schema([("table", pa.string()), ("file_modified_date", ts), ("created_at", ts)]),
+        ),
+        os.path.join(old, f"cardano_blocks.{now:%Y%m%dT%H%M%S%f}.{uuid.uuid4().hex}.parquet"),
+    )
+
+    fresh = cardano.CardanoLake(lake.spark, lake.root)
+    assert cardano.raw_blocks_to_table(fresh) == keys
+    assert fresh.last_load_counts == {"cardano_blocks": 2 * BATCH}
+    assert _table_rows(fresh, "cardano_blocks") == before
+    assert count_jobs(lambda: cardano.raw_blocks_to_table(fresh)) == (None, 0)
+
+
+def test_e2_crash_before_the_ledger_upserts_replays_to_the_same_tables(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the merges, with one of two loaded keys recorded,
+    replays the rest through the idempotent merge: the tables equal an
+    uninterrupted run's, and the ledger holds both keys."""
+    clean, torn = (cardano.CardanoLake(spark, str(tmp_path / n)) for n in ("clean", "torn"))
+    for lk in (clean, torn):
+        for _ in range(2):
+            cardano.blocks_to_raw(lk, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2)
+    keys = cardano.raw_blocks_to_table(clean)
+
+    real_upsert = torn.s3_db_wm.upsert
+    recorded: list[int] = []
+
+    def crash_after_first(table, value):
+        if recorded:
+            raise RuntimeError("simulated crash between ledger upserts")
+        recorded.append(value)
+        real_upsert(table, value)
+
+    monkeypatch.setattr(torn.s3_db_wm, "upsert", crash_after_first)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        cardano.raw_blocks_to_table(torn)
+    monkeypatch.setattr(torn.s3_db_wm, "upsert", real_upsert)
+    assert torn.s3_db_wm.read_values("cardano_blocks") == {keys[0]}
+
+    assert cardano.raw_blocks_to_table(torn) == keys[1:]
+    assert torn.last_load_counts == {"cardano_blocks": BATCH}
+    assert _table_rows(torn, "cardano_blocks") == _table_rows(clean, "cardano_blocks")
+    assert torn.s3_db_wm.read_values("cardano_blocks") == set(keys)
+    assert cardano.raw_blocks_to_table(torn) is None
 
 
 def test_block_transactions_gate_and_array_column(lake):

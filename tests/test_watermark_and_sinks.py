@@ -4,7 +4,6 @@ sink (against duckdb as the ON CONFLICT database)."""
 from __future__ import annotations
 
 import os
-import time
 from datetime import datetime, timedelta, timezone
 
 import duckdb
@@ -40,10 +39,8 @@ def test_watermark_roundtrip(spark, tmp_path):
     assert store.read_latest("cardano_blocks") == 200
 
 
-def _ts_store(spark, path):
-    return ParquetWatermarkStore(
-        spark, path, "file_modified_date", T.TimestampType()
-    )
+def _int_store(spark, path):
+    return ParquetWatermarkStore(spark, path, "block_height", T.LongType())
 
 
 def test_watermark_ledger_runs_no_spark_job(spark, tmp_path, count_jobs):
@@ -51,26 +48,22 @@ def test_watermark_ledger_runs_no_spark_job(spark, tmp_path, count_jobs):
     a read one listing."""
     # the counter sees a real job
     assert count_jobs(lambda: spark.sparkContext.parallelize([1, 2], 2).count()) == (2, 1)
-    store = _ts_store(spark, str(tmp_path / "wm"))
-    ts = datetime(2024, 5, 1, 6, 34, 9, 620123)
-    assert count_jobs(lambda: store.upsert("cardano_blocks", ts)) == (None, 0)
-    assert count_jobs(lambda: store.read_latest("cardano_blocks")) == (ts, 0)
+    store = _int_store(spark, str(tmp_path / "wm"))
+    assert count_jobs(lambda: store.upsert("cardano_blocks", 11_292_739)) == (None, 0)
+    assert count_jobs(lambda: store.read_latest("cardano_blocks")) == (11_292_739, 0)
+    assert count_jobs(lambda: store.read_values("cardano_blocks")) == ({11_292_739}, 0)
     assert count_jobs(lambda: store.read_latest("other")) == (None, 0)
 
 
 def test_watermark_ledger_is_a_parquet_dataset(spark, tmp_path):
     """New ledger objects keep the one-row parquet layout: Spark reads
-    every column, timestamps included (written UTC-adjusted)."""
-    store = _ts_store(spark, str(tmp_path / "wm"))
-    t1 = datetime(2024, 5, 1, 6, 34, 9, 620123)
-    t2 = datetime(2024, 5, 1, 7, 0, 0, 1)
-    store.upsert("a", t1)
-    store.upsert("b", t2)
+    every column, the ``created_at`` timestamp included (written
+    UTC-adjusted)."""
+    store = _int_store(spark, str(tmp_path / "wm"))
+    store.upsert("a", 7)
+    store.upsert("b", 2**40)
     rows = spark.read.schema(store.schema).parquet(store.path).collect()
-    assert sorted((r["table"], r["file_modified_date"]) for r in rows) == [
-        ("a", t1),
-        ("b", t2),
-    ]
+    assert sorted((r["table"], r["block_height"]) for r in rows) == [("a", 7), ("b", 2**40)]
     now = datetime.now(timezone.utc).replace(tzinfo=None)
     assert all(abs(r["created_at"] - now) < timedelta(minutes=5) for r in rows)
 
@@ -108,15 +101,8 @@ def test_watermark_reads_legacy_spark_ledger(spark, tmp_path, monkeypatch):
     store.upsert("cardano_blocks", 301)
     assert store.read_latest("cardano_blocks") == 301
     assert store.read_latest("other") == 999
+    assert store.read_values("cardano_blocks") == {200, 250, 300, 301}
     assert len(gets) == len(set(gets)) == 3
-
-    files = str(tmp_path / "files")
-    ts = datetime(2024, 5, 1, 6, 34, 9, 620123)
-    legacy_append(files, "file_modified_date", T.TimestampType(), "cardano_blocks", ts)
-    store = _ts_store(spark, files)
-    assert store.read_latest("cardano_blocks") == ts
-    store.upsert("cardano_blocks", ts + timedelta(microseconds=1))
-    assert store.read_latest("cardano_blocks") == ts + timedelta(microseconds=1)
 
 
 def test_window_and_gate_logic():
@@ -459,52 +445,6 @@ def test_db_upsert_sink_parallel_staging(spark, tmp_path):
     # 4 staging partitions + 1 driver connection => >= 5 connections;
     # the old coalesce(1) default would open exactly 2
     assert len(list(marks.iterdir())) >= 5
-
-
-def test_incremental_file_listing(spark, tmp_path):
-    """modifiedAfter semantics (S9/P3): only files newer than the
-    watermark are read."""
-    import json
-    import os
-    import time
-
-    from cardano_spark.sources.files import max_modified, read_json_zone
-
-    zone = tmp_path / "zone"
-    (zone / "old").mkdir(parents=True)
-    (zone / "new").mkdir(parents=True)
-    (zone / "old" / "a.json").write_text(json.dumps({"x": 1}))
-    old_mtime = time.time() - 3600
-    os.utime(zone / "old" / "a.json", (old_mtime, old_mtime))
-    (zone / "new" / "b.json").write_text(json.dumps({"x": 2}))
-
-    schema = T.StructType([T.StructField("x", T.LongType())])
-    all_rows = read_json_zone(spark, str(zone / "*"), schema)
-    assert all_rows.count() == 2
-    wm = datetime.utcfromtimestamp(time.time() - 1800)
-    fresh = read_json_zone(spark, str(zone / "*"), schema, modified_after=wm)
-    assert [r.x for r in fresh.collect()] == [2]
-    assert max_modified(fresh) is not None
-
-
-def test_incremental_file_listing_exact_cut(spark, tmp_path):
-    """The watermark cut keeps microseconds: a file whose mtime equals
-    the watermark is excluded, one written 50 ms later is read (a
-    whole-second cut read both)."""
-    import json
-
-    from cardano_spark.sources.files import read_json_zone
-
-    zone = tmp_path / "zone"
-    zone.mkdir()
-    t_ms = (int(time.time()) - 600) * 1000 + 620
-    for name, ms in (("at.json", t_ms), ("after.json", t_ms + 50)):
-        (zone / name).write_text(json.dumps({"x": ms}))
-        os.utime(zone / name, ns=(ms * 1_000_000, ms * 1_000_000))
-    wm = datetime(1970, 1, 1) + timedelta(milliseconds=t_ms)
-    schema = T.StructType([T.StructField("x", T.LongType())])
-    fresh = read_json_zone(spark, str(zone), schema, modified_after=wm)
-    assert [r.x for r in fresh.collect()] == [t_ms + 50]
 
 
 # --------------------------------------------------------------------------
