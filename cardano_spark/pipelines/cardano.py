@@ -90,14 +90,13 @@ def blocks_to_raw(
     upsert the provider watermark (cardano_blocks_to_s3_pipeline.py:40-75)."""
     latest = lake.provider_wm.read_latest("cardano_blocks")
     start, end = next_block_window(latest, batch)
-    heights = heights_range(lake.spark, start, end)
+    heights = heights_range(lake.spark, start, end, num_partitions=fetch_partitions)
     raw = fetch_json_map(
         heights,
         "height",
         lambda h: f"{base_url}/blocks/{h}",
         schemas.RAW_BLOCK,
         transport=transport,
-        num_partitions=fetch_partitions,
     )
     out = os.path.join(lake.raw_zone("blocks"), str(end))
     raw.write.mode("overwrite").json(out)
@@ -133,14 +132,13 @@ def block_transactions_to_raw(
             [{"block_height": int(height), "tx_hash": hashes}]
         ).encode()
 
-    heights = heights_range(lake.spark, start, end)
+    heights = heights_range(lake.spark, start, end, num_partitions=fetch_partitions)
     raw = fetch_json_map(
         heights,
         "height",
         lambda h: f"{base_url}/blocks/{h}/txs",
         schemas.RAW_BLOCK_TRANSACTIONS,
         transport=fetch_block_txs,
-        num_partitions=fetch_partitions,
     )
     out = os.path.join(lake.raw_zone("block_transactions"), str(end))
     raw.write.mode("overwrite").json(out)

@@ -123,7 +123,7 @@ def _drop_neardup(
         threshold=threshold,
     )
     if rule == "keep_first_pairwise":
-        dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+        dropped = pairs.select(F.col("id_b").alias("doc_id"))
         return docs.join(dropped, "doc_id", "left_anti")
     if rule != "cluster_longest":
         raise ValueError(f"unknown neardup rule: {rule!r}")
@@ -1239,11 +1239,13 @@ def build_corpus_incremental(
 
     # exact dedup: in-batch min-id per digest, then anti-probe the
     # seen-digest index (null-safe: NULL text is one group, as in the
-    # batch rule — md5(NULL) groups under the NULL digest)
+    # batch rule — md5(NULL) groups under the NULL digest). An
+    # anti-join ignores repeated keys, so its probe sides here and in
+    # the near-dup stage are not made distinct.
     staged = batch.withColumn("_digest", F.md5("text"))
     canon = staged.groupBy("_digest").agg(F.min("doc_id").alias("doc_id"))
     in_batch = staged.join(canon.select("doc_id"), "doc_id", "left_semi")
-    seen_dig = seen.select(F.col("_digest").alias("_seen_digest")).distinct()
+    seen_dig = seen.select(F.col("_digest").alias("_seen_digest"))
     exact_new, counted = _checkpoint_counted(
         in_batch.join(
             seen_dig,
@@ -1263,7 +1265,7 @@ def build_corpus_incremental(
         threshold=neardup_threshold,
         existing_index=index,
     )
-    dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    dropped = pairs.select(F.col("id_b").alias("doc_id"))
     # the pair search runs once, here; every later stage reads the
     # checkpoint
     near_new, counted = _checkpoint_counted(

@@ -13,6 +13,14 @@ Scale notes (100 TB target):
   AQE coalesces down. On a real cluster raise it to ~2-3x total cores.
 - Arrow enabled for every pandas interchange (Pandas UDFs are the
   sanctioned slow path, row-at-a-time UDFs are banned in this repo).
+- The codegen cache holds ``CODEGEN_CACHE_ENTRIES`` generated classes,
+  not Spark's default 100. The engine runs the same plans every
+  cycle, and a cyclic working set larger than an LRU's capacity gets
+  no hits: each class is evicted before its next use. One
+  ``corpus_analytics`` cycle (an arrival batch and a 5-query sweep)
+  looks up ~190 classes, so at 100 entries every cycle compiled and
+  loaded all of them again. The working set grows with the number of
+  distinct plans, not with data.
 """
 
 from __future__ import annotations
@@ -20,6 +28,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+#: generated classes kept by Spark's codegen cache (an LRU). Measured
+#: distinct classes: ~190 looked up per ``corpus_analytics`` cycle
+#: (~125 in the arrival batch, ~65 in the sweep) and ~295 in a whole
+#: 4-cycle run; 93 in a whole ``cardano_etl`` run; 2605 in
+#: ``tests/test_trainingdata_ops.py``, whose plans are mostly distinct.
+#: ~10 literal-specialized classes per batch are never reused, and LRU
+#: evicts those first, so 1000 holds the largest per-cycle working set
+#: five times over.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_parallelism() -> int:
@@ -88,6 +107,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # a static conf: it sizes the JVM-wide cache when the first
+        # plan compiles (see the scale notes)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

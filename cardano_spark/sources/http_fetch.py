@@ -75,7 +75,9 @@ def fetch_json_map(
     ``out_schema``. Returns a DataFrame of the parsed payloads.
 
     Scale: ``num_partitions`` bounds global request concurrency (one
-    in-flight request per partition); ``requests_per_second`` is a
+    in-flight request per partition) by hash-repartitioning ids that
+    come from a table; an id range sized by :func:`heights_range`
+    needs no repartition. ``requests_per_second`` is a
     PER-PARTITION rate cap, so the aggregate rate is
     partitions x rps — size both to the provider's quota. Fetch
     happens in ``mapInPandas`` (executor-side, Arrow-batched); a fetch
@@ -112,8 +114,15 @@ def fetch_json_map(
     return ids.select(F.col(id_col)).mapInPandas(fetch_partition, schema=out_schema)
 
 
-def heights_range(spark, start: int, end: int, id_col: str = "height") -> DataFrame:
+def heights_range(
+    spark, start: int, end: int, id_col: str = "height", num_partitions: int | None = None
+) -> DataFrame:
     """Distributed id range for block windows — replaces the
     reference's driver-side ``range(start, end+1)`` loop
-    (cardano_blocks_to_s3_pipeline.py:58)."""
-    return spark.range(start, end + 1).select(F.col("id").alias(id_col))
+    (cardano_blocks_to_s3_pipeline.py:58). ``num_partitions`` splits
+    the range into that many contiguous slices, one in-flight request
+    each, so the fetch needs no shuffle (and no extra Spark job) to
+    spread its ids."""
+    return spark.range(start, end + 1, numPartitions=num_partitions).select(
+        F.col("id").alias(id_col)
+    )

@@ -33,6 +33,37 @@ def test_objectstore_list_names_is_flat(spark, tmp_path):
     assert store.list_names("missing-prefix") == []
 
 
+def test_objectstore_list_names_calls_do_not_grow_with_objects(spark, tmp_path):
+    """A listing takes the same number of py4j calls for 3 objects as
+    for 60, and a subdirectory under the prefix, empty or not, is
+    still left out."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    store = ObjectStore(spark, f"file://{tmp_path}")
+    for n in (3, 60):
+        for i in range(n):
+            store.put(f"l{n}/{i:04d}.json", b"x")
+        store.put(f"l{n}/sub/nested.json", b"x")
+        store.put(f"l{n}/empty/.keep", b"x")
+        store.delete(f"l{n}/empty/.keep")
+    client.send_command = counted
+    try:
+        per_listing = []
+        for n in (3, 60):
+            calls.clear()
+            assert store.list_names(f"l{n}") == [f"{i:04d}.json" for i in range(n)]
+            per_listing.append(len(calls))
+    finally:
+        client.send_command = send
+    assert per_listing[0] == per_listing[1], per_listing
+
+
 def test_objectstore_feeds_spark_reader(spark, tmp_path):
     """End-to-end S9->S5 shape: objects PUT through the store are
     readable by the schema'd incremental zone reader over the same

@@ -54,6 +54,21 @@ def test_blocks_end_to_end(lake):
     assert total == 2 * BATCH
 
 
+def test_e1_runs_one_spark_job(lake, count_jobs):
+    """E1 splits its height range into ``fetch_partitions`` contiguous
+    slices and writes the fetched zone batch in the same job: no
+    shuffle spreads the ids first."""
+
+    def run(stage):
+        return stage(lake, fake_blockfrost.transport, batch=BATCH, fetch_partitions=4)
+
+    window, jobs = count_jobs(lambda: run(cardano.blocks_to_raw))
+    assert jobs == 1
+    assert count_jobs(lambda: run(cardano.block_transactions_to_raw)) == (window, 1)
+    batch = os.path.join(lake.raw_zone("blocks"), str(window[1]))
+    assert len([f for f in os.listdir(batch) if f.startswith("part-")]) == 4
+
+
 def _record_batches(lake, n: int, size: int) -> int:
     """Land ``n`` blocks batches of ``size`` heights as E1 does (one
     ``raw/{end}`` JSON directory, then the provider upsert) without
