@@ -23,7 +23,6 @@ from cardano_spark.functions.scalars import sql_ident
 #: comfortably inside an 8-16 GiB executor, far above Spark's 10 MB
 #: auto threshold (we know these dims are hot), and far below the size
 #: where a pinned hint becomes an OOM at the 100 TB design point.
-#: Override per-run with $SPARK_GRAFT_BROADCAST_GATE_BYTES.
 DEFAULT_BROADCAST_GATE_BYTES = 64 << 20
 
 
@@ -75,11 +74,7 @@ def broadcast_if_small(
     hint self-retires above it — the same per-regime contract as
     q56's measured ANN strategy crossover."""
     if threshold_bytes is None:
-        threshold_bytes = int(
-            os.environ.get(
-                "SPARK_GRAFT_BROADCAST_GATE_BYTES", DEFAULT_BROADCAST_GATE_BYTES
-            )
-        )
+        threshold_bytes = DEFAULT_BROADCAST_GATE_BYTES
     if size_bytes is None:
         size_bytes = scan_bytes(df)
     if size_bytes is not None and size_bytes <= threshold_bytes:
@@ -131,12 +126,7 @@ def missing_children(
     OOM class at 100 TB, where a mis-estimated build side must spill,
     not hash."""
     size = scan_bytes(children)
-    threshold = int(
-        os.environ.get(
-            "SPARK_GRAFT_BROADCAST_GATE_BYTES", DEFAULT_BROADCAST_GATE_BYTES
-        )
-    )
-    if size is None or size > threshold:
+    if size is None or size > DEFAULT_BROADCAST_GATE_BYTES:
         children = children.hint("merge")
     return parents.join(children, list(on), "left_anti")
 

@@ -7,9 +7,15 @@ cardano_blocks_to_s3_pipeline.py:66) with parquet-friendly JSON files;
 swap ``root`` for an s3a:// URI in production — every reader/writer
 here goes through Hadoop FS.
 
+Each raw zone is declared once, in :data:`ZONES`: its provider-ledger
+name, raw schema and provider route. E2 finds a batch only through the
+ledger name E1 recorded it under, so both halves read the name (and
+the schema) from there.
+
 Stage semantics preserved:
-- E1 provider->raw: watermark window -> partition-parallel fetch ->
-  raw JSON zone -> watermark upsert.
+- E1 provider->raw: window (blocks watermark, or the J4 gate) ->
+  partition-parallel fetch -> raw JSON zone batch ``raw/{end}`` ->
+  provider ledger upsert of ``end``; one skeleton for the four zones.
 - E2 raw->table: the batch keys E1 recorded minus the keys already
   loaded -> one scan of exactly those directories -> transform ->
   idempotent merge -> one ledger object per loaded key; merge +
@@ -20,10 +26,12 @@ Stage semantics preserved:
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -38,6 +46,25 @@ from cardano_spark.watermark import (
     provider_to_s3_store,
     s3_to_db_store,
 )
+
+
+class Zone(NamedTuple):
+    ledger: str  # provider-ledger name; E2's ledger uses it too
+    schema: T.StructType  # raw JSON schema, written by E1, read by E2
+    route: str  # provider path of one id, under the base URL
+
+
+#: the raw zones, keyed by their directory ``cardano/{zone}/raw``
+ZONES = {
+    "blocks": Zone("cardano_blocks", schemas.RAW_BLOCK, "blocks/{}"),
+    "block_transactions": Zone(
+        "cardano_block_transactions", schemas.RAW_BLOCK_TRANSACTIONS, "blocks/{}/txs"
+    ),
+    "transactions": Zone("cardano_transactions", schemas.RAW_TRANSACTION, "txs/{}"),
+    "transaction_utxo": Zone(
+        "cardano_transactions_utxo", schemas.RAW_TX_UTXO, "txs/{}/utxos"
+    ),
+}
 
 
 class CardanoLake:
@@ -77,6 +104,70 @@ class CardanoLake:
 # --------------------------------------------------------------------------
 
 
+def _fetch_to_zone(
+    lake: CardanoLake,
+    zone: str,
+    window: tuple[int, int] | None,
+    transport: Callable[[str], bytes],
+    base_url: str,
+    fetch_partitions: int,
+    source: tuple[str, Column, Column] | None = None,
+) -> tuple[int, int] | None:
+    """The one E1 skeleton (cardano_blocks_to_s3_pipeline.py:53-75):
+    GET the zone's route for every id of the window, land the payloads
+    as ``raw/{end}``, then upsert ``end`` under the zone's ledger name.
+    E2 loads only recorded keys, so a crash between the write and the
+    upsert leaves a directory E2 skips until E1 redoes both. Returns
+    the window (None when there is none).
+
+    The ids are the window's heights in ``fetch_partitions`` contiguous
+    slices, or with a ``source`` (a loaded table, its block column and
+    an id expression) the distinct ids of its rows in the window,
+    spread over ``fetch_partitions`` (J3 turns the reference's driver
+    nested loop, cardano_transactions_to_s3_pipeline.py:104-107, into
+    a partition-parallel fetch)."""
+    if window is None:
+        return None
+    start, end = window
+    if source is None:
+        ids = heights_range(lake.spark, start, end, "id", fetch_partitions)
+        spread = None
+    else:
+        table, block, expr = source
+        rows = lake.sink(table).read().filter(block.between(start, end))
+        ids, spread = rows.select(expr.alias("id")).distinct(), fetch_partitions
+    ledger, schema, route = ZONES[zone]
+    raw = fetch_json_map(
+        ids,
+        "id",
+        lambda i: f"{base_url}/{route.format(i)}",
+        schema,
+        transport=transport,
+        num_partitions=spread,
+    )
+    raw.write.mode("overwrite").json(os.path.join(lake.raw_zone(zone), str(end)))
+    lake.provider_wm.upsert(ledger, end)
+    return window
+
+
+def _gated_window(
+    lake: CardanoLake,
+    zone: str,
+    parent: str,
+    start_block: int | None = None,
+    end_block: int | None = None,
+) -> tuple[int, int] | None:
+    """The J4 gate: ``zone`` may fetch the blocks after its provider
+    key up to ``parent``'s, and nothing once it has caught up. An
+    explicit window (both ends given) is taken as is."""
+    if start_block is not None and end_block is not None:
+        return start_block, end_block
+    wm = lake.provider_wm
+    return dependency_gate(
+        wm.read_latest(ZONES[zone].ledger), wm.read_latest(ZONES[parent].ledger)
+    )
+
+
 def blocks_to_raw(
     lake: CardanoLake,
     transport: Callable[[str], bytes],
@@ -84,24 +175,11 @@ def blocks_to_raw(
     batch: int = 2000,
     fetch_partitions: int = 8,
 ) -> tuple[int, int] | None:
-    """E1 for blocks: watermark window of ``batch`` heights (the
-    reference's 2000-block files), fetch ``/blocks/{h}`` partition-
-    parallel, land one raw JSON zone batch keyed by end height, then
-    upsert the provider watermark (cardano_blocks_to_s3_pipeline.py:40-75)."""
-    latest = lake.provider_wm.read_latest("cardano_blocks")
-    start, end = next_block_window(latest, batch)
-    heights = heights_range(lake.spark, start, end, num_partitions=fetch_partitions)
-    raw = fetch_json_map(
-        heights,
-        "height",
-        lambda h: f"{base_url}/blocks/{h}",
-        schemas.RAW_BLOCK,
-        transport=transport,
-    )
-    out = os.path.join(lake.raw_zone("blocks"), str(end))
-    raw.write.mode("overwrite").json(out)
-    lake.provider_wm.upsert("cardano_blocks", end)
-    return start, end
+    """E1 for blocks: the ``batch`` heights after the watermark (the
+    reference's 2000-block files, cardano_blocks_to_s3_pipeline.py:40-51)."""
+    latest = lake.provider_wm.read_latest(ZONES["blocks"].ledger)
+    window = next_block_window(latest, batch)
+    return _fetch_to_zone(lake, "blocks", window, transport, base_url, fetch_partitions)
 
 
 def block_transactions_to_raw(
@@ -111,39 +189,22 @@ def block_transactions_to_raw(
     batch: int = 2000,
     fetch_partitions: int = 8,
 ) -> tuple[int, int] | None:
-    """E1 for block->tx lists, gated on the blocks watermark (J4).
-    The response is a bare JSON array of hashes; it's re-keyed to
-    {block_height, tx_hash[]} like CardanoBlockTransactions.from_json
-    (cardano_block_transactions.py:20-24)."""
-    parent = lake.provider_wm.read_latest("cardano_blocks")
-    child = lake.provider_wm.read_latest("cardano_block_transactions")
-    window = dependency_gate(child, parent)
-    if window is None:
-        return None
-    start, end = window[0], min(window[1], window[0] + batch - 1)
+    """E1 for block->tx lists, gated on the blocks ledger, at most
+    ``batch`` heights. The response is a bare JSON array of hashes;
+    it's re-keyed to {block_height, tx_hash[]} like
+    CardanoBlockTransactions.from_json (cardano_block_transactions.py:20-24)."""
+    window = _gated_window(lake, "block_transactions", "blocks")
+    if window is not None:
+        window = window[0], min(window[1], window[0] + batch - 1)
 
     def fetch_block_txs(url: str) -> bytes:
-        # wrap the array payload into the keyed object
-        import json as _json
+        hashes = json.loads(transport(url))
+        height = int(url.rsplit("/", 2)[-2])
+        return json.dumps([{"block_height": height, "tx_hash": hashes}]).encode()
 
-        height = url.rsplit("/", 2)[-2]
-        hashes = _json.loads(transport(url))
-        return _json.dumps(
-            [{"block_height": int(height), "tx_hash": hashes}]
-        ).encode()
-
-    heights = heights_range(lake.spark, start, end, num_partitions=fetch_partitions)
-    raw = fetch_json_map(
-        heights,
-        "height",
-        lambda h: f"{base_url}/blocks/{h}/txs",
-        schemas.RAW_BLOCK_TRANSACTIONS,
-        transport=fetch_block_txs,
+    return _fetch_to_zone(
+        lake, "block_transactions", window, fetch_block_txs, base_url, fetch_partitions
     )
-    out = os.path.join(lake.raw_zone("block_transactions"), str(end))
-    raw.write.mode("overwrite").json(out)
-    lake.provider_wm.upsert("cardano_block_transactions", end)
-    return start, end
 
 
 def transactions_to_raw(
@@ -154,42 +215,16 @@ def transactions_to_raw(
     end_block: int | None = None,
     fetch_partitions: int = 8,
 ) -> tuple[int, int] | None:
-    """E3 step 1: tx hashes for a block window come from the loaded
-    ``cardano_block_transactions`` table (S13) — exploded to one row
-    per hash (J3 turns the reference's driver nested loop,
-    cardano_transactions_to_s3_pipeline.py:104-107, into a
-    partition-parallel fetch) — then ``/txs/{hash}`` is fetched."""
-    from pyspark.sql import functions as F
-
-    child = lake.provider_wm.read_latest("cardano_transactions")
-    parent = lake.provider_wm.read_latest("cardano_block_transactions")
-    if start_block is None or end_block is None:
-        window = dependency_gate(child, parent)
-        if window is None:
-            return None
-        start_block, end_block = window
-
-    block_tx = lake.sink("cardano_block_transactions").read()
-    hashes = (
-        block_tx.filter(
-            (F.col("block").cast("long") >= start_block)
-            & (F.col("block").cast("long") <= end_block)
-        )
-        .select(F.explode("tx_hash").alias("tx"))
-        .distinct()
+    """E3 step 1: one id per tx hash that the loaded
+    ``cardano_block_transactions`` table (S13) lists for the window."""
+    window = _gated_window(
+        lake, "transactions", "block_transactions", start_block, end_block
     )
-    raw = fetch_json_map(
-        hashes,
-        "tx",
-        lambda h: f"{base_url}/txs/{h}",
-        schemas.RAW_TRANSACTION,
-        transport=transport,
-        num_partitions=fetch_partitions,
+    block, hashes = F.col("block").cast("long"), F.explode("tx_hash")
+    source = "cardano_block_transactions", block, hashes
+    return _fetch_to_zone(
+        lake, "transactions", window, transport, base_url, fetch_partitions, source
     )
-    out = os.path.join(lake.raw_zone("transactions"), str(end_block))
-    raw.write.mode("overwrite").json(out)
-    lake.provider_wm.upsert("cardano_transactions", end_block)
-    return start_block, end_block
 
 
 def tx_utxo_to_raw(
@@ -200,40 +235,16 @@ def tx_utxo_to_raw(
     end_block: int | None = None,
     fetch_partitions: int = 8,
 ) -> tuple[int, int] | None:
-    """E3 step 3: hashes from loaded ``cardano_transactions`` in the
-    window (S12), fetch ``/txs/{hash}/utxos``
+    """E3 step 3: the window's hashes from the loaded
+    ``cardano_transactions`` table (S12)
     (cardano_tx_utxo_to_s3_pipeline.py:58-118)."""
-    from pyspark.sql import functions as F
-
-    child = lake.provider_wm.read_latest("cardano_transactions_utxo")
-    parent = lake.provider_wm.read_latest("cardano_transactions")
-    if start_block is None or end_block is None:
-        window = dependency_gate(child, parent)
-        if window is None:
-            return None
-        start_block, end_block = window
-
-    txs = lake.sink("cardano_transactions").read()
-    hashes = (
-        txs.filter(
-            (F.col("block_height") >= start_block)
-            & (F.col("block_height") <= end_block)
-        )
-        .select("hash")
-        .distinct()
+    window = _gated_window(
+        lake, "transaction_utxo", "transactions", start_block, end_block
     )
-    raw = fetch_json_map(
-        hashes,
-        "hash",
-        lambda h: f"{base_url}/txs/{h}/utxos",
-        schemas.RAW_TX_UTXO,
-        transport=transport,
-        num_partitions=fetch_partitions,
+    source = "cardano_transactions", F.col("block_height"), F.col("hash")
+    return _fetch_to_zone(
+        lake, "transaction_utxo", window, transport, base_url, fetch_partitions, source
     )
-    out = os.path.join(lake.raw_zone("transaction_utxo"), str(end_block))
-    raw.write.mode("overwrite").json(out)
-    lake.provider_wm.upsert("cardano_transactions_utxo", end_block)
-    return start_block, end_block
 
 
 # --------------------------------------------------------------------------
@@ -244,17 +255,17 @@ def tx_utxo_to_raw(
 def _load_zone(
     lake: CardanoLake,
     zone: str,
-    wm_name: str,
-    raw_schema: T.StructType,
-    build_tables: Callable[[DataFrame], dict[str, DataFrame]],
+    build_tables: Callable[[DataFrame, Column], dict[str, DataFrame]],
 ) -> list[int] | None:
-    """Shared E2 skeleton: choose batches by key -> transform -> merge
-    all target tables -> record the loaded keys. Returns the keys
-    loaded, or None when there was nothing new.
+    """Shared E2 skeleton: choose batches by key -> transform (with one
+    ``created_at`` stamp for the batch) -> merge all target tables ->
+    record the loaded keys. Returns the keys loaded, or None when there
+    was nothing new.
 
     The batches are the keys E1 upserted into the provider ledger
-    under ``wm_name`` (each names the ``raw/{key}`` directory E1 wrote
-    just before), minus the keys in E2's own ledger. Both reads are
+    under the zone's ledger name (each names the ``raw/{key}``
+    directory E1 wrote just before), minus the keys E2's own ledger
+    holds under the same name. Both reads are
     driver-side listings, so a caught-up stage runs no Spark job, and
     the scan reads exactly the new directories, however many older
     ones the zone holds. The set, not a max, is compared, so a
@@ -272,8 +283,10 @@ def _load_zone(
     transaction for the same guarantee)."""
     from pyspark.sql import Observation
 
+    spec = ZONES[zone]
     keys = sorted(
-        lake.provider_wm.read_values(wm_name) - lake.s3_db_wm.read_values(wm_name)
+        lake.provider_wm.read_values(spec.ledger)
+        - lake.s3_db_wm.read_values(spec.ledger)
     )
     if not keys:
         return None
@@ -283,10 +296,10 @@ def _load_zone(
     raw = read_json_zone(
         lake.spark,
         os.path.join(lake.raw_zone(zone), "{" + ",".join(map(str, keys)) + "}"),
-        raw_schema,
+        spec.schema,
     )
     counts: dict[str, int] = {}
-    for table, df in build_tables(raw).items():
+    for table, df in build_tables(raw, transforms.batch_created_at()).items():
         # A5 (transform_cardano_tx_utxo_dto_to_df.py:93-96 logs
         # per-table row counts): df.observe rides the merge's own
         # actions — no extra count() job over the lineage.
@@ -295,7 +308,7 @@ def _load_zone(
         counts[table] = obs.get["n_rows"]
     lake.last_load_counts = counts
     for key in keys:
-        lake.s3_db_wm.upsert(wm_name, key)
+        lake.s3_db_wm.upsert(spec.ledger, key)
     return keys
 
 
@@ -307,28 +320,20 @@ def max_modified(df: DataFrame) -> None:
 
 def raw_blocks_to_table(lake: CardanoLake) -> list[int] | None:
     """E2 for blocks (s3_to_db_cardano_blocks_pipeline.py:64-127)."""
-    created = transforms.batch_created_at()
     return _load_zone(
         lake,
         "blocks",
-        "cardano_blocks",
-        schemas.RAW_BLOCK,
-        lambda raw: {
-            "cardano_blocks": transforms.blocks_raw_to_table(raw, created)
-        },
+        lambda raw, at: {"cardano_blocks": transforms.blocks_raw_to_table(raw, at)},
     )
 
 
 def raw_block_transactions_to_table(lake: CardanoLake) -> list[int] | None:
-    created = transforms.batch_created_at()
     return _load_zone(
         lake,
         "block_transactions",
-        "cardano_block_transactions",
-        schemas.RAW_BLOCK_TRANSACTIONS,
-        lambda raw: {
+        lambda raw, at: {
             "cardano_block_transactions": transforms.block_transactions_raw_to_table(
-                raw, created
+                raw, at
             )
         },
     )
@@ -337,15 +342,12 @@ def raw_block_transactions_to_table(lake: CardanoLake) -> list[int] | None:
 def raw_transactions_to_table(lake: CardanoLake) -> list[int] | None:
     """E2 for transactions + the fixed output_amount explode
     (SURVEY §2.13)."""
-    created = transforms.batch_created_at()
     return _load_zone(
         lake,
         "transactions",
-        "cardano_transactions",
-        schemas.RAW_TRANSACTION,
-        lambda raw: {
-            "cardano_transactions": transforms.transactions_raw_to_table(raw, created),
-            "cardano_tx_output_amount": transforms.tx_output_amount_table(raw, created),
+        lambda raw, at: {
+            "cardano_transactions": transforms.transactions_raw_to_table(raw, at),
+            "cardano_tx_output_amount": transforms.tx_output_amount_table(raw, at),
         },
     )
 
@@ -353,14 +355,7 @@ def raw_transactions_to_table(lake: CardanoLake) -> list[int] | None:
 def raw_tx_utxo_to_tables(lake: CardanoLake) -> list[int] | None:
     """E2 widest variant: one scan, five merged tables
     (s3_to_db_cardano_tx_utxo_pipeline.py:88-209)."""
-    created = transforms.batch_created_at()
-    return _load_zone(
-        lake,
-        "transaction_utxo",
-        "cardano_transactions_utxo",
-        schemas.RAW_TX_UTXO,
-        lambda raw: transforms.flatten_tx_utxo(raw, created),
-    )
+    return _load_zone(lake, "transaction_utxo", transforms.flatten_tx_utxo)
 
 
 # --------------------------------------------------------------------------

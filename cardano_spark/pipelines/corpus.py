@@ -814,9 +814,9 @@ def build_corpus_incremental(
       digests fold invertibly from the delta (cross-checked against a
       recompute over the touched content). The WRITES are
       |new|-bounded. Three READS still grow with the corpus: the
-      exact-dedup probe's distinct over every seen digest, the
-      near-dup probe's scan of the whole band index, and the audit's
-      count of the survivor table (ROADMAP item 3).
+      exact-dedup probe's scan of every seen digest, the near-dup
+      probe's scan of the whole band index, and the audit's count of
+      the survivor table (ROADMAP item 3).
 
     Each intermediate runs once per batch: the arriving batch, the
     exact-dedup frame, the near-dup frame and the kept rows (and the
@@ -1340,9 +1340,10 @@ def build_corpus_incremental(
             .localCheckpoint(eager=True)
         )
         sem_idx_sink.merge(migrated, mode="upsert")
-        # re-read AFTER the migration upsert (the sink swaps bucket
-        # files, so a pre-merge frame would scan deleted parquet):
-        # every row is now at the current version
+        # re-read AFTER the migration upsert (the upsert commits a
+        # version that replaces the touched bucket files, so a
+        # pre-merge frame would scan deleted parquet): every row is
+        # now at the current version
         blockers = sem_idx_sink.read().select(
             "doc_id", "cluster_id", "embedding"
         )

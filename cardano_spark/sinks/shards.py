@@ -20,12 +20,28 @@ Scale notes:
 - The manifest is built from the FileSystem listing + per-shard
   row counts computed distributed (one scan of the written data —
   cheap, columnar count) — never by collecting rows to the driver.
+
+Commit protocol of the two hash exporters (incremental and delta),
+the shape ``ParquetMergeSink`` uses:
+1. write the changed shards under ``_stage/<id>/`` (Spark scans skip
+   a leading ``_``; no live directory is touched);
+2. publish ``_manifest.json`` by write-temp-then-rename, recording
+   the stage id and the dropped shard ids: the commit point;
+3. roll forward: move each staged ``_shard=N`` into place, delete the
+   dropped shards, delete ``_stage``.
+Every hash export rolls forward first, so a crash before step 2
+leaves the old export (a stage the manifest does not name is deleted
+unread) and a crash after it the new one. Cost: the one write job,
+then driver-side object-store calls: a size, a delete and a rename per
+changed shard, a delete per dropped one, the manifest put and rename.
+On ``s3a://`` a rename copies, so the changed bytes move once more.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 from dataclasses import asdict, dataclass
 from functools import reduce
 
@@ -44,19 +60,91 @@ class ShardManifest:
     shards: list[dict]  # [{file, rows, bytes}]
 
 
-def _write_manifest(store: ObjectStore, shards: list[dict]) -> ShardManifest:
+#: a hash export's rewritten shards, until the manifest that names
+#: them is published
+_STAGE = "_stage"
+
+
+def _write_manifest(store: ObjectStore, shards: list[dict], **commit) -> ShardManifest:
     """Publish the manifest over ``shards`` as ``_manifest.json`` under
     the export's ``store``: write a temp object, then rename it into
-    place, so a crash mid-write leaves the previous manifest whole."""
+    place, so a crash mid-write leaves the previous manifest whole.
+    ``commit`` (the hash exporters' stage id and dropped shard ids) is
+    stored beside the entries for :func:`_roll_forward`."""
     manifest = ShardManifest(
         n_shards=len(shards),
         n_rows=sum(s["rows"] for s in shards),
         total_bytes=sum(s["bytes"] for s in shards),
         shards=shards,
     )
-    store.put("_manifest.json.tmp", json.dumps(asdict(manifest), indent=2).encode())
+    body = json.dumps({**asdict(manifest), **commit}, indent=2)
+    store.put("_manifest.json.tmp", body.encode())
     store.rename("_manifest.json.tmp", "_manifest.json")
     return manifest
+
+
+def _roll_forward(store: ObjectStore) -> ShardManifest | None:
+    """Step 3 of the commit for the published manifest, and that
+    manifest (None before the first export). Idempotent: a shard moved
+    already is no longer staged, and the deletes find nothing."""
+    try:
+        m = json.loads(store.get("_manifest.json"))
+    except FileNotFoundError:
+        m = {}
+    if m.get("stage"):
+        for staged in store.glob(f"{_STAGE}/{m['stage']}/_shard=*"):
+            live = staged.path.rsplit("/", 1)[-1]
+            store.delete(live)
+            store.rename(staged.path, live)
+    for s in m.get("dropped", []):
+        store.delete(f"_shard={s}")
+    store.delete(_STAGE)
+    return _manifest_of(m) if m else None
+
+
+def _commit(
+    store: ObjectStore,
+    entries: dict[int, dict],
+    content: DataFrame,
+    key_col: str,
+    digests: dict[int, dict],
+    changed: list[int],
+    dropped: list[int],
+    max_rows_per_file: int | None = None,
+) -> IncrementalExportResult:
+    """The hash exporters' one write-and-commit tail (steps 1-3 of the
+    module docstring). ``content`` holds the rows of the ``changed``
+    shards, clustered by ``_shard``; ``entries`` are the previous
+    manifest's, kept unless their shard is changed (rebuilt from
+    ``digests``) or ``dropped``."""
+    stage = uuid.uuid4().hex
+    if changed:
+        writer = (
+            content.sortWithinPartitions("_shard", key_col)
+            .write.mode("overwrite")
+            .partitionBy("_shard")
+        )
+        if max_rows_per_file:
+            writer = writer.option("maxRecordsPerFile", str(max_rows_per_file))
+        writer.parquet(f"{store.base_uri}/{_STAGE}/{stage}")
+    entries = {s: e for s, e in entries.items() if s not in dropped}
+    for s in changed:
+        entries[s] = {
+            "file": f"_shard={s}",
+            "shard_id": s,
+            "rows": digests[s]["rows"],
+            "bytes": store.size(f"{_STAGE}/{stage}/_shard={s}"),
+            "digest": digests[s],
+        }
+    shards = [entries[s] for s in sorted(entries)]
+    manifest = _write_manifest(store, shards, stage=stage, dropped=dropped)
+    _roll_forward(store)
+    return IncrementalExportResult(
+        manifest=manifest,
+        n_rewritten=len(changed),
+        n_deleted=len(dropped),
+        rewritten=changed,
+    )
 
 
 def _shard_of(key_col: str, n_shards: int) -> Column:
@@ -150,17 +238,10 @@ def write_training_shards(
         writer.option("ignoreNullFields", "false").json(path)
 
     spark = df.sparkSession
-    # listing + sizes via the Hadoop FileSystem API (the abstraction
-    # s3a:// implements — the earlier os.listdir form worked only on
-    # local paths despite the CLI accepting object-store URIs)
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    sizes = {}
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.endswith(suffix) and not name.startswith("_"):
-            sizes[name] = int(st.getLen())
+    store = ObjectStore(spark, path)
+    sizes = {
+        o.path: o.size for o in store.glob(f"*{suffix}") if not o.path.startswith("_")
+    }
     # per-file row counts, computed distributed over the written data
     # (text read suffices for jsonl — one line per row by contract)
     counted = (
@@ -181,7 +262,7 @@ def write_training_shards(
         {"file": f, "rows": int(counts.get(f, 0)), "bytes": sizes[f]}
         for f in sorted(sizes)
     ]
-    return _write_manifest(ObjectStore(spark, path), shards)
+    return _write_manifest(store, shards)
 
 
 @dataclass
@@ -232,12 +313,10 @@ def write_training_shards_incremental(
       CHANGES handed to it; this recomputes the corpus and derives
       them.
     - The rewrite itself is ONE Spark job: ``partitionBy(_shard)``
-      with dynamic partition overwrite over the changed-shard
-      filter — Spark's native mechanism for replacing a subset of
-      partitions; untouched shard directories are never opened.
-      Shards present in the old manifest but empty now are deleted
-      explicitly (dynamic overwrite cannot see them — no rows carry
-      their id).
+      over the changed-shard filter, staged and committed as the
+      module docstring describes; untouched shard directories are
+      never opened. Shards present in the old manifest but empty now
+      are dropped by the commit (no row carries their id).
 
     The written layout is ``path/_shard=N/*.parquet`` (each shard
     internally sorted by ``key_col``); ``spark.read.parquet(path)``
@@ -263,56 +342,24 @@ def write_training_shards_incremental(
     digests = _digests(staged.withColumn("_kind", F.lit("all"))).get("all", {})
 
     store = ObjectStore(spark, path)
-    old: dict[int, dict] = {}
-    try:
-        previous = _read_manifest(store).shards
-    except FileNotFoundError:
-        previous = []
-    for sh in previous:
-        if "shard_id" in sh and "digest" in sh:
-            old[int(sh["shard_id"])] = sh["digest"]
-
+    previous = _roll_forward(store)
+    old = {
+        int(sh["shard_id"]): sh
+        for sh in (previous.shards if previous else [])
+        if "shard_id" in sh and "digest" in sh
+    }
     changed = sorted(
-        s for s, d in digests.items() if old.get(s) != d
+        s for s, d in digests.items() if s not in old or old[s]["digest"] != d
     )
     stale = sorted(s for s in old if s not in digests)
-
-    if changed:
-        writer = (
-            staged.filter(F.col("_shard").isin([int(s) for s in changed]))
-            .drop("_rh")
-            .repartition(len(changed), F.col("_shard"))
-            .sortWithinPartitions("_shard", key_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_shard")
-        )
-        if max_rows_per_file:
-            writer = writer.option("maxRecordsPerFile", str(max_rows_per_file))
-        writer.parquet(path)
-    for s in stale:
-        store.delete(f"_shard={s}")
-
-    # manifest: per-shard dir sizes via the FileSystem, digests from
-    # this run's aggregate (rows were counted distributed above)
-    shards = []
-    for s in sorted(digests):
-        nbytes = store.size(f"_shard={s}") if store.exists(f"_shard={s}") else 0
-        shards.append(
-            {
-                "file": f"_shard={s}",
-                "shard_id": s,
-                "rows": digests[s]["rows"],
-                "bytes": nbytes,
-                "digest": digests[s],
-            }
-        )
-    manifest = _write_manifest(store, shards)
-    return IncrementalExportResult(
-        manifest=manifest,
-        n_rewritten=len(changed),
-        n_deleted=len(stale),
-        rewritten=[int(s) for s in changed],
+    content = (
+        staged.filter(F.col("_shard").isin(changed))
+        .drop("_rh")
+        # at least one partition: Spark refuses a plan with none, even unwritten
+        .repartition(max(len(changed), 1), F.col("_shard"))
+    )
+    return _commit(
+        store, old, content, key_col, digests, changed, stale, max_rows_per_file
     )
 
 
@@ -322,7 +369,6 @@ def write_training_shards_delta(
     key_col: str,
     n_shards: int,
     delete_keys: DataFrame | None = None,
-    max_rows_per_file: int | None = None,
 ) -> IncrementalExportResult:
     """|new|-bounded diff-export — the r7 verdict's last O(corpus)
     recurring term closed. :func:`write_training_shards_incremental`
@@ -336,7 +382,7 @@ def write_training_shards_delta(
     - the TOUCHED shard directories (partition-pruned read of
       ``_shard IN touched`` — at most |delta| shards, never the
       corpus): their surviving rows are rewritten together with the
-      upserts through the same dynamic-partition overwrite;
+      upserts through the same staged commit;
     - ``_manifest.json``: untouched shards' entries carry over
       verbatim; touched shards' digests are RECOMPUTED from the new
       shard content — and independently FOLDED from the old manifest
@@ -354,9 +400,9 @@ def write_training_shards_delta(
     updated corpus (pinned by pytest), so the two exporters are
     interchangeable per run.
 
-    Cost: one manifest get, then at most four Spark actions (five
-    Spark jobs for an insert-only delta, pinned in
-    tests/test_arrival_batch_jobs.py):
+    Cost: the roll-forward (one manifest get, a stage listing and a
+    delete), then at most four Spark actions (five Spark jobs for an
+    insert-only delta, pinned in tests/test_arrival_batch_jobs.py):
 
     - a ``groupBy(_shard)`` digest collect over the upserts: it gives
       the inserted digests, its keys are the touched shards, and it
@@ -367,16 +413,16 @@ def write_training_shards_delta(
       each key marks the old rows an upsert or delete replaces, and
       one ``groupBy(_kind, _shard)`` collect gives the removed digests
       and the recomputed digests of the new content together;
-    - the dynamic-partition overwrite of the changed shards, which
-      needs no shuffle of its own: the content is already clustered
-      by shard.
+    - the staged write of the changed shards, which needs no shuffle
+      of its own: the content is already clustered by shard;
 
-    Two checkpoints stay. The tagged content is checkpointed because
-    the write overwrites the very directories it was read from:
-    re-reading them during the write would see a half-replaced shard.
-    The upserts are checkpointed so that the inserted digests, the
-    recompute and the written rows come from one evaluation of the
-    caller's lineage.
+    then the commit's driver-side object-store calls (module docstring).
+
+    Two checkpoints stay, so that the digests and the written rows
+    come from one evaluation: the upserts (the inserted digests, the
+    recompute and the write read the caller's lineage once) and the
+    tagged content (the digest collect fills it and the write reads
+    it, not the shard files and the shuffle again).
 
     Requires an existing export (manifest with per-shard digests) at
     ``path`` whose ``n_shards`` matches — the first export of a corpus
@@ -385,14 +431,13 @@ def write_training_shards_delta(
     work proportional to the batch, never the table."""
     spark = upserts.sparkSession
     store = ObjectStore(spark, path)
-    try:
-        manifest = _read_manifest(store)
-    except FileNotFoundError:
+    manifest = _roll_forward(store)
+    if manifest is None:
         raise ValueError(
             "write_training_shards_delta needs an existing export "
             f"(no _manifest.json under {path!r}); run the full "
             "exporter for the first batch"
-        ) from None
+        )
     old: dict[int, dict] = {}
     for sh in manifest.shards:
         if "shard_id" not in sh or "digest" not in sh:
@@ -454,9 +499,8 @@ def write_training_shards_delta(
     replaced = F.max((F.col("_kind") != F.lit("old")).cast("int")).over(
         Window.partitionBy("_shard", key_col)
     )
-    # Checkpointed because the write below overwrites the very shard
-    # directories this content was read from. The digest collect
-    # materializes it; the write reads the checkpoint, not the files.
+    # The digest collect materializes the checkpoint; the write reads
+    # it, not the shard files and the shuffle again.
     tagged = (
         rows.repartition("_shard")
         .withColumn(
@@ -510,47 +554,9 @@ def write_training_shards_delta(
         s for s in touched if s in old and recomputed.get(s) is None
     )
 
-    if changed:
-        writer = (
-            new_content.filter(
-                F.col("_shard").isin([int(s) for s in changed])
-            )
-            .select(*cols, "_shard")
-            # already clustered by shard: one file per shard, no shuffle
-            .sortWithinPartitions("_shard", key_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_shard")
-        )
-        if max_rows_per_file:
-            writer = writer.option(
-                "maxRecordsPerFile", str(max_rows_per_file)
-            )
-        writer.parquet(path)
-    for s in emptied:
-        store.delete(f"_shard={s}")
-
-    # manifest: untouched and unchanged entries verbatim, rewritten
-    # entries refreshed, emptied entries gone
-    entries: dict[int, dict] = {
-        s: e for s, e in old.items() if s not in emptied
-    }
-    for s in changed:
-        entries[s] = {
-            "file": f"_shard={s}",
-            "shard_id": s,
-            "rows": recomputed[s]["rows"],
-            "bytes": store.size(f"_shard={s}"),
-            "digest": recomputed[s],
-        }
-    shards = [entries[s] for s in sorted(entries)]
-    manifest = _write_manifest(store, shards)
-    return IncrementalExportResult(
-        manifest=manifest,
-        n_rewritten=len(changed),
-        n_deleted=len(emptied),
-        rewritten=[int(s) for s in changed],
-    )
+    # already clustered by shard: one file per shard, no shuffle
+    content = new_content.filter(F.col("_shard").isin(changed)).select(*cols, "_shard")
+    return _commit(store, old, content, key_col, recomputed, changed, emptied)
 
 
 def read_manifest(path: str, spark: SparkSession | None = None) -> ShardManifest:
@@ -558,17 +564,14 @@ def read_manifest(path: str, spark: SparkSession | None = None) -> ShardManifest
     (the Hadoop FileSystem route), plain ``open`` otherwise. A missing
     manifest raises :class:`FileNotFoundError` on either route."""
     if spark is not None:
-        return _read_manifest(ObjectStore(spark, path))
-    with open(os.path.join(path, "_manifest.json"), "rb") as fh:
-        return _parse_manifest(fh.read())
+        raw = ObjectStore(spark, path).get("_manifest.json")
+    else:
+        with open(os.path.join(path, "_manifest.json"), "rb") as fh:
+            raw = fh.read()
+    return _manifest_of(json.loads(raw))
 
 
-def _read_manifest(store: ObjectStore) -> ShardManifest:
-    return _parse_manifest(store.get("_manifest.json"))
-
-
-def _parse_manifest(raw: bytes) -> ShardManifest:
-    m = json.loads(raw)
+def _manifest_of(m: dict) -> ShardManifest:
     return ShardManifest(
         n_shards=m["n_shards"],
         n_rows=m["n_rows"],

@@ -578,11 +578,14 @@ def test_broadcast_gate_derived_frame_uses_scan_upper_bound(spark):
 
 
 def test_q03_gated_queries_env_override(spark, monkeypatch):
-    """$SPARK_GRAFT_BROADCAST_GATE_BYTES=0 simulates the big regime on
-    the full queries: every gated site must build WITHOUT a forced
-    hint (the plan may still broadcast — Catalyst's own thresholds —
-    but no ResolvedHint appears), and results stay correct."""
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_GATE_BYTES", "0")
+    """A broadcast gate of 0 bytes simulates the big regime on the full
+    queries: every gated site must build WITHOUT a forced hint (the
+    plan may still broadcast — Catalyst's own thresholds — but no
+    ResolvedHint appears), and results stay correct."""
+    import cardano_spark.operators.relational as REL
+
+    gate = REL.DEFAULT_BROADCAST_GATE_BYTES
+    monkeypatch.setattr(REL, "DEFAULT_BROADCAST_GATE_BYTES", 0)
     for name in (
         "q02_top_parts_by_revenue",
         "q03_region_revenue",
@@ -595,12 +598,12 @@ def test_q03_gated_queries_env_override(spark, monkeypatch):
         logical = df._jdf.queryExecution().analyzed().toString()
         # q03/q52 keep ResolvedHint for nation/region (true dims) —
         # count the hints and compare against the ungated run
-        monkeypatch.delenv("SPARK_GRAFT_BROADCAST_GATE_BYTES")
+        monkeypatch.setattr(REL, "DEFAULT_BROADCAST_GATE_BYTES", gate)
         full = QUERIES[name](spark, SF_SMALL)
         full_hints = full._jdf.queryExecution().analyzed().toString().count(
             "ResolvedHint"
         )
-        monkeypatch.setenv("SPARK_GRAFT_BROADCAST_GATE_BYTES", "0")
+        monkeypatch.setattr(REL, "DEFAULT_BROADCAST_GATE_BYTES", 0)
         assert logical.count("ResolvedHint") < full_hints
         assert df.count() == full.count()
 

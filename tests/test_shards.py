@@ -398,6 +398,92 @@ def test_delta_export_emptied_shard_and_integrity_check(spark, tmp_path):
         )
 
 
+def test_delta_export_crash_at_every_object_store_call_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A delta with inserts, one deleted key and one emptied shard
+    crashes at its k-th ObjectStore mutation, for every k, and once
+    right after its shard write. Replaying the same delta then leaves
+    the manifest digests and the read-back rows of an uninterrupted
+    export: the fold check never sees shards the manifest does not
+    describe."""
+    import shutil
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cardano_spark.sinks.shards import (
+        write_training_shards_delta,
+        write_training_shards_incremental,
+    )
+    from cardano_spark.sources.objectstore import ObjectStore
+
+    schema = "doc_id long, text string"
+    base = str(tmp_path / "base")
+    write_training_shards_incremental(
+        spark.createDataFrame([(i, f"t {i}") for i in range(40)], schema),
+        base,
+        "doc_id",
+        4,
+    )
+    victim = _shard_of(0, 4)
+    kept = [i for i in range(40) if _shard_of(i, 4) != victim]
+    dels = [i for i in range(40) if _shard_of(i, 4) == victim] + kept[:1]
+    ups = [(i, f"new {i}") for i in range(100, 140) if _shard_of(i, 4) != victim][:6]
+
+    def delta(path):
+        return write_training_shards_delta(
+            spark.createDataFrame(ups, schema),
+            path,
+            "doc_id",
+            4,
+            delete_keys=spark.createDataFrame([(i,) for i in dels], "doc_id long"),
+        )
+
+    def outcome(path):
+        return (
+            [(e["shard_id"], e["rows"], e["digest"]) for e in read_manifest(path).shards],
+            sorted(spark.read.parquet(path).select("doc_id", "text").collect()),
+        )
+
+    calls, crash_at, crash_write = [0], [0], [False]
+    for name in ("put", "put_if_absent", "rename", "delete"):
+        def wrapped(self, *a, _orig=getattr(ObjectStore, name)):
+            calls[0] += 1
+            if calls[0] == crash_at[0]:
+                raise RuntimeError(f"injected crash at call {calls[0]}")
+            return _orig(self, *a)
+
+        monkeypatch.setattr(ObjectStore, name, wrapped)
+
+    def write_then_crash(self, *a, _orig=DataFrameWriter.parquet, **kw):
+        _orig(self, *a, **kw)
+        if crash_write[0]:
+            raise RuntimeError("injected crash after the shard write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_crash)
+
+    def run(path, k, after_write=False):
+        shutil.copytree(base, path)
+        calls[0], crash_at[0], crash_write[0] = 0, k, after_write
+        try:
+            delta(path)
+        finally:
+            crash_at[0], crash_write[0] = 0, False
+
+    clean = str(tmp_path / "clean")
+    run(clean, 0)
+    n_calls, want = calls[0], outcome(clean)
+    assert n_calls >= 3 and want[0] != outcome(base)[0]
+    cases = [(k, False) for k in range(1, n_calls + 1)] + [(0, True)]
+    for k, after_write in cases:
+        path = str(tmp_path / f"crash{k}")
+        with pytest.raises(RuntimeError, match="injected"):
+            run(path, k, after_write)
+        delta(path)
+        assert outcome(path) == want, (k, after_write)
+
+
 def test_delta_export_read_is_partition_pruned(spark, tmp_path):
     """The |new|-bounded claim at the mechanism level: the exporter's
     touched-shard read-back must partition-prune to the touched
