@@ -92,8 +92,8 @@ def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: Sequence[st
 
     Scale: the anti-join shuffles both sides on ``keys``; when
     ``existing`` is a real table, pre-filter it to the incoming key
-    range (partition pruning) before calling — the JDBC sink variant
-    (sinks/jdbc_upsert.py) pushes this server-side instead.
+    range (partition pruning) before calling — the DB sink variant
+    (sinks/merge.py::DBUpsertSink) pushes this server-side instead.
     """
     fresh = incoming.dropDuplicates(list(keys)).join(existing, list(keys), "left_anti")
     return existing.unionByName(fresh)

@@ -18,7 +18,7 @@ Stage semantics preserved:
   provider ledger upsert of ``end``; one skeleton for the four zones.
 - E2 raw->table: the batch keys E1 recorded minus the keys already
   loaded -> one scan of exactly those directories -> transform ->
-  idempotent merge -> one ledger object per loaded key; merge +
+  idempotent merge -> one ledger row per loaded key; merge +
   ledger are crash-safe/replayable instead of transactional (D1
   makes replays no-ops). A caught-up stage runs no Spark job.
 - E3 windowed orchestration with the J4 dependency gates.
@@ -265,10 +265,10 @@ def _load_zone(
     The batches are the keys E1 upserted into the provider ledger
     under the zone's ledger name (each names the ``raw/{key}``
     directory E1 wrote just before), minus the keys E2's own ledger
-    holds under the same name. Both reads are
-    driver-side listings, so a caught-up stage runs no Spark job, and
-    the scan reads exactly the new directories, however many older
-    ones the zone holds. The set, not a max, is compared, so a
+    holds under the same name. Each ledger read is one listing and one
+    get of its one object, so a caught-up stage runs no Spark job at
+    any ledger age, and the scan reads exactly the new directories,
+    however many older ones the zone holds. The set, not a max, is compared, so a
     backfilled lower key still loads. Consequences:
 
     - a batch rewritten under a key already loaded is not reloaded;

@@ -903,9 +903,7 @@ def build_corpus_incremental(
             )
         )
     state = f"{dest}/_state"
-    wm_store = ParquetWatermarkStore(
-        spark, f"{state}/watermark", "doc_id", T.LongType()
-    )
+    wm_store = ParquetWatermarkStore(spark, f"{state}/watermark", "doc_id")
     wm = wm_store.read_latest("corpus")
     batch = new_docs if wm is None else new_docs.filter(F.col("doc_id") > wm)
     if normalize:

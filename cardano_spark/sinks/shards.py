@@ -305,10 +305,10 @@ def write_training_shards_incremental(
       sharding re-samples boundaries per run, shifting membership
       and invalidating every file even for a one-doc edit).
     - The change test is a per-shard CONTENT digest over all columns
-      (bit_xor + a 2^20-modular sum + count of the per-row
-      ``md5_long(to_json(struct(*)))`` — three commuting,
-      partition-order-free signals; sum stays exact past 2^40 rows
-      per shard), compared against the digests persisted in
+      (bit_xor + a 2^20-modular sum + a full-width 2^63-modular
+      sum + count of the per-row ``md5_long(to_json(struct(*)))`` —
+      four commuting, partition-order-free signals, see
+      :func:`_digests`), compared against the digests persisted in
       ``_manifest.json``. The upsert sink, by contrast, needs the
       CHANGES handed to it; this recomputes the corpus and derives
       them.

@@ -28,7 +28,7 @@ SCHEMA = T.StructType(
 
 
 def test_watermark_roundtrip(spark, tmp_path):
-    store = ParquetWatermarkStore(spark, str(tmp_path / "wm"), "block_height", T.LongType())
+    store = ParquetWatermarkStore(spark, str(tmp_path / "wm"), "block_height")
     assert store.read_latest("cardano_blocks") is None
     store.upsert("cardano_blocks", 100)
     store.upsert("cardano_blocks", 200)
@@ -40,7 +40,7 @@ def test_watermark_roundtrip(spark, tmp_path):
 
 
 def _int_store(spark, path):
-    return ParquetWatermarkStore(spark, path, "block_height", T.LongType())
+    return ParquetWatermarkStore(spark, path, "block_height")
 
 
 def test_watermark_ledger_runs_no_spark_job(spark, tmp_path, count_jobs):
@@ -68,41 +68,167 @@ def test_watermark_ledger_is_a_parquet_dataset(spark, tmp_path):
     assert all(abs(r["created_at"] - now) < timedelta(minutes=5) for r in rows)
 
 
-def test_watermark_duplicate_upserts_are_separate_objects(spark, tmp_path):
-    store = ParquetWatermarkStore(spark, str(tmp_path / "wm"), "block_height", T.LongType())
+def _ledger_objects(path):
+    return sorted(
+        f for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _count_store_calls(monkeypatch, store):
+    """Count every ObjectStore call the ledger makes, by method."""
+    calls: dict[str, int] = {}
+    for name in ("list_names", "get", "exists", "glob", "put", "put_if_absent", "rename", "delete"):
+        def counted(*a, _name=name, _orig=getattr(store._store, name)):
+            calls[_name] = calls.get(_name, 0) + 1
+            return _orig(*a)
+
+        monkeypatch.setattr(store._store, name, counted)
+    return calls
+
+
+def test_watermark_replayed_upsert_commits_nothing(spark, tmp_path, monkeypatch):
+    store = _int_store(spark, str(tmp_path / "wm"))
     store.upsert("cardano_blocks", 7)
+    calls = _count_store_calls(monkeypatch, store)
     store.upsert("cardano_blocks", 7)
-    objects = [f for f in os.listdir(store.path) if f.endswith(".parquet")]
-    assert len(objects) == 2
+    assert calls == {"list_names": 1, "get": 1}
+    assert _ledger_objects(store.path) == ["00000000000000000000.parquet"]
     assert store.read_latest("cardano_blocks") == 7
 
 
-def test_watermark_reads_legacy_spark_ledger(spark, tmp_path, monkeypatch):
+def test_watermark_ledger_is_one_object_at_any_upsert_count(spark, tmp_path, monkeypatch):
+    """After every upsert the directory holds one parquet object, so a
+    read is one listing plus one get however many upserts came before."""
+    store = _int_store(spark, str(tmp_path / "wm"))
+    reads = {}
+    for n in range(1, 201):
+        store.upsert("cardano_blocks" if n % 2 else "other", n)
+        assert len(_ledger_objects(store.path)) == 1, n
+        if n in (1, 10, 200):
+            with monkeypatch.context() as m:
+                calls = _count_store_calls(m, store)
+                values = store.read_values("cardano_blocks")
+            assert values == set(range(1, n + 1, 2))
+            reads[n] = calls
+    assert reads[1] == reads[10] == reads[200] == {"list_names": 1, "get": 1}
+
+
+def _legacy_append(spark, path, rows):
+    """Append one object the earlier Spark writer would have written
+    (``part-*.parquet``, no value in the name)."""
+    spark.createDataFrame(rows, "table string, block_height long").select(
+        "table", "block_height", F.current_timestamp().alias("created_at")
+    ).coalesce(1).write.mode("append").parquet(path)
+
+
+def test_watermark_reads_legacy_spark_ledger(spark, tmp_path):
     """Ledgers written by the earlier Spark writer (``part-*.parquet``,
-    no value in the name) read back, each body once per store."""
-
-    def legacy_append(path, col, dtype, table, value):
-        spark.range(1).select(
-            F.lit(table).alias("table"),
-            F.lit(value).cast(dtype).alias(col),
-            F.current_timestamp().alias("created_at"),
-        ).coalesce(1).write.mode("append").parquet(path)
-
+    no value in the name) read back, and the first upsert folds them
+    into one version with the same values."""
     blocks = str(tmp_path / "blocks")
     for table, value in (("cardano_blocks", 300), ("cardano_blocks", 200), ("other", 999)):
-        legacy_append(blocks, "block_height", T.LongType(), table, value)
-    store = ParquetWatermarkStore(spark, blocks, "block_height", T.LongType())
-    gets: list[str] = []
-    real_get = store._store.get
-    monkeypatch.setattr(store._store, "get", lambda rel: gets.append(rel) or real_get(rel))
+        _legacy_append(spark, blocks, [(table, value)])
+    store = _int_store(spark, blocks)
     assert store.read_latest("cardano_blocks") == 300
+    legacy = {t: store.read_values(t) for t in ("cardano_blocks", "other")}
     store.upsert("cardano_blocks", 250)
+    assert _ledger_objects(blocks) == ["00000000000000000000.parquet"]
+    assert store.read_values("cardano_blocks") == legacy["cardano_blocks"] | {250}
+    assert store.read_values("other") == legacy["other"]
     assert store.read_latest("cardano_blocks") == 300
     store.upsert("cardano_blocks", 301)
     assert store.read_latest("cardano_blocks") == 301
     assert store.read_latest("other") == 999
     assert store.read_values("cardano_blocks") == {200, 250, 300, 301}
-    assert len(gets) == len(set(gets)) == 3
+
+
+def _ledger_rows(path):
+    """(table, value) -> created_at of a ledger at rest: one object."""
+    import pyarrow.parquet as pq
+
+    (name,) = _ledger_objects(path)
+    rows = pq.read_table(os.path.join(path, name)).to_pylist()
+    assert len(rows) == len({(r["table"], r["block_height"]) for r in rows})
+    return {(r["table"], r["block_height"]): r["created_at"] for r in rows}
+
+
+def test_watermark_crash_at_every_object_store_call(spark, tmp_path, monkeypatch):
+    """For every k, the k-th ObjectStore mutation of an upsert raises
+    (the put also once after writing half its bytes), on a ledger that
+    holds a legacy ``part-*`` object beside one version. The reopened
+    ledger reads as before or after the upsert, and a replay leaves
+    the uninterrupted run's rows in one object."""
+    import shutil
+
+    from cardano_spark.sources.objectstore import ObjectStore
+
+    base = str(tmp_path / "base")
+    store = _int_store(spark, base)
+    store.upsert("cardano_blocks", 100)
+    store.upsert("other", 5)
+    _legacy_append(spark, base, [("cardano_blocks", 150), ("other", 5)])
+    assert len(_ledger_objects(base)) == 2
+
+    def state(path):
+        reopened = _int_store(spark, path)
+        return {t: reopened.read_values(t) for t in ("cardano_blocks", "other")}
+
+    before = state(base)
+    calls, crash_at, torn = [0], [0], [False]
+    for name in ("put", "put_if_absent", "rename", "delete"):
+        def wrapped(self, *a, _name=name, _orig=getattr(ObjectStore, name)):
+            calls[0] += 1
+            if calls[0] == crash_at[0]:
+                if torn[0] and _name == "put_if_absent":
+                    _orig(self, a[0], a[1][: len(a[1]) // 2])
+                raise RuntimeError(f"injected crash at call {calls[0]}")
+            return _orig(self, *a)
+
+        monkeypatch.setattr(ObjectStore, name, wrapped)
+
+    def run(path, k, half=False):
+        shutil.copytree(base, path)
+        calls[0], crash_at[0], torn[0] = 0, k, half
+        try:
+            _int_store(spark, path).upsert("cardano_blocks", 200)
+        finally:
+            crash_at[0] = 0
+
+    clean = str(tmp_path / "clean")
+    run(clean, 0)
+    n_calls, after = calls[0], state(clean)
+    assert n_calls == 3 and after != before
+    expected = _ledger_rows(clean)
+    cases = [(k, False) for k in range(1, n_calls + 1)] + [(1, True)]
+    for k, half in cases:
+        path = str(tmp_path / f"crash{k}{'torn' if half else ''}")
+        with pytest.raises(RuntimeError, match="injected"):
+            run(path, k, half)
+        assert state(path) in (before, after), (k, half)
+        _int_store(spark, path).upsert("cardano_blocks", 200)
+        assert state(path) == after, (k, half)
+        rows = _ledger_rows(path)
+        assert rows.keys() == expected.keys(), (k, half)
+        new = ("cardano_blocks", 200)
+        assert {r: c for r, c in rows.items() if r != new} == {
+            r: c for r, c in expected.items() if r != new
+        }, (k, half)
+
+
+def test_watermark_skips_a_truncated_newest_object(spark, tmp_path):
+    store = _int_store(spark, str(tmp_path / "wm"))
+    store.upsert("cardano_blocks", 1)
+    store.upsert("cardano_blocks", 2)
+    (name,) = _ledger_objects(store.path)
+    with open(os.path.join(store.path, name), "rb") as f:
+        body = f.read()
+    with open(os.path.join(store.path, "00000000000000000002.parquet"), "wb") as f:
+        f.write(body[: len(body) // 2])
+    assert store.read_values("cardano_blocks") == {1, 2}
+    store.upsert("cardano_blocks", 3)
+    assert _ledger_objects(store.path) == ["00000000000000000003.parquet"]
+    assert store.read_values("cardano_blocks") == {1, 2, 3}
 
 
 def test_window_and_gate_logic():
