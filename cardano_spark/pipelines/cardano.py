@@ -278,9 +278,10 @@ def _load_zone(
     - provider ledger values written by the earlier Spark writer
       count like any other.
 
-    A crash between the merges and the ledger upserts reloads the
-    batch, which merges to zero new rows (the reference needed a DB
-    transaction for the same guarantee)."""
+    The loaded keys are recorded in one ledger version. A crash
+    between the merges and that upsert reloads the batches, which
+    merge to zero new rows (the reference needed a DB transaction for
+    the same guarantee)."""
     from pyspark.sql import Observation
 
     spec = ZONES[zone]
@@ -307,8 +308,7 @@ def _load_zone(
         lake.sink(table).merge(df.observe(obs, F.count(F.lit(1)).alias("n_rows")))
         counts[table] = obs.get["n_rows"]
     lake.last_load_counts = counts
-    for key in keys:
-        lake.s3_db_wm.upsert(spec.ledger, key)
+    lake.s3_db_wm.upsert(spec.ledger, *keys)
     return keys
 
 

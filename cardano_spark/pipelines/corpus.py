@@ -43,8 +43,9 @@ from cardano_spark.sinks.shards import (
     ShardManifest,
     write_training_shards,
     write_training_shards_delta,
-    write_training_shards_incremental,
 )
+# not called here: perfbench's corpus tracer wraps this name on this module
+from cardano_spark.sinks.shards import write_training_shards_incremental  # noqa: F401
 
 
 @dataclass(frozen=True)
@@ -125,8 +126,6 @@ def _drop_neardup(
     if rule == "keep_first_pairwise":
         dropped = pairs.select(F.col("id_b").alias("doc_id"))
         return docs.join(dropped, "doc_id", "left_anti")
-    if rule != "cluster_longest":
-        raise ValueError(f"unknown neardup rule: {rule!r}")
     comp = DD.connected_components(
         docs.select("doc_id"),
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")),
@@ -142,6 +141,89 @@ def _drop_neardup(
         .select("doc_id")
     )
     return docs.join(dropped, "doc_id", "left_anti")
+
+
+def _with_shard_key(frame: DataFrame) -> DataFrame:
+    """``frame`` with the export's content-hash shard key of each
+    ``doc_id``, the same in both builders."""
+    return frame.withColumn(
+        "_shard_key",
+        md5_long(F.concat(F.lit("corpus|"), F.col("doc_id").cast("string"))),
+    )
+
+
+def _with_text(frame: DataFrame, rewritten: DataFrame) -> DataFrame:
+    """``frame`` with ``text`` replaced from a ``(doc_id,
+    cleaned_text)`` frame (a row it lacks drops), in ``frame``'s column
+    order, and ``n_chars`` recomputed when the column is present. The
+    paragraph rebuild, the span cut and the retraction's re-cut all
+    rewrite text through it."""
+    cols = frame.columns
+    out = (
+        frame.drop("text")
+        .join(
+            rewritten.select("doc_id", F.col("cleaned_text").alias("text")),
+            "doc_id",
+        )
+        .select(*cols)
+    )
+    if "n_chars" in cols:
+        out = out.withColumn("n_chars", F.length("text").cast("long"))
+    return out
+
+
+def _decontaminate(
+    frame: DataFrame, benchmark: DataFrame, mode: str, contamination_max: float
+) -> DataFrame:
+    """Benchmark decontamination, the one definition for both builders
+    and the retraction. ``"drop"``: q58's whole-document gate, keeping
+    the rows whose distinct 3-gram overlap with the benchmark is at most
+    ``contamination_max``. ``"cut"``: q177's span-level excision — the
+    document keeps its clean text and only the verbatim benchmark spans
+    are removed (fully-excised or gutted documents then die at the
+    quality/min_tokens gate like any other thin document)."""
+    if mode == "cut":
+        return _with_text(
+            frame, CU.decontaminate_spans(frame, benchmark, "doc_id", "text", n=8)
+        )
+    shingles = TX.ngram_shingles(F.coalesce(F.col("text"), F.lit("")), 3)
+    contam = CU.benchmark_contamination(frame, benchmark, "doc_id", shingles, shingles)
+    clean_ids = contam.filter(
+        F.col("contamination") <= F.lit(float(contamination_max))
+    ).select("doc_id")
+    return frame.join(clean_ids, "doc_id", "left_semi")
+
+
+def _quality_gate(
+    frame: DataFrame, min_quality: float, min_tokens: int, quality_rules: str | None
+) -> DataFrame:
+    """The quality gate: the shared q30 formula plus a token floor,
+    and with ``quality_rules="gopher"`` q159's full rule stack, its
+    flags column inline so the gate stays a shuffle-free filter on the
+    same scan. The one definition for both builders and the cut-mode
+    re-evaluation: convergence demands it. Zero-token documents
+    (possible after span excision) never pass: the formula divides by
+    the token count, so it is evaluated behind the non-empty guard
+    (CASE short-circuits under ANSI mode; a bare `&` would still
+    evaluate both sides and raise)."""
+    toks = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
+    qcond = TX.quality_score(F.col("text")) >= F.lit(float(min_quality))
+    gate = (toks >= F.lit(int(min_tokens))) & F.when(toks >= 1, qcond).otherwise(
+        F.lit(False)
+    )
+    if quality_rules == "gopher":
+        _, gflags = CU.gopher_flag_columns(F.col("text"))
+        gate = gate & (gflags == F.lit(127))
+    return frame.filter(gate)
+
+
+def _check_modes(decontam_mode: str, quality_rules: str | None) -> None:
+    """The mode arguments both builders share, checked before any
+    Spark job or state write."""
+    if decontam_mode not in ("drop", "cut"):
+        raise ValueError(f"unknown decontam_mode: {decontam_mode!r}")
+    if quality_rules not in (None, "gopher"):
+        raise ValueError(f"unknown quality_rules: {quality_rules!r}")
 
 
 def build_corpus(
@@ -301,6 +383,15 @@ def build_corpus(
     runs over the same input produce identical shards and manifest
     (pinned by tests/test_corpus_pipeline.py).
     """
+    _check_modes(decontam_mode, quality_rules)
+    if neardup_rule not in ("cluster_longest", "keep_first_pairwise"):
+        raise ValueError(f"unknown neardup rule: {neardup_rule!r}")
+    if (target is None) != (select_top is None):
+        raise ValueError("target and select_top must be given together")
+    if split_mode not in (None, "doc", "cluster_safe"):
+        raise ValueError(f"unknown split_mode: {split_mode!r}")
+    if export_format not in ("parquet", "jsonl"):
+        raise ValueError(f"unknown shard format: {export_format!r}")
     if normalize:
         docs = docs.withColumn(
             "text", CU.normalize_text(F.col("text"))
@@ -324,22 +415,9 @@ def build_corpus(
     n_paragraph = -1
     if paragraph_dedup:
         reb = DD.paragraph_dedup(docs, "doc_id", "text")
-        cols = docs.columns
-        docs = (
-            docs.drop("text")
-            .join(
-                reb.filter(F.col("cleaned_text") != F.lit("")).select(
-                    "doc_id", F.col("cleaned_text").alias("text")
-                ),
-                "doc_id",
-            )
-            .select(*cols)
+        docs, counted = _checkpoint_counted(
+            _with_text(docs, reb.filter(F.col("cleaned_text") != F.lit("")))
         )
-        if "n_chars" in cols:
-            docs = docs.withColumn(
-                "n_chars", F.length("text").cast("long")
-            )
-        docs, counted = _checkpoint_counted(docs)
         n_paragraph = counted["n"]
         stage_ids.append(("paragraph", docs.select("doc_id")))
 
@@ -414,79 +492,27 @@ def build_corpus(
         n_semantic = counted["n"]
         stage_ids.append(("semantic", near.select("doc_id")))
 
-    # 3. benchmark decontamination (optional).
-    # "drop": q58's whole-document gate on the 3-gram overlap
-    # fraction. "cut": q177's span-level excision — the document
-    # keeps its clean text and only the verbatim benchmark spans are
-    # removed (fully-excised or gutted documents then die at the
-    # quality/min_tokens gate like any other thin document).
-    if decontam_mode not in ("drop", "cut"):
-        raise ValueError(f"unknown decontam_mode: {decontam_mode!r}")
+    # 3. benchmark decontamination (optional, _decontaminate's two
+    # modes)
     if benchmark is not None:
-        if decontam_mode == "cut":
-            cut = CU.decontaminate_spans(
-                near, benchmark, "doc_id", "text", n=8
-            )
-            cols = near.columns
-            near = (
-                near.drop("text")
-                .join(
-                    cut.select(
-                        "doc_id", F.col("cleaned_text").alias("text")
-                    ),
-                    "doc_id",
-                )
-                .select(*cols)
-            )
-            if "n_chars" in cols:
-                near = near.withColumn(
-                    "n_chars", F.length("text").cast("long")
-                )
-        else:
-            contam = CU.benchmark_contamination(
-                near,
-                benchmark,
-                "doc_id",
-                TX.ngram_shingles(F.coalesce(F.col("text"), F.lit("")), 3),
-                TX.ngram_shingles(F.coalesce(F.col("text"), F.lit("")), 3),
-            )
-            clean_ids = contam.filter(
-                F.col("contamination") <= F.lit(float(contamination_max))
-            ).select("doc_id")
-            near = near.join(clean_ids, "doc_id", "left_semi")
-        near, counted = _checkpoint_counted(near)
+        near, counted = _checkpoint_counted(
+            _decontaminate(near, benchmark, decontam_mode, contamination_max)
+        )
         n_decontam = counted["n"]
     else:
         n_decontam = n_near if n_semantic < 0 else n_semantic
     stage_ids.append(("decontam", near.select("doc_id")))
 
-    # 4. quality gate (shared q30 formula + a token floor; optional
-    # Gopher rule stack — q159's flags column inline, so the gate
-    # stays a shuffle-free filter on the same scan)
-    if quality_rules not in (None, "gopher"):
-        raise ValueError(f"unknown quality_rules: {quality_rules!r}")
-    toks = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
-    # zero-token documents (possible after span-level excision) never
-    # pass: the quality formula divides by the token count, so it is
-    # evaluated behind the non-empty guard (CASE short-circuits under
-    # ANSI mode; a bare `&` would still evaluate both sides and raise)
-    qcond = TX.quality_score(F.col("text")) >= F.lit(float(min_quality))
-    gate = (
-        (toks >= F.lit(int(min_tokens)))
-        & F.when(toks >= 1, qcond).otherwise(F.lit(False))
+    # 4. quality gate
+    kept, counted = _checkpoint_counted(
+        _quality_gate(near, min_quality, min_tokens, quality_rules)
     )
-    if quality_rules == "gopher":
-        _, gflags = CU.gopher_flag_columns(F.col("text"))
-        gate = gate & (gflags == F.lit(127))
-    kept, counted = _checkpoint_counted(near.filter(gate))
     n_quality = counted["n"]
     stage_ids.append(("quality", kept.select("doc_id")))
 
     # 5. optional DSIR target selection (exact-integer weights: the
     # log mode's float sums are partial-agg-order-dependent and
     # would break the two-run determinism pin)
-    if (target is None) != (select_top is None):
-        raise ValueError("target and select_top must be given together")
     if target is not None:
         sh = TX.ngram_shingles(F.coalesce(F.col("text"), F.lit("")), 2)
         scores = CU.dsir_scores(
@@ -518,8 +544,6 @@ def build_corpus(
     # 7. optional split assignment (doc-level q41 rule, or q137's
     # cluster-safe rule over the export survivors)
     split_counts: dict | None = None
-    if split_mode not in (None, "doc", "cluster_safe"):
-        raise ValueError(f"unknown split_mode: {split_mode!r}")
     if split_mode is not None:
         if split_mode == "cluster_safe":
             pairs = DD.minhash_lsh_pairs(
@@ -596,12 +620,12 @@ def build_corpus(
                 _pack(ordered, "_order"), path, "_order", n_shards,
                 fmt=export_format,
             )
-        sharded = _pack(frame, "doc_id").withColumn(
-            "_shard_key",
-            md5_long(F.concat(F.lit("corpus|"), F.col("doc_id").cast("string"))),
-        )
         return write_training_shards(
-            sharded, path, "_shard_key", n_shards, fmt=export_format
+            _with_shard_key(_pack(frame, "doc_id")),
+            path,
+            "_shard_key",
+            n_shards,
+            fmt=export_format,
         )
 
     split_manifests: dict | None = None
@@ -803,13 +827,15 @@ def build_corpus_incremental(
       ``build_corpus(..., semantic_centroids=model)`` over the
       union (pinned in tests).
     - **decontamination + quality**: per-row gates against the static
-      benchmark — stateless, |new|-bounded.
-    - **export**: survivors append to ``_state/survivors``; the first
-      batch exports in full (:func:`~cardano_spark.sinks.shards.
-      write_training_shards_incremental`), and every later batch
-      hands ONLY its new survivor rows to
+      benchmark — stateless, |new|-bounded. The paragraph rebuild,
+      decontamination and quality gate are the batch builder's own
+      functions (:func:`_with_text`, :func:`_decontaminate`,
+      :func:`_quality_gate`), so the two builders cannot drift apart.
+    - **export**: survivors append to ``_state/survivors``, and every
+      batch, the first included, hands ONLY its new survivor rows to
       :func:`~cardano_spark.sinks.shards.write_training_shards_delta`
-      — shard membership is a content hash, the touched shard
+      (the first into a path with no manifest, which starts the
+      export) — shard membership is a content hash, the touched shard
       directories are read back partition-pruned, and the manifest
       digests fold invertibly from the delta (cross-checked against a
       recompute over the touched content). The WRITES are
@@ -878,19 +904,21 @@ def build_corpus_incremental(
     probe drops the whole batch and only the watermark advances. The
     export precedes the seen-fold because a gated-out replay exports
     nothing (pinned by the torn-state replay test and the per-step
-    crash-point test). Retraction orders SHARD
-    DELTA FIRST, survivor delete second: retract ids derive from the
-    survivor state, so the reverse order would let a crash between
-    the two strand contaminated rows in the export (the replay would
-    re-derive an empty retract set). Both sides are idempotent by
+    crash-point test). Retraction orders SHARD DELTA FIRST, survivor
+    delete/rewrite second (one fold for the retraction-only pass and
+    the arrival pass, right behind the export): the retraction derives
+    from the survivor state, so the reverse order would let a crash
+    between the two strand contaminated rows in the export (the replay
+    would re-derive an empty retract set). Both sides are idempotent by
     key and the delta exporter verifies its folded manifest against
     a recompute — a torn retraction replays cleanly from a crash at
     either boundary (pinned by the torn-retraction replay test)."""
     from cardano_spark.sinks.merge import ParquetMergeSink
     from cardano_spark.watermark import ParquetWatermarkStore
 
-    if quality_rules not in (None, "gopher"):
-        raise ValueError(f"unknown quality_rules: {quality_rules!r}")
+    _check_modes(decontam_mode, quality_rules)
+    if semantic_refresh not in ("off", "auto"):
+        raise ValueError(f"unknown semantic_refresh: {semantic_refresh!r}")
     if retract_benchmark is not None:
         # gate against the UNION: contamination vs a shingle union is
         # not the max of the parts, and the batch twin gates vs the
@@ -957,7 +985,7 @@ def build_corpus_incremental(
     # exactly the re-admission candidates (a doc a WIDER cut gates
     # back in), diverging from the batch twin; dropping survivors'
     # originals would break re-cutting entirely (the coverage guard
-    # in _cut_retraction_changes then refuses to run). Deployments
+    # in _retraction then refuses to run). Deployments
     # that cannot carry 2x text choose decontam_mode="drop", whose
     # retraction path needs no retained originals. The cost is
     # stated in the CLI's --decontam-mode help.
@@ -968,8 +996,6 @@ def build_corpus_incremental(
         if decontam_mode == "cut"
         else None
     )
-    if semantic_refresh not in ("off", "auto"):
-        raise ValueError(f"unknown semantic_refresh: {semantic_refresh!r}")
     # semantic-stage state: per-doc frozen-model assignments (every
     # post-near-dup doc — the batch twin's blocker set; model_version
     # keys the lazy post-refresh migration) and the versioned
@@ -1013,180 +1039,125 @@ def build_corpus_incremental(
         else None
     )
 
-    def _with_shard_key(frame):
-        return frame.withColumn(
-            "_shard_key",
-            md5_long(
-                F.concat(F.lit("corpus|"), F.col("doc_id").cast("string"))
-            ),
-        )
-
-    def _retraction_ids():
-        """doc_ids of previously-exported survivors now contaminated
-        against the (unioned) benchmark — checked once per benchmark
-        arrival, corpus-sized scan, touched-shard-bounded writes."""
-        old_surv = surv_sink.read()
-        contam_old = CU.benchmark_contamination(
-            old_surv,
-            benchmark,
-            "doc_id",
-            TX.ngram_shingles(F.coalesce(F.col("text"), F.lit("")), 3),
-            TX.ngram_shingles(F.coalesce(F.col("text"), F.lit("")), 3),
-        )
-        return (
-            contam_old.filter(
-                F.col("contamination") > F.lit(float(contamination_max))
+    def _retraction():
+        """A requested retraction's changes to the export of the
+        previously-processed docs (``doc_id <= wm``; a replay of a torn
+        batch may already hold the batch's own survivors, which were
+        gated against the same union): (rewritten rows, removed ids,
+        n_retracted), each frame None when empty. Drop mode removes the
+        survivors :func:`_decontaminate` no longer keeps. Cut mode
+        re-cuts every previously-processed pre-cut original against the
+        union, re-gates, and diffs against the survivors: rows whose
+        exported text changes are rewritten (including docs the wider
+        cut re-admits past the non-monotone quality gate), rows that no
+        longer pass are removed, and ``n_retracted`` counts the exported
+        rows rewritten or removed. The scan is corpus-sized (a new
+        benchmark must be checked against every retained doc once, per
+        benchmark arrival, not per batch); the shard writes stay
+        touched-shard-bounded because unchanged rows are diffed out."""
+        if wm is None:
+            # nothing exported yet: 0, reserving -1 strictly for "not
+            # requested" (r9 ADVICE)
+            return None, None, 0
+        old_surv = surv_sink.read().filter(F.col("doc_id") <= wm)
+        if decontam_mode == "drop":
+            new_surv = _decontaminate(
+                old_surv, benchmark, "drop", contamination_max
             )
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
-
-    def _quality_gate(df):
-        """The shared post-decontam gate — the SAME expression for
-        arriving batches and for cut-mode re-evaluation (convergence
-        demands a single definition)."""
-        toks = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
-        qcond = (
-            TX.quality_score(F.col("text")) >= F.lit(float(min_quality))
-        )
-        gate = (
-            (toks >= F.lit(int(min_tokens)))
-            & F.when(toks >= 1, qcond).otherwise(F.lit(False))
-        )
-        if quality_rules == "gopher":
-            _, gflags = CU.gopher_flag_columns(F.col("text"))
-            gate = gate & (gflags == F.lit(127))
-        return df.filter(gate)
-
-    def _cut_retraction_changes():
-        """Cut-mode retraction (r9 verdict task 7): re-cut every
-        PREVIOUSLY-processed pre-cut original against the unioned
-        benchmark, re-gate, and diff against the exported survivor
-        state. Returns (upsert_rows, delete_ids, n_affected):
-        ``upsert_rows`` are survivors whose exported text changes
-        (including docs the wider cut re-admits past the
-        non-monotone quality gate), ``delete_ids`` are exported docs
-        that no longer pass, ``n_affected`` counts previously-
-        exported rows rewritten or removed. The scan is corpus-sized
-        (a new benchmark must be checked against every retained doc
-        once, per benchmark arrival, not per batch); the shard
-        writes stay touched-shard-bounded because unchanged rows are
-        diffed out."""
-        pre = precut_sink.read()
-        if wm is not None:
-            # previously-processed docs only (replay safety: a torn
-            # run may have folded precut without advancing the
-            # watermark; those rows re-enter as the current batch)
-            pre = pre.filter(F.col("doc_id") <= wm)
-        cut = CU.decontaminate_spans(pre, benchmark, "doc_id", "text", n=8)
-        cols = pre.columns
-        recut = (
-            pre.drop("text")
-            .join(
-                cut.select("doc_id", F.col("cleaned_text").alias("text")),
+            changed, n_rewritten = None, 0
+        else:
+            pre = precut_sink.read().filter(F.col("doc_id") <= wm)
+            old_surv = old_surv.localCheckpoint(eager=False)
+            # Coverage guard (r10 ADVICE, medium): the diff below
+            # treats any exported survivor ABSENT from new_surv as
+            # retracted. If the precut state doesn't cover the export
+            # — corpus built in drop mode then switched to cut, or
+            # exported before the precut state existed — every
+            # uncovered survivor would be removed and the whole export
+            # silently deleted. Fail loudly instead: cut-mode
+            # retraction is only defined over survivors whose pre-cut
+            # original was retained.
+            n_uncovered = old_surv.join(
+                pre.select("doc_id"), "doc_id", "left_anti"
+            ).count()
+            if n_uncovered:
+                raise RuntimeError(
+                    "cut-mode retraction: %d exported survivor(s) have no "
+                    "retained pre-cut original in _state/precut (corpus "
+                    "previously built with decontam_mode='drop', or "
+                    "exported before cut mode existed). Refusing to diff: "
+                    "uncovered survivors would be treated as retracted and "
+                    "deleted. Rebuild the corpus in cut mode, or retract "
+                    "with decontam_mode='drop'." % n_uncovered
+                )
+            new_surv = _quality_gate(
+                _decontaminate(pre, benchmark, "cut", contamination_max),
+                min_quality, min_tokens, quality_rules,
+            )
+            old_texts = old_surv.select(
                 "doc_id",
+                F.col("text").alias("_old_text"),
+                F.lit(1).alias("_was"),
             )
-            .select(*cols)
-        )
-        if "n_chars" in cols:
-            recut = recut.withColumn(
-                "n_chars", F.length("text").cast("long")
+            changed = (
+                new_surv.join(old_texts, "doc_id", "left")
+                .filter(~F.col("text").eqNullSafe(F.col("_old_text")))
+                .localCheckpoint(eager=True)
             )
-        new_surv = _quality_gate(recut)
-        old_surv = surv_sink.read().localCheckpoint(eager=False)
-        # Coverage guard (r10 ADVICE, medium): the diff below treats
-        # any exported survivor ABSENT from new_surv as retracted. If
-        # the precut state doesn't cover the export — corpus built in
-        # drop mode then switched to cut, or exported before the
-        # precut state existed — every uncovered survivor would land
-        # in ``gone`` and the whole export would be silently deleted.
-        # Fail loudly instead: cut-mode retraction is only defined
-        # over survivors whose pre-cut original was retained.
-        n_uncovered = old_surv.join(
-            pre.select("doc_id"), "doc_id", "left_anti"
-        ).count()
-        if n_uncovered:
-            raise RuntimeError(
-                "cut-mode retraction: %d exported survivor(s) have no "
-                "retained pre-cut original in _state/precut (corpus "
-                "previously built with decontam_mode='drop', or "
-                "exported before cut mode existed). Refusing to diff: "
-                "uncovered survivors would be treated as retracted and "
-                "deleted. Rebuild the corpus in cut mode, or retract "
-                "with decontam_mode='drop'." % n_uncovered
-            )
-        old_texts = old_surv.select(
-            "doc_id", F.col("text").alias("_old_text")
-        )
-        changed = (
-            new_surv.join(old_texts, "doc_id", "left")
-            .filter(~F.col("text").eqNullSafe(F.col("_old_text")))
-            .drop("_old_text")
-            .localCheckpoint(eager=True)
-        )
+            # one pass counts the changed rows and, of them, the ones
+            # exported before (rewritten, not re-admitted)
+            n = changed.agg(
+                F.count(F.lit(1)).alias("n"), F.count("_was").alias("was")
+            ).first()
+            changed = changed.drop("_old_text", "_was") if n["n"] else None
+            n_rewritten = n["was"]
         gone = (
             old_surv.join(new_surv.select("doc_id"), "doc_id", "left_anti")
             .select("doc_id")
             .localCheckpoint(eager=True)
         )
-        n_rewritten = changed.join(
-            old_texts.select("doc_id"), "doc_id", "left_semi"
-        ).count()
-        return changed, gone, gone.count() + n_rewritten
+        n_gone = gone.count()
+        return changed, gone if n_gone else None, n_gone + n_rewritten
 
+    def _fold_export(inserts, rewritten, removed):
+        """The run's one export: a shard delta of the inserts, the
+        retraction's rewrites (upserts: the same key replaces) and its
+        removals, then the retraction's survivor changes. Shard delta
+        FIRST (CRASH SAFETY): the retraction derives from the survivor
+        state, so changing it first would let a crash in between strand
+        retracted rows in the export."""
+        if rewritten is not None:
+            inserts = inserts.unionByName(rewritten)
+        export = write_training_shards_delta(
+            _with_shard_key(inserts),
+            dest,
+            "_shard_key",
+            n_shards,
+            delete_keys=(
+                None
+                if removed is None
+                else _with_shard_key(removed).select("_shard_key")
+            ),
+        )
+        if removed is not None:
+            surv_sink.delete(removed)
+        if rewritten is not None:
+            surv_sink.merge(rewritten, mode="upsert")
+        return export
+
+    rewritten = removed = None
+    n_retracted = -1
+    if retract_benchmark is not None:
+        # against the PRE-batch survivor state (batch ids are > wm, so
+        # the sets are disjoint; the batch is gated against the same
+        # unioned benchmark below)
+        rewritten, removed, n_retracted = _retraction()
     if n_arrived == 0:
-        n_retracted = -1
+        # retraction-only pass (or nothing at all): the watermark and
+        # the indexes stay
         export = None
-        if retract_benchmark is not None and wm is None:
-            # retraction requested against a never-exported corpus:
-            # report 0, reserving -1 strictly for "not requested"
-            # (r9 ADVICE) — callers can tell a requested-but-empty
-            # retraction from none requested
-            n_retracted = 0
-        elif retract_benchmark is not None and decontam_mode == "cut":
-            # retraction-only pass, cut mode: rewrite re-cut rows,
-            # delete rows the wider cut gates out — shard delta
-            # FIRST, survivor state second (the same crash-window
-            # argument as drop mode: the diff derives from
-            # precut + OLD survivor state, so mutating survivors
-            # before the shards are fixed would make a replay diff
-            # against already-updated state and strand the export)
-            changed, gone, n_retracted = _cut_retraction_changes()
-            if changed.count() or n_retracted:
-                export = write_training_shards_delta(
-                    _with_shard_key(changed),
-                    dest,
-                    "_shard_key",
-                    n_shards,
-                    delete_keys=_with_shard_key(gone).select("_shard_key"),
-                )
-                surv_sink.delete(gone)
-                surv_sink.merge(changed, mode="upsert")
-        elif retract_benchmark is not None:
-            # retraction-only pass: a benchmark arrived, no new docs.
-            # Shard delta FIRST, survivor delete second (r9 ADVICE):
-            # retract_ids derive from the survivor state, so deleting
-            # survivors before the shards are fixed would make a
-            # replay after a crash in between re-derive an EMPTY
-            # retract set and strand contaminated rows in the export
-            # forever. Both operations are idempotent by key (a delta
-            # delete of absent keys folds to a no-op and the digest
-            # recompute agrees), so with this order a crash at either
-            # boundary replays to the converged state — pinned by the
-            # torn-retraction replay test.
-            retract_ids = _retraction_ids()
-            n_retracted = retract_ids.count()
-            if n_retracted:
-                export = write_training_shards_delta(
-                    _with_shard_key(surv_sink.read().limit(0)),
-                    dest,
-                    "_shard_key",
-                    n_shards,
-                    delete_keys=_with_shard_key(retract_ids).select(
-                        "_shard_key"
-                    ),
-                )
-                surv_sink.delete(retract_ids)
+        if rewritten is not None or removed is not None:
+            export = _fold_export(batch, rewritten, removed)
         return IncrementalCorpusAudit(
             n_arrived=0, n_after_exact=0, n_after_neardup=0,
             n_after_decontam=0, n_after_quality=0,
@@ -1214,22 +1185,9 @@ def build_corpus_incremental(
         reb, new_para_digests = DD.paragraph_dedup_incremental(
             batch, para_sink.read().select("digest"), "doc_id", "text"
         )
-        cols = batch.columns
-        batch = (
-            batch.drop("text")
-            .join(
-                reb.filter(F.col("cleaned_text") != F.lit("")).select(
-                    "doc_id", F.col("cleaned_text").alias("text")
-                ),
-                "doc_id",
-            )
-            .select(*cols)
+        batch, counted = _checkpoint_counted(
+            _with_text(batch, reb.filter(F.col("cleaned_text") != F.lit("")))
         )
-        if "n_chars" in cols:
-            batch = batch.withColumn(
-                "n_chars", F.length("text").cast("long")
-            )
-        batch, counted = _checkpoint_counted(batch)
         n_paragraph = counted["n"]
 
     seen = seen_sink.read()
@@ -1435,76 +1393,23 @@ def build_corpus_incremental(
     # decontamination (per-row vs the static benchmark — both modes
     # are |new|-bounded, so the batch/incremental convergence contract
     # holds for "cut" exactly as for "drop")
-    if decontam_mode not in ("drop", "cut"):
-        raise ValueError(f"unknown decontam_mode: {decontam_mode!r}")
     if benchmark is not None:
-        if decontam_mode == "cut":
-            cut = CU.decontaminate_spans(
-                near_new, benchmark, "doc_id", "text", n=8
-            )
-            cols = near_new.columns
-            near_new = (
-                near_new.drop("text")
-                .join(
-                    cut.select(
-                        "doc_id", F.col("cleaned_text").alias("text")
-                    ),
-                    "doc_id",
-                )
-                .select(*cols)
-            )
-            if "n_chars" in cols:
-                near_new = near_new.withColumn(
-                    "n_chars", F.length("text").cast("long")
-                )
-        else:
-            contam = CU.benchmark_contamination(
-                near_new,
-                benchmark,
-                "doc_id",
-                TX.ngram_shingles(F.coalesce(F.col("text"), F.lit("")), 3),
-                TX.ngram_shingles(F.coalesce(F.col("text"), F.lit("")), 3),
-            )
-            clean_ids = contam.filter(
-                F.col("contamination") <= F.lit(float(contamination_max))
-            ).select("doc_id")
-            near_new = near_new.join(clean_ids, "doc_id", "left_semi")
-        near_new, counted = _checkpoint_counted(near_new)
+        near_new, counted = _checkpoint_counted(
+            _decontaminate(near_new, benchmark, decontam_mode, contamination_max)
+        )
         n_decontam = counted["n"]
     else:
         # no decontamination stage: the frame is the one counted last
         n_decontam = n_semantic if embeddings is not None else n_near
 
-    # quality gate (shared q30 formula + token floor; optional Gopher;
-    # zero-token docs — possible after span excision — guarded out
-    # before the formula's division, same as the batch gate; the SAME
-    # _quality_gate definition re-evaluates cut-mode retractions)
-    kept_new, counted = _checkpoint_counted(_quality_gate(near_new))
+    kept_new, counted = _checkpoint_counted(
+        _quality_gate(near_new, min_quality, min_tokens, quality_rules)
+    )
     n_quality = counted["n"]
 
-    # late-decontamination retraction: computed against the PRE-batch
-    # survivor state (batch ids are > wm, so the sets are disjoint;
-    # batch rows were gated against the same unioned benchmark above).
-    # Drop mode removes contaminated ids; cut mode re-cuts the stored
-    # ORIGINALS against the union and diffs (rewrites + removals +
-    # re-admissions).
-    retract_ids = None
-    retract_changed = None
-    retract_gone = None
-    n_retracted = -1
-    if retract_benchmark is not None and decontam_mode == "cut":
-        if wm is not None:
-            retract_changed, retract_gone, n_retracted = (
-                _cut_retraction_changes()
-            )
-        else:
-            n_retracted = 0  # requested, but nothing exported yet
-    elif retract_benchmark is not None:
-        retract_ids = _retraction_ids()
-        n_retracted = retract_ids.count()
-
     # fold state forward through the keyed idempotent sinks, in
-    # crash-safe order: survivors, then the export, then the
+    # crash-safe order: survivors, then the export (with the
+    # retraction's survivor changes right behind it), then the
     # growth-only indexes with the seen-digest GATE among them — a
     # replay before the seen-fold recomputes identically and the
     # merges and the export absorb duplicates; a replay after it is
@@ -1515,41 +1420,12 @@ def build_corpus_incremental(
     # by the EXACT survivors (near-dup-dropped docs stay in the index
     # — the pairwise rule compares against every seen doc).
     surv_sink.merge(kept_new.drop("_digest"))
-
-    # export: first batch writes the corpus in full; every later batch
-    # is |new|-bounded — the survivor corpus is APPEND-ONLY under the
-    # watermark gate (new doc_ids only, dedup drops only arrivals)
-    # except for explicit retraction, so the export delta is exactly
-    # kept_new (+ the retraction's delete keys) and the delta exporter
-    # touches only the shards those rows land in (r7 verdict item 1:
-    # no more per-increment corpus scans). Inserts and deletes ride
-    # ONE delta call — the manifest digest-fold exercises xor
-    # self-inverse and modular-sum subtraction together.
-    if wm is None:
-        export = write_training_shards_incremental(
-            _with_shard_key(surv_sink.read()), dest, "_shard_key", n_shards
-        )
-    else:
-        inserts = kept_new.drop("_digest")
-        delete_keys = None
-        if retract_changed is not None:
-            # cut-mode retraction rides the SAME delta call: rewrites
-            # are upserts (same key replaces), removals are deletes
-            inserts = inserts.unionByName(retract_changed)
-            delete_keys = _with_shard_key(retract_gone).select(
-                "_shard_key"
-            )
-        elif retract_ids is not None and n_retracted:
-            delete_keys = _with_shard_key(retract_ids).select(
-                "_shard_key"
-            )
-        export = write_training_shards_delta(
-            _with_shard_key(inserts),
-            dest,
-            "_shard_key",
-            n_shards,
-            delete_keys=delete_keys,
-        )
+    # the export is |new|-bounded: the survivor corpus is APPEND-ONLY
+    # under the watermark gate (new doc_ids only, dedup drops only
+    # arrivals) except for explicit retraction, so the export delta is
+    # exactly kept_new (+ the retraction's rewrites and removals), and
+    # the first batch is a delta into an export with no shards
+    export = _fold_export(kept_new.drop("_digest"), rewritten, removed)
     if precut_sink is not None and precut_new is not None:
         # growth-only like bands: folds BEFORE the seen gate, so a
         # replay that re-presents the batch re-merges idempotently
@@ -1566,18 +1442,6 @@ def build_corpus_incremental(
     # only the watermark advances.
     if para_sink is not None and new_para_digests is not None:
         para_sink.merge(new_para_digests)
-    # NOTE the retraction's survivor delete runs AFTER the export
-    # delta above (r9 ADVICE): retract_ids derive from the survivor
-    # state, so deleting survivors before the shard delta lands would
-    # let a crash in between strand contaminated rows in the export —
-    # a replay would re-derive an empty retract set. The delta's
-    # delete_keys fold idempotently, so shards-first converges from a
-    # crash at either boundary (torn-retraction replay test).
-    if retract_changed is not None:
-        surv_sink.delete(retract_gone)
-        surv_sink.merge(retract_changed, mode="upsert")
-    elif retract_ids is not None and n_retracted:
-        surv_sink.delete(retract_ids)
     # post-retraction state: the audit's survivor total must reflect
     # the delete/rewrite that just landed
     survivors = surv_sink.read()

@@ -287,15 +287,14 @@ def write_training_shards_incremental(
 
     ROLE (r8 verdict task 7): this exporter SCANS THE WHOLE SOURCE
     twice per run (digest pass + rewrite scan) to *derive* what
-    changed. In the incremental corpus build it is therefore the
-    BASELINE/FIRST-EXPORT path only; every post-baseline batch routes
-    through :func:`write_training_shards_delta`, which is handed the
-    changes and never scans the corpus (pinned by
-    tests/test_corpus_pipeline.py::
-    test_build_corpus_incremental_full_exporter_baseline_only — do
-    not re-wire the O(corpus) path into the per-batch loop). Outside
-    that pipeline it remains the right tool when only the updated
-    corpus is available and the delta is unknown.
+    changed. The incremental corpus build therefore never calls it:
+    every batch, the first included, hands its changes to
+    :func:`write_training_shards_delta`, which never scans the corpus
+    (pinned by tests/test_corpus_pipeline.py::
+    test_build_corpus_incremental_exports_through_delta_only). It is
+    the CLI's ``export-shards --incremental``, the right tool when
+    only the updated corpus is available and the delta is unknown,
+    and the reference the delta exporter's tests compare against.
 
     Differences from :func:`write_training_shards` (the full
     exporter) and ``ParquetMergeSink`` (the keyed upsert sink):
@@ -424,22 +423,19 @@ def write_training_shards_delta(
     tagged content (the digest collect fills it and the write reads
     it, not the shard files and the shuffle again).
 
-    Requires an existing export (manifest with per-shard digests) at
-    ``path`` whose ``n_shards`` matches — the first export of a corpus
-    is full by definition. Reference analogue: the watermark-bounded
-    per-batch upload in s3_to_db_cardano_blocks_pipeline.py:64-127 —
-    work proportional to the batch, never the table."""
+    A path with no manifest is an export with no shards: the first
+    delta starts it, and publishes its manifest even with no rows, as
+    the full exporter does. An existing export must be this layout
+    (per-shard digests, the same ``n_shards``); a manifest without
+    digests (the range exporter's) raises. Reference analogue: the
+    watermark-bounded per-batch upload in
+    s3_to_db_cardano_blocks_pipeline.py:64-127 — work proportional to
+    the batch, never the table."""
     spark = upserts.sparkSession
     store = ObjectStore(spark, path)
     manifest = _roll_forward(store)
-    if manifest is None:
-        raise ValueError(
-            "write_training_shards_delta needs an existing export "
-            f"(no _manifest.json under {path!r}); run the full "
-            "exporter for the first batch"
-        )
     old: dict[int, dict] = {}
-    for sh in manifest.shards:
+    for sh in manifest.shards if manifest else []:
         if "shard_id" not in sh or "digest" not in sh:
             raise ValueError(
                 "manifest lacks per-shard digests (written by the "
@@ -469,6 +465,8 @@ def write_training_shards_delta(
         }
     touched = sorted(touched)
     if not touched:
+        if manifest is None:  # a first export publishes even with no rows
+            manifest = _write_manifest(store, [])
         return IncrementalExportResult(
             manifest=manifest, n_rewritten=0, n_deleted=0, rewritten=[]
         )

@@ -93,20 +93,22 @@ class ParquetWatermarkStore:
         """``SELECT max(wm) WHERE table=:t`` (A1/A2)."""
         return max(self.read_values(table), default=None)
 
-    def upsert(self, table: str, value: int) -> None:
-        """Record one status row (K5): commit the next version, keeping
-        the first ``created_at`` per key, then delete the objects it
-        replaces. A replay on a one-object ledger commits nothing."""
+    def upsert(self, table: str, *values: int) -> None:
+        """Record one status row per value (K5) in one commit: the next
+        version, keeping the first ``created_at`` per key, then delete
+        the objects it replaces. A replay whose values are all present
+        on a one-object ledger commits nothing."""
         names, rows = self._read(self._arrow_schema.names)
-        key = (pc.field("table") == table) & (pc.field(self.wm_col) == value)
-        if len(names) == 1 and rows.filter(key).num_rows:
+        have = rows.filter(pc.field("table") == table)[self.wm_col].to_pylist()
+        if len(names) == 1 and set(have).issuperset(values):
             return
-        row = pa.Table.from_pylist(
-            [{"table": table, self.wm_col: value, "created_at": datetime.now(timezone.utc)}],
+        now = datetime.now(timezone.utc)
+        new = pa.Table.from_pylist(
+            [{"table": table, self.wm_col: v, "created_at": now} for v in values],
             schema=self._arrow_schema,
         )
         snapshot = (
-            pa.concat_tables([rows, row])
+            pa.concat_tables([rows, new])
             .group_by(["table", self.wm_col], use_threads=False)
             .aggregate([("created_at", "min")])
             .select(["table", self.wm_col, "created_at_min"])

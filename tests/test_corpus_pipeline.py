@@ -527,20 +527,79 @@ def test_build_corpus_attributes_ledger_with_paragraph_dedup(
     assert led[2].quality_fp == led[1].quality_fp
 
 
-def test_build_corpus_incremental_converges_to_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "incremental, bad",
+    [
+        (False, dict(decontam_mode="strip")),
+        (False, dict(quality_rules="c4")),
+        (False, dict(select_top=3)),
+        (False, dict(split_mode="random")),
+        (False, dict(neardup_rule="longest")),
+        (False, dict(export_format="csv")),
+        (True, dict(decontam_mode="strip")),
+        (True, dict(quality_rules="c4")),
+        (True, dict(semantic_refresh="always")),
+    ],
+)
+def test_bad_arguments_raise_before_any_spark_job(
+    spark, tmp_path, count_jobs, incremental, bad
+):
+    """Every argument is checked at the top of each builder: a bad
+    value raises before any Spark job runs or any state is written
+    (a mistyped decontam_mode used to raise only after the dedup
+    stages, and with embeddings after the semantic model froze)."""
+    from cardano_spark.pipelines.corpus import build_corpus_incremental
+
+    docs = _docs(spark)
+    dest = tmp_path / "out"
+    if incremental:
+        emb = spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in range(1, 7)],
+            "doc_id long, embedding array<float>",
+        )
+        run = lambda: build_corpus_incremental(  # noqa: E731
+            spark, docs, str(dest), embeddings=emb, **bad
+        )
+    else:
+        run = lambda: build_corpus(spark, docs, str(dest), **bad)  # noqa: E731
+
+    def call():
+        with pytest.raises(ValueError, match="unknown|together"):
+            run()
+
+    _, jobs = count_jobs(call)
+    assert jobs == 0
+    assert not dest.exists()
+
+
+@pytest.mark.parametrize("quality_rules", [None, "gopher"])
+def test_build_corpus_incremental_converges_to_batch(
+    spark, tmp_path, quality_rules
+):
     """The watermark-gated incremental build's convergence contract
     (the q136 discipline applied end-to-end): for ANY arrival split
     (1, 2, 3 id-ranged batches) over the same corpus, the cumulative
     survivor set AND the shard read-back equal the BATCH
     build_corpus(neardup_rule='keep_first_pairwise') over the union
-    — with a benchmark gate and quality floor active, on a real
-    document slice with exact and near duplicates."""
+    — with a benchmark gate and quality floor active (and the Gopher
+    rule stack, in the second case), on a real document slice with
+    exact and near duplicates."""
     from cardano_spark.catalog import table
     from cardano_spark.pipelines.corpus import build_corpus_incremental
 
     docs = table(spark, SF_SMALL, "documents").filter(
         F.col("doc_id") % 3 == 0
     )
+    if quality_rules == "gopher":
+        # the fixture texts carry none of the Gopher required words:
+        # give every other document two, so the rule stack keeps some
+        # documents and drops others
+        docs = docs.withColumn(
+            "text",
+            F.when(
+                F.col("doc_id") % 2 == 0, F.concat("text", F.lit(" the and"))
+            ).otherwise(F.col("text")),
+        )
     bench = (
         table(spark, SF_SMALL, "documents")
         .filter(F.col("doc_id") < 15)
@@ -550,6 +609,7 @@ def test_build_corpus_incremental_converges_to_batch(spark, tmp_path):
     kw = dict(
         benchmark=bench, neardup_threshold=0.8, contamination_max=0.2,
         min_quality=0.3, min_tokens=3, n_shards=4,
+        quality_rules=quality_rules,
     )
 
     batch_dest = str(tmp_path / "batch")
@@ -563,6 +623,8 @@ def test_build_corpus_incremental_converges_to_batch(spark, tmp_path):
     assert batch_ids, "fixture produced no survivors"
     # the gates are non-trivial on this slice
     assert batch_audit.n_after_quality < batch_audit.n_input
+    if quality_rules == "gopher":
+        assert batch_audit.n_after_quality < batch_audit.n_after_decontam
 
     shard_maps = []
     for n_batches, cuts in ((1, []), (2, [250]), (3, [160, 330])):
@@ -723,23 +785,29 @@ def test_build_corpus_incremental_retraction_only_pass(spark, tmp_path):
     assert a2.n_survivors_total == 1
 
 
-def test_build_corpus_incremental_full_exporter_baseline_only(
+def test_build_corpus_incremental_exports_through_delta_only(
     spark, tmp_path, monkeypatch
 ):
     """r8 verdict task 7: the O(corpus) full-scan exporter
-    (write_training_shards_incremental) runs for the BASELINE batch
-    only; every post-baseline batch routes through the |new|-bounded
-    delta exporter. Counted by monkeypatching both seams."""
+    (write_training_shards_incremental) never runs in the arrival
+    loop; every batch, the first included, makes one call of the
+    |new|-bounded delta exporter. Counted by monkeypatching both
+    seams. The first batch's delta into an empty path publishes the
+    manifest the full exporter writes over the same survivors."""
     import cardano_spark.pipelines.corpus as corpus_mod
+    from cardano_spark.functions.hashing import md5_long
     from cardano_spark.pipelines.corpus import build_corpus_incremental
+    from cardano_spark.sinks.shards import (
+        read_manifest,
+        write_training_shards_incremental,
+    )
 
     calls = {"full": 0, "delta": 0}
-    real_full = corpus_mod.write_training_shards_incremental
     real_delta = corpus_mod.write_training_shards_delta
 
     def count_full(*a, **kw):
         calls["full"] += 1
-        return real_full(*a, **kw)
+        return write_training_shards_incremental(*a, **kw)
 
     def count_delta(*a, **kw):
         calls["delta"] += 1
@@ -761,16 +829,32 @@ def test_build_corpus_incremental_full_exporter_baseline_only(
         "doc_id long, text string, lang string, source string, n_chars long"
     )
     dest = str(tmp_path / "inc")
-    build_corpus_incremental(
-        spark, spark.createDataFrame([mk(1), mk(2)], schema), dest,
-        n_shards=2,
+    first = spark.createDataFrame([mk(1), mk(2)], schema)
+    a1 = build_corpus_incremental(spark, first, dest, n_shards=2)
+    assert calls == {"full": 0, "delta": 1}          # first batch: delta
+    assert a1.n_survivors_total == 2
+
+    full_dest = str(tmp_path / "full")
+    write_training_shards_incremental(
+        first.withColumn(
+            "_shard_key",
+            md5_long(F.concat(F.lit("corpus|"), F.col("doc_id").cast("string"))),
+        ),
+        full_dest,
+        "_shard_key",
+        2,
     )
-    assert calls == {"full": 1, "delta": 0}          # baseline: full
+    md, mf = read_manifest(dest), read_manifest(full_dest)
+    assert md.n_rows == mf.n_rows == 2
+    assert [(s["shard_id"], s["rows"], s["digest"]) for s in md.shards] == [
+        (s["shard_id"], s["rows"], s["digest"]) for s in mf.shards
+    ]
+
     for batch in ([mk(3)], [mk(4), mk(5)]):
         build_corpus_incremental(
             spark, spark.createDataFrame(batch, schema), dest, n_shards=2
         )
-    assert calls == {"full": 1, "delta": 2}          # post-baseline: delta
+    assert calls == {"full": 0, "delta": 3}          # one delta per batch
 
 
 def test_build_corpus_incremental_retraction_cut_mode_e2e(
@@ -1183,6 +1267,56 @@ def test_build_corpus_incremental_crash_at_each_fold_step_converges(
     audit = CORPUS.build_corpus_incremental(spark, b2, dest, **_FOLD_KW)
     assert audit.watermark == 11 and audit.n_survivors_total == 2
     assert _fold_outcome(spark, dest, b2.schema) == clean_fold
+
+
+@pytest.mark.parametrize("step", ["shard_delta", "precut"])
+def test_build_corpus_incremental_cut_retraction_crash_converges(
+    spark, tmp_path, monkeypatch, step
+):
+    """A cut-mode arrival batch that also retracts crashes after its
+    survivors folded; the replay sees the batch's own survivors in the
+    state but no pre-cut originals for them yet. The retraction diffs
+    only the previously-processed docs, so the replay converges to an
+    uninterrupted run instead of refusing them as uncovered."""
+    import cardano_spark.pipelines.corpus as CORPUS
+    from cardano_spark.sinks.merge import ParquetMergeSink
+
+    b1, b2 = _fold_batches(spark)
+    retract = spark.createDataFrame(
+        [("the first document body is long enough with",)], "text string"
+    )
+    kw = dict(_FOLD_KW, retract_benchmark=retract)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError(f"simulated crash at {step}")
+
+    real_merge = ParquetMergeSink.merge
+
+    def merge_or_crash(self, *args, **kwargs):
+        if self.path.endswith("/_state/precut"):
+            crash()
+        return real_merge(self, *args, **kwargs)
+
+    outcomes = []
+    for torn in (False, True):
+        dest = str(tmp_path / f"torn{torn}")
+        CORPUS.build_corpus_incremental(spark, b1, dest, **_FOLD_KW)
+        if torn:
+            with monkeypatch.context() as m:
+                if step == "shard_delta":
+                    m.setattr(CORPUS, "write_training_shards_delta", crash)
+                else:
+                    m.setattr(ParquetMergeSink, "merge", merge_or_crash)
+                with pytest.raises(RuntimeError, match="simulated crash"):
+                    CORPUS.build_corpus_incremental(spark, b2, dest, **kw)
+        audit = CORPUS.build_corpus_incremental(spark, b2, dest, **kw)
+        assert audit.watermark == 11
+        if not torn:
+            assert audit.n_retracted == 1  # doc 10 re-cut
+        outcomes.append(_fold_outcome(spark, dest, b2.schema))
+    assert outcomes[0] == outcomes[1]
+    exported = dict(outcomes[0][1])
+    assert exported[10] != b1.first().text and 11 in exported
 
 
 def test_build_corpus_decontam_cut_mode(spark, tmp_path):

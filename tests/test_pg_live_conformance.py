@@ -14,11 +14,12 @@ Gate, in order of preference:
    ``postgresql://postgres:pw@localhost:5432/postgres``) — a server
    you provide.
 2. Otherwise, AUTO-PROVISION: when ``initdb``/``pg_ctl`` binaries
-   exist, a throwaway trust-auth cluster is initialized under /tmp
-   once per machine and started on port 54329 (as the ``postgres``
-   OS user when running as root — Postgres refuses root — else as
-   the current user), mirroring the reference's per-test-database
-   fixture one level up.
+   exist, each test process initializes its own throwaway trust-auth
+   cluster under ``/tmp/cardano_spark_pg_<pid>`` on a free port (as
+   the ``postgres`` OS user when running as root — Postgres refuses
+   root — else as the current user), mirroring the reference's
+   per-test-database fixture one level up. Two suites at once never
+   share a server.
 
 Driver, in order of preference: ``psycopg`` (v3), ``psycopg2``, else
 the repo's pure-stdlib wire client
@@ -31,18 +32,19 @@ Everything here skips cleanly when no server can be reached.
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
 import shutil
+import socket
 import subprocess
+import sys
 import uuid
 
 import pytest
 
-_AUTO_PORT = 54329
-_AUTO_DATA = "/tmp/cardano_spark_pg_data"
-
-
-_OWNER_MARKER = os.path.join(_AUTO_DATA, ".starter_pid")
+_AUTO_PREFIX = "/tmp/cardano_spark_pg_"
+_AS_ROOT = hasattr(os, "geteuid") and os.geteuid() == 0
 
 
 def _pid_alive(pid: int) -> bool:
@@ -58,82 +60,62 @@ def _pid_alive(pid: int) -> bool:
         return True
 
 
-def _autoprovision() -> str | None:
-    """Start (or reuse) a throwaway local trust-auth cluster; return
-    its admin DSN, or None when the environment cannot host one.
+def _pg(cmd: str) -> int:
+    """Run a Postgres admin command, as the ``postgres`` OS user when
+    root."""
+    full = ["su", "postgres", "-c", cmd] if _AS_ROOT else ["sh", "-c", cmd]
+    return subprocess.run(
+        full, cwd="/tmp", stdout=subprocess.DEVNULL,
+        stderr=subprocess.DEVNULL, timeout=120,
+    ).returncode
 
-    Lifecycle (r8 VERDICT finding #2, hardened per r9 finding #2): a
-    server THIS process starts records this pid in an OWNERSHIP
-    MARKER inside the data dir and is stopped at interpreter exit
-    via atexit. atexit cannot run under SIGKILL, so a running server
-    whose recorded starter is DEAD is a stale leftover of an
-    abnormal exit — the next autoprovision stops it and starts (and
-    owns) a fresh one, making "no postgres survives the run that
-    started it" hold within one startup even when the starting run
-    was killed. A running server with NO marker, or whose starter is
-    still alive, is someone else's — reused and left up."""
+
+def _remove_cluster(data: str) -> None:
+    _pg(f"pg_ctl -D {data} -m fast stop")
+    shutil.rmtree(data, ignore_errors=True)
+
+
+def _reap_stale() -> None:
+    """Stop and remove every auto-provisioned cluster whose test
+    process is dead: atexit does not run under SIGKILL, so a killed
+    run leaves its server behind until the next run reaps it."""
+    for data in glob.glob(f"{_AUTO_PREFIX}*"):
+        pid = data[len(_AUTO_PREFIX):]
+        if pid.isdigit() and not _pid_alive(int(pid)):
+            _remove_cluster(data)
+
+
+def _start_cluster(data: str) -> str | None:
+    """Initialize and start a trust-auth cluster in ``data`` on a port
+    found free by binding port 0; its admin DSN, or None when it
+    cannot start."""
+    os.makedirs(data)
+    if _AS_ROOT:
+        shutil.chown(data, "postgres", "postgres")
+    if _pg(f"initdb -D {data} -A trust") != 0:
+        return None
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+    if _pg(f"pg_ctl -D {data} -l {data}/log -o '-p {port} -k {data} -h 127.0.0.1' start"):
+        return None
+    user = "postgres" if _AS_ROOT else (os.environ.get("USER") or "postgres")
+    return f"postgresql://{user}@127.0.0.1:{port}/postgres"
+
+
+def _autoprovision() -> str | None:
+    """Start this process's own throwaway cluster, stopped and removed
+    at interpreter exit; its admin DSN, or None when the environment
+    cannot host one. Reaps the clusters of dead test processes
+    first."""
     if shutil.which("initdb") is None or shutil.which("pg_ctl") is None:
         return None
-    as_root = hasattr(os, "geteuid") and os.geteuid() == 0
-
-    def run(cmd: str) -> int:
-        if as_root:
-            full = ["su", "postgres", "-c", cmd]
-        else:
-            full = ["sh", "-c", cmd]
-        return subprocess.run(
-            full, cwd="/tmp", stdout=subprocess.DEVNULL,
-            stderr=subprocess.DEVNULL, timeout=120,
-        ).returncode
-
-    def _read_owner() -> int | None:
-        try:
-            with open(_OWNER_MARKER) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return None
-
-    user = "postgres" if as_root else (os.environ.get("USER") or "postgres")
-    dsn = f"postgresql://{user}@127.0.0.1:{_AUTO_PORT}/postgres"
-    if run(f"pg_ctl -D {_AUTO_DATA} status") == 0:
-        owner = _read_owner()
-        if owner is None or _pid_alive(owner):
-            return dsn  # externally started or owner alive — reuse
-        # stale: the starter died without its atexit (SIGKILL/tmux
-        # kill) — reap and fall through to a fresh, owned start
-        run(f"pg_ctl -D {_AUTO_DATA} -m fast stop")
-        try:
-            os.unlink(_OWNER_MARKER)
-        except OSError:
-            pass
-    if not os.path.isdir(_AUTO_DATA):
-        os.makedirs(_AUTO_DATA, exist_ok=True)
-        if as_root:
-            shutil.chown(_AUTO_DATA, "postgres", "postgres")
-        if run(f"initdb -D {_AUTO_DATA} -A trust") != 0:
-            return None
-    ok = run(
-        f"pg_ctl -D {_AUTO_DATA} -l {_AUTO_DATA}/log "
-        f"-o '-p {_AUTO_PORT} -k {_AUTO_DATA} -h 127.0.0.1' start"
-    )
-    if ok != 0:
-        return None
-    with open(_OWNER_MARKER, "w") as f:
-        f.write(str(os.getpid()))
-    import atexit
-
-    def _stop_owned() -> None:
-        # only stop if WE still own it (a later reap/restart by
-        # another process rewrites the marker)
-        if _read_owner() == os.getpid():
-            run(f"pg_ctl -D {_AUTO_DATA} -m fast stop")
-            try:
-                os.unlink(_OWNER_MARKER)
-            except OSError:
-                pass
-
-    atexit.register(_stop_owned)
-    return dsn
+    _reap_stale()
+    data = f"{_AUTO_PREFIX}{os.getpid()}"
+    if os.path.exists(data):  # left by a dead process with our pid
+        _remove_cluster(data)
+    atexit.register(_remove_cluster, data)
+    return _start_cluster(data)
 
 
 ADMIN_DSN = os.environ.get("CARDANO_SPARK_PG_URL") or _autoprovision()
@@ -304,28 +286,32 @@ def test_schema_evolution_on_live_pg(pg_database):
 
 def test_stale_owner_server_is_reaped_on_next_autoprovision():
     """r9 VERDICT finding #2: atexit does not run under SIGKILL, so a
-    killed run used to leave its postgres resident forever. The
-    ownership marker closes that hole: rewrite the marker to a pid
-    that is certainly dead, re-run _autoprovision, and the stale
-    server must be stopped and replaced by a fresh one OWNED by this
-    process (marker = our pid). Only meaningful for the
-    auto-provisioned cluster — skip under an external DSN."""
+    killed run used to leave its postgres resident forever. A process
+    that auto-provisioned its own cluster is killed; the reaping every
+    autoprovision starts with stops and removes that cluster. Only
+    meaningful for auto-provisioned clusters — skip under an external
+    DSN."""
     if os.environ.get("CARDANO_SPARK_PG_URL"):
         pytest.skip("external server: lifecycle is not ours")
-    if not os.path.exists(_OWNER_MARKER):
-        pytest.skip("auto-provisioned server not owned by this run")
-    with open(_OWNER_MARKER) as f:
-        owner_before = int(f.read().strip())
-    assert owner_before == os.getpid()
-    # forge an abnormal exit: the recorded starter is dead
-    # (pid 2^22+1 is above this sandbox's pid_max — never alive)
-    dead = 4_194_305
-    assert not _pid_alive(dead)
-    with open(_OWNER_MARKER, "w") as f:
-        f.write(str(dead))
-    dsn = _autoprovision()
-    assert dsn is not None
-    # reaped and restarted: a fresh server is up, owned by US again
-    with open(_OWNER_MARKER) as f:
-        assert int(f.read().strip()) == os.getpid()
-    _PG.connect(dsn).close()
+    child = subprocess.Popen(
+        [
+            sys.executable, "-c",
+            "import tests.test_pg_live_conformance as t; "
+            "print(t.ADMIN_DSN, flush=True); input()",
+        ],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        dsn = child.stdout.readline().strip()
+        _PG.connect(dsn).close()
+    finally:
+        child.kill()
+        child.wait()
+    # a run reaping at the same time may get there first; either way
+    # the killed process's cluster is gone
+    _reap_stale()
+    assert not os.path.exists(f"{_AUTO_PREFIX}{child.pid}")
+    with pytest.raises(OSError):
+        _PG.connect(dsn).close()
+    _PG.connect(ADMIN_DSN).close()

@@ -148,6 +148,29 @@ def test_e2_skips_a_directory_until_e1_records_it(lake, monkeypatch):
     assert cardano.raw_blocks_to_table(lake) is None
 
 
+def test_e2_records_its_loaded_keys_in_one_ledger_version(lake, monkeypatch):
+    """E2 catching up three batches commits one ledger version (one
+    ``put_if_absent`` on its ledger), not one per key, and loads every
+    landed row."""
+    landed = _record_batches(lake, 3, 2)
+    store = lake.s3_db_wm._store
+    puts: list[str] = []
+    real_put = store.put_if_absent
+
+    def counted_put(name, body):
+        puts.append(name)
+        return real_put(name, body)
+
+    monkeypatch.setattr(store, "put_if_absent", counted_put)
+    keys = cardano.raw_blocks_to_table(lake)
+    assert len(keys) == 3 and len(puts) == 1, puts
+    assert store.base_uri.endswith("s3_to_db_loaded_batches")
+    assert lake.s3_db_wm.read_values("cardano_blocks") == set(keys)
+    assert lake.last_load_counts == {"cardano_blocks": landed}
+    heights = {r.height for r in lake.sink("cardano_blocks").read().select("height").collect()}
+    assert heights == set(range(DEFAULT_START_BLOCK, DEFAULT_START_BLOCK + landed))
+
+
 def test_e2_loads_a_backfilled_lower_key(lake):
     """An explicit-window ``full_tx_pipeline`` over earlier blocks
     records a key below the loaded ones; E2 compares key sets, not a
@@ -213,32 +236,27 @@ def test_e2_upgrades_a_lake_with_an_mtime_ledger(lake, count_jobs):
 def test_e2_crash_before_the_ledger_upserts_replays_to_the_same_tables(
     spark, tmp_path, monkeypatch
 ):
-    """A crash after the merges, with one of two loaded keys recorded,
-    replays the rest through the idempotent merge: the tables equal an
-    uninterrupted run's, and the ledger holds both keys."""
+    """A crash after the merges, before the one ledger upsert that
+    records both loaded keys, replays both through the idempotent
+    merge: the tables equal an uninterrupted run's, and the ledger
+    holds both keys."""
     clean, torn = (cardano.CardanoLake(spark, str(tmp_path / n)) for n in ("clean", "torn"))
     for lk in (clean, torn):
         for _ in range(2):
             cardano.blocks_to_raw(lk, fake_blockfrost.transport, batch=BATCH, fetch_partitions=2)
     keys = cardano.raw_blocks_to_table(clean)
 
-    real_upsert = torn.s3_db_wm.upsert
-    recorded: list[int] = []
+    def crash(table, *values):
+        raise RuntimeError("simulated crash at the ledger upsert")
 
-    def crash_after_first(table, value):
-        if recorded:
-            raise RuntimeError("simulated crash between ledger upserts")
-        recorded.append(value)
-        real_upsert(table, value)
-
-    monkeypatch.setattr(torn.s3_db_wm, "upsert", crash_after_first)
+    monkeypatch.setattr(torn.s3_db_wm, "upsert", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         cardano.raw_blocks_to_table(torn)
-    monkeypatch.setattr(torn.s3_db_wm, "upsert", real_upsert)
-    assert torn.s3_db_wm.read_values("cardano_blocks") == {keys[0]}
+    monkeypatch.undo()
+    assert torn.s3_db_wm.read_values("cardano_blocks") == set()
 
-    assert cardano.raw_blocks_to_table(torn) == keys[1:]
-    assert torn.last_load_counts == {"cardano_blocks": BATCH}
+    assert cardano.raw_blocks_to_table(torn) == keys
+    assert torn.last_load_counts == {"cardano_blocks": 2 * BATCH}
     assert _table_rows(torn, "cardano_blocks") == _table_rows(clean, "cardano_blocks")
     assert torn.s3_db_wm.read_values("cardano_blocks") == set(keys)
     assert cardano.raw_blocks_to_table(torn) is None

@@ -314,7 +314,6 @@ def test_delta_export_noop_and_missing_baseline(spark, tmp_path):
         write_training_shards_delta,
         write_training_shards_incremental,
     )
-    import pytest
 
     dest = str(tmp_path / "d")
     df = spark.createDataFrame(
@@ -322,11 +321,19 @@ def test_delta_export_noop_and_missing_baseline(spark, tmp_path):
     )
     empty = df.limit(0)
 
-    # no baseline export yet -> explicit error, not a silent full write
-    with pytest.raises(ValueError, match="full exporter"):
-        write_training_shards_delta(empty, dest, "doc_id", 4)
+    def entries(path):
+        m = read_manifest(path)
+        return m.n_rows, [(e["shard_id"], e["rows"], e["digest"]) for e in m.shards]
 
+    # no export yet: the delta starts one, publishing the manifest the
+    # full exporter writes over the same rows; with no rows, a
+    # zero-row manifest
+    first = write_training_shards_delta(df, str(tmp_path / "first"), "doc_id", 4)
     write_training_shards_incremental(df, dest, "doc_id", 4)
+    assert first.n_rewritten == 4 and entries(str(tmp_path / "first")) == entries(dest)
+    none = write_training_shards_delta(empty, str(tmp_path / "none"), "doc_id", 4)
+    assert none.n_rewritten == 0 and none.manifest.n_rows == 0
+    assert entries(str(tmp_path / "none")) == (0, [])
     state = _dir_state(dest)
 
     # empty delta: nothing rewritten, manifest intact
@@ -403,10 +410,11 @@ def test_delta_export_crash_at_every_object_store_call_converges(
 ):
     """A delta with inserts, one deleted key and one emptied shard
     crashes at its k-th ObjectStore mutation, for every k, and once
-    right after its shard write. Replaying the same delta then leaves
-    the manifest digests and the read-back rows of an uninterrupted
-    export: the fold check never sees shards the manifest does not
-    describe."""
+    right after its shard write; so does the same delta as the first
+    export, into a path with no manifest. Replaying the same delta
+    then leaves the manifest digests and the read-back rows of an
+    uninterrupted export: the fold check never sees shards the
+    manifest does not describe."""
     import shutil
 
     import pytest
@@ -420,6 +428,8 @@ def test_delta_export_crash_at_every_object_store_call_converges(
 
     schema = "doc_id long, text string"
     base = str(tmp_path / "base")
+    no_export = str(tmp_path / "no_export")
+    os.makedirs(no_export)
     write_training_shards_incremental(
         spark.createDataFrame([(i, f"t {i}") for i in range(40)], schema),
         base,
@@ -463,25 +473,27 @@ def test_delta_export_crash_at_every_object_store_call_converges(
 
     monkeypatch.setattr(DataFrameWriter, "parquet", write_then_crash)
 
-    def run(path, k, after_write=False):
-        shutil.copytree(base, path)
+    def run(start, path, k, after_write=False):
+        shutil.copytree(start, path)
         calls[0], crash_at[0], crash_write[0] = 0, k, after_write
         try:
             delta(path)
         finally:
             crash_at[0], crash_write[0] = 0, False
 
-    clean = str(tmp_path / "clean")
-    run(clean, 0)
-    n_calls, want = calls[0], outcome(clean)
-    assert n_calls >= 3 and want[0] != outcome(base)[0]
-    cases = [(k, False) for k in range(1, n_calls + 1)] + [(0, True)]
-    for k, after_write in cases:
-        path = str(tmp_path / f"crash{k}")
-        with pytest.raises(RuntimeError, match="injected"):
-            run(path, k, after_write)
-        delta(path)
-        assert outcome(path) == want, (k, after_write)
+    for start in (base, no_export):
+        name = os.path.basename(start)
+        clean = str(tmp_path / f"{name}_clean")
+        run(start, clean, 0)
+        n_calls, want = calls[0], outcome(clean)
+        assert n_calls >= 3 and want[1] and want[0] != outcome(base)[0]
+        cases = [(k, False) for k in range(1, n_calls + 1)] + [(0, True)]
+        for k, after_write in cases:
+            path = str(tmp_path / f"{name}_crash{k}_{after_write}")
+            with pytest.raises(RuntimeError, match="injected"):
+                run(start, path, k, after_write)
+            delta(path)
+            assert outcome(path) == want, (name, k, after_write)
 
 
 def test_delta_export_read_is_partition_pruned(spark, tmp_path):
